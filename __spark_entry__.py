@@ -37,11 +37,12 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 
-    Iteration order is the driver-facing view: entries without a recorded
-    CORRECTNESS green row (plus any green entry whose implementation was
-    touched this round) come first, so they land inside the driver's
-    ~50-entry check window. catalog.queries() itself keeps stable
-    registration order for all other consumers."""
+    Iteration order is the driver-facing view derived from the
+    CORRECTNESS_r{N}.json records: entries whose latest record is red, then
+    entries with no record, then green entries stalest certification first,
+    so the driver's ~50-entry check window re-verifies the weakest claims.
+    catalog.queries() itself keeps registration order for all other
+    consumers."""
     from ade_agente_documental_empresarial___miner_a_spark.plans import catalog
 
     return catalog.driver_ordered(catalog.queries())

@@ -34,10 +34,9 @@ def normalized_text(col):
 
 # Inputs at or below this estimated size take the latency-optimized
 # execution mode in lsh_candidate_pairs (eagerly materialized bucket
-# table); larger inputs keep the fully pipelined plan. Override with
-# spark.conf "spark.ade.dedup.smallInputBytes". See the comment at the
-# decision site for the measured trade.
-_SMALL_INPUT_BYTES_DEFAULT = 4 * 1024 * 1024
+# table); larger inputs keep the fully pipelined plan. See the comment at
+# the decision site for the measured trade.
+_SMALL_INPUT_BYTES = 4 * 1024 * 1024
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
@@ -146,6 +145,7 @@ def lsh_candidate_pairs(
     plan; None picks by input size (see the decision-site comment) —
     used by ``lsh_verified_pairs``, whose downstream verify phase is what
     recoups the materialization latency on tiny inputs.
+    ``materialize_buckets=None`` may run one eager Spark job when called.
     """
     rows_per_band = num_perm // bands
     sigs = minhash_signatures(docs, text_col, id_col, num_perm, shingle_n)
@@ -177,19 +177,13 @@ def lsh_candidate_pairs(
     # full materialization wave — measured at the 50k-doc leg 7.1 s
     # pipelined vs 8.9 s checkpointed, while the 5k-doc verified leg is
     # ~1.9 s pipelined vs ~1.7 s checkpointed (interleaved A/B). The mode
-    # picks by the *input's* estimated bytes (no job; threshold
-    # conf-overridable), so production volumes always pipeline; the
-    # candidates-only entry point defaults to pipelined at every size
+    # picks by the *input's* estimated bytes (no job), so production
+    # volumes always pipeline; the candidates-only entry point defaults
+    # to pipelined at every size
     # (without the verify phase the extra job is never recouped). Values
     # are identical either way — the checkpoint only cuts lineage.
     if materialize_buckets is None:
-        small_bytes = int(
-            docs.sparkSession.conf.get(
-                "spark.ade.dedup.smallInputBytes",
-                str(_SMALL_INPUT_BYTES_DEFAULT),
-            )
-        )
-        materialize_buckets = _plan_size_bytes(docs) <= small_bytes
+        materialize_buckets = _plan_size_bytes(docs) <= _SMALL_INPUT_BYTES
     if materialize_buckets:
         buckets = buckets.localCheckpoint(eager=True)
     a = buckets.alias("a")

@@ -29,77 +29,11 @@ def register(name: str, oracle: str | None = None):
 
 
 # The driver's correctness harness checks only the first ~50 entries of the
-# __spark_entry__ queries() dict, in iteration order. The driver-facing view
-# (driver_ordered(), used only by __spark_entry__.py) rotates settled-green
-# names to the BACK so not-yet-checked registrations land inside the window.
-# The catalog's own queries()/oracle_sql() stay in stable registration order
-# for every other consumer (tests, bench, tools/parity).
-#
-# The green set is DERIVED from the CORRECTNESS_r{N}.json files the driver
-# itself writes at the repo root (_recorded_verdicts below; the latest record
-# for a name wins, so a regression that goes red re-enters the window
-# automatically). _STATIC_GREEN is the r01-r04 baseline kept as a fallback
-# for deployments where the package is imported away from the repo root.
-_STATIC_GREEN = frozenset(
-    {
-        # green in CORRECTNESS_r01/r02
-        "f1_title_filter", "t1_paragraph_split", "t2_section_assign",
-        "j2_section_semi_join", "a1_distinct_sections", "a2_group_by_section",
-        "a3_chunk_count", "k1_topk_search", "k2_topk_titles",
-        "k3_topk_per_section", "k4_a4_topk_normalized", "k5_head_limit",
-        "k6_enumerate_rank", "a6_result_union", "e2_hierarchical_search",
-        "t6_context_concat", "t7_prompt_assemble", "a5_token_cost_agg",
-        "d2_legacy_corpus_concat", "f3_nonempty_guards", "f5_truncate_preview",
-        "j1_zip_join", "t4_doc_construct", "s28_scalar_fns",
-        "t3_chunk_pipeline", "t3b_chunk_long_docs", "t5_embed_histogram",
-        "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
-        "dedup_ngram_jaccard", "dedup_lsh_verified", "dedup_embedding_cosine",
-        "dedup_clusters", "dedup_embedding_lsh", "sim_knn_bruteforce",
-        "sim_lsh_bucketed", "text_token_count", "text_quality_score",
-        "text_lang_id", "text_fingerprint", "mm_binary_meta",
-        "rel_q1_pricing", "rel_q3_shipping", "rel_q5_region_revenue",
-        "rel_window_running", "rel_rollup_orders", "rel_cube_events",
-        "rel_set_ops", "rel_join_family",
-        # green in CORRECTNESS_r03 (50/50 pass)
-        "rel_asof_join", "rel_range_join", "stream_multi_rollup",
-        "rel_window_family", "rel_percentiles", "text_edit_distance",
-        "stream_funnel", "stream_tumbling_1h", "stream_session_windows",
-        "stream_watermark_drop", "stream_incremental_index", "sim_ivf_topk",
-        "mm_frame_plan", "rel_q10_returned", "rel_q14_promo_share",
-        "skew_salted_agg", "mm_resize_plan", "s6_transcript_reconstruct",
-        "stream_interval_join", "sim_quantized_topk", "sim_ivf_quantized",
-        "s1_binary_scan_mime", "s2_html_extract", "s3_extract_degrade",
-        "s5_xlsx_degrade", "s7_conf_roundtrip", "s4_csv_serialize",
-        "s4b_csv_relational", "e1_ingest_chunks", "cur_pii_scrub",
-        "cur_repetition_signals", "cur_hash_split", "cur_decontaminate",
-        "cur_pack_sequences", "cur_dataset_card", "rel_q4_priority",
-        "rel_q12_priority_class", "rel_q18_large_orders",
-        "rel_q19_disjunctive", "rel_q22_inactive", "rel_sessionize",
-        "rel_approx_distinct", "dedup_paragraph", "text_term_stats",
-        "cur_quality_gate", "mm_audio_chunks", "stream_dedup",
-        "rel_q6_revenue_delta", "stream_sliding_2h1h",
-        # green in CORRECTNESS_r04 (48/50 pass; the 2 reds were
-        # emb_label_centroids / rel_grouping_sets, reshaped in round 5 and
-        # re-queued at the front of the window via _PRIORITY)
-        "rel_q13_custdist", "rel_q21_waiting", "rel_q2_min_price",
-        "rel_q7_volume", "rel_q8_market_share", "rel_q9_profit",
-        "sim_ivf_persisted", "chat_session_costs", "rel_q15_top_supplier",
-        "rel_q17_small_qty", "rel_q20_excess_shippers",
-        "rel_q11_important_parts", "rel_q16_supplier_cnt",
-        "cur_source_quota", "cur_stratified_sample", "cur_length_batches",
-        "rel_partition_pruned_scan", "text_bm25_topk",
-        "emb_centroid_classify", "rel_pivot_events", "rel_unpivot_events",
-        "sim_pq_adc_topk", "sim_rrf_fusion", "stream_cdc_latest",
-        "stream_topk_trending", "cur_domain_mix", "text_tfidf_terms",
-        "skew_salted_join_rev", "mm_phash_band_pairs", "rel_scd2_history",
-        "emb_outlier_scores", "dedup_substring", "dedup_incremental",
-        "text_normalize", "rel_cohort_retention", "rel_json_props",
-        "stream_static_enrich", "graph_pagerank", "text_trigram_lm",
-        "cur_corpus_funnel", "s9_orc_roundtrip", "s10_jsonl_roundtrip",
-        "rel_weighted_median", "rel_zorder_keys", "cur_curriculum_phases",
-        "rel_heavy_hitters_cms", "rel_asof_cogrouped", "dedup_containment",
-    }
-)
+# __spark_entry__ queries() dict, in iteration order. driver_ordered() (used
+# only by __spark_entry__.py) derives that order from the CORRECTNESS_r{N}.json
+# records the driver writes at the repo root: latest-red names, then
+# unrecorded names, then green names stalest certification first. The
+# catalog's own queries()/oracle_sql() keep registration order.
 
 
 def _recorded_verdicts(
@@ -111,9 +45,8 @@ def _recorded_verdicts(
     entries — the strongest evidence those can get); False = the latest
     record is red (hash/schema/rows mismatch or a harness error), which
     must re-front the name in the window even if an older round had it
-    green. rounds[name] = the round number of that latest record — used
-    by the _RECHECK auto-expiry (a recheck pin is satisfied only by a
-    green record from a round >= the round the change landed in)."""
+    green. rounds[name] = the round number of that latest record, which
+    orders the green names stalest first in driver_ordered()."""
     import glob
     import json
     import re
@@ -155,398 +88,23 @@ def _recorded_verdicts(
     return latest, rounds
 
 
-_VERDICTS, _VERDICT_ROUNDS = _recorded_verdicts()
-_DRIVER_GREEN = frozenset(
-    (_STATIC_GREEN | {n for n, ok in _VERDICTS.items() if ok})
-    - {n for n, ok in _VERDICTS.items() if not ok}
-)
-
-# Green names whose IMPLEMENTATION was touched mid-round: re-included at the
-# front of the driver window so the external gate re-verifies them instead of
-# trusting a stale record (VERDICT r3 / ADVICE: a refactor behind a
-# green-listed name must not escape independent verification). Each name maps
-# to the FIRST CORRECTNESS round that can certify the change (the round whose
-# gate runs after the change landed); the pin AUTO-EXPIRES once a green
-# driver record from that round or later exists, so no manual reset is
-# needed when a new round starts (previously a flagged round-boundary step).
-_RECHECK_QUEUED: dict[str, int] = dict.fromkeys(
-    (
-        # r05: IVF codebook scoring re-grouped for scale (_cell_scores —
-        # shared per-row |v| + constant |c|; bit-exact re-grouping,
-        # verified vs the DuckDB oracles AND measured 1.6-2x at 100k
-        # vectors) — every green entry routed through ivf_assign /
-        # ivf_topk / ivf_quantized_topk / the persisted i8 index must
-        # re-green at the hard gate rather than trust the stale record.
-        "sim_ivf_topk",
-        "sim_ivf_quantized",
-        "sim_ivf_persisted",
-        # r05 continuation: literal-array builders re-plumbed through
-        # one-round-trip F.expr (ann.lit_doubles/lit_double_matrix/
-        # lit_longs — bit-identical values, pinned by the bitexact
-        # tests + an 11-entry parity run, but the driver must re-green
-        # every green entry whose plan now builds through them):
-        # hyperplane buckets (_dot_literal) and PQ codebook literals.
-        "sim_lsh_bucketed",
-        "dedup_embedding_lsh",
-        "sim_pq_adc_topk",
-        # r06: t3b gained an exact recursive-CTE oracle (was rows-only
-        # since r2; VERDICT r5 task 4) — must re-settle as value-green.
-        "t3b_chunk_long_docs",
-        # r06: global aggregates moved from empty-partition windows to
-        # broadcast-scalar crossJoins (VERDICT r5 task 6) — the two
-        # green entries whose plans changed re-enter the window.
-        "k4_a4_topk_normalized",
-        "rel_chi2_cells",
-        # r06: the S3 pdf branch gained the vendored pure-Python
-        # extractor fallback (degrade now decided by parse outcome, not
-        # the import probe alone) — the pinned degrade row must re-green.
-        "s3_extract_degrade",
-        # r06: S5 likewise gained the vendored stdlib OOXML reader — the
-        # entry RESHAPED from the import-probe degrade row to the real
-        # 3-sheet-row parse output; the driver must certify the flip.
-        "s5_xlsx_degrade",
-    ),
-    # every pin above is satisfied by the round-6 gate: the r05-tagged
-    # literal-builder names changed AFTER the r5 gate ran, so their r5
-    # green records are pre-change and only a r>=6 record certifies them
-    6,
-) | dict.fromkeys(
-    (
-        # r07 robustness wave (tools/parity_fuzz.py): cosine moved to
-        # try_divide (zero-norm → NULL, matching the DuckDB oracle) in
-        # cosine_similarity / cosine_to_literal / ann._cell_scores, and
-        # six entries gained their own degenerate-denominator guards
-        # (rel_higher_moments, rel_rolling_corr, cur_mix_entropy,
-        # text_readability_fk, cur_bpe_pair_stats slice clamp,
-        # s18_csv_interop reader/writer options, text_edit_distance
-        # ASCII projection). The set below is EMPIRICAL: exactly the
-        # oracle-paired entries the fuzz sweep caught exercising a
-        # changed code path (every entry ran against zero-norm /
-        # degenerate data, so an affected entry could not hide). All
-        # 283 entries re-verified value-green on fixtures post-change
-        # (docs/parity_r7_full2.json); the driver must still re-green
-        # each at the hard gate.
-        "a6_result_union", "cur_bitext_ratio_filter",
-        "cur_bpe_pair_stats", "cur_mix_entropy",
-        "dedup_embedding_cosine", "dedup_embedding_lsh",
-        "dedup_lsh_recall", "dedup_semantic", "e2_hierarchical_search",
-        "emb_centroid_classify", "emb_hard_negatives", "emb_isotropy",
-        "emb_matryoshka_eval", "emb_mips_vs_cosine",
-        "emb_outlier_scores", "emb_pca_power", "emb_training_triplets",
-        "k1_topk_search", "k2_topk_titles", "k3_topk_per_section",
-        "k4_a4_topk_normalized", "rel_higher_moments",
-        "rel_rolling_corr", "s18_csv_interop", "sim_ivf_filtered",
-        "sim_ivf_ndcg", "sim_ivf_persisted", "sim_ivf_quantized",
-        "sim_ivf_recall", "sim_ivf_topk", "sim_knn_bruteforce",
-        "sim_lsh_bucketed", "sim_mmr_rerank", "sim_rrf_fusion",
-        "stream_incremental_index", "text_edit_distance",
-        "text_readability_fk",
-        # const-profile catches (zero-range histogram width; tie-span
-        # rank contract for the approx-percentile sketch)
-        "rel_value_histogram", "rel_approx_percentile_contract",
-    ),
-    # the changes land before the round-7 gate runs, so a r>=7 green
-    # record certifies them
-    7,
-) | dict.fromkeys(
-    (
-        # r08: the Arrow-matmul assignment kernel became the DEFAULT
-        # IVF bulk-build lane (VERDICT r7 task 2) — lloyd_refine_
-        # codebook / ivf_topk / ivf_quantized_topk / save_ivf_i8_index
-        # default impl flipped hof→arrow, and the four direct
-        # ivf_assign call sites (recall/ndcg/filtered eval harnesses,
-        # SemDeDup cells) now call ivf_assign_arrow. Agreement is
-        # pinned bit-identical on fixtures + 100k vectors and the
-        # kernel gained the HOF-matching -inf mask for degenerate
-        # norms, but every green entry whose executed plan changed
-        # must re-green at the hard gate.
-        "sim_ivf_topk",
-        "sim_ivf_quantized",
-        "sim_ivf_persisted",
-        "sim_ivf_recall",
-        "sim_ivf_ndcg",
-        "sim_ivf_filtered",
-        "dedup_semantic",
-        # r08: multimodal decode de-stubbed to tier-2 stdlib header
-        # parsers (VERDICT r7 task 3) — these three entries now build
-        # genuinely-valid BMP/WAV/AVI payloads (synth_media_from_docs)
-        # and their dims/durations come from the header PARSE instead
-        # of the md5 fake. Values are constructed to be identical
-        # (verified green at sf0.01), but the executed plan changed.
-        "mm_resize_plan",
-        "mm_frame_plan",
-        "mm_audio_chunks",
-        # r08: substring_duplicate_spans rewritten to ONE md5-explode
-        # pass (carrier-row window replaces the self-join; 2.6× at
-        # sf0.1, values pinned identical vs the oracle + fixtures).
-        "dedup_substring",
-        # r08: text_trigram_lm got the same one-pass carrier rewrite
-        # (2× at sf0.1, values pinned identical incl. the decimal-
-        # precision-38 product guard); cur_perplexity_filter composes
-        # the same Spark function so its plan changed with it.
-        "text_trigram_lm",
-        "cur_perplexity_filter",
-        # …and cur_labeler_agreement composes cur_perplexity_filter, so
-        # its executed plan changed transitively (code-review r8
-        # finding — the composer sweep must be TRANSITIVE). This 14th
-        # pin pushes mm_header_decode (registered last, new this
-        # round) just past the 50-slot window to r9; the 36
-        # judge-listed never-checked names all stay inside.
-        "cur_labeler_agreement",
-    ),
-    # the flip lands before the round-8 gate runs
-    8,
-) | dict.fromkeys(
-    (
-        # r09: the four residual round(sum/count) half-boundary sites
-        # (VERDICT r8 task 1 + the code-review dup_frac finding)
-        # migrated to the shared integer-exact HALF_UP quotient
-        # (functions/exactmath.py). Values identical on fixtures and
-        # each has a constructed-boundary pin in
-        # tests/test_half_boundary.py, but the executed agg changed.
-        "text_sentence_stats",
-        "cur_curriculum_phases",
-        "cur_winsorize",
-        "dedup_substring",
-        # r09: the media construction/extraction path changed for every
-        # composer — synth_media_from_docs gained the NULL-text and
-        # unknown-fmt contracts, extract_media_features the NULL-content
-        # propagation, and resize_plan the LONG cast that survives lying
-        # 2^31-1 headers under ANSI (media-profile fuzz catch). Values
-        # identical on fixtures; executed plans changed.
-        "mm_resize_plan",
-        "mm_frame_plan",
-        "mm_audio_chunks",
-        # r09: date-typed output columns recast to TIMESTAMP on both
-        # engines (gate-mimic class retirement) — the r8 green records
-        # predate the schema change.
-        "rel_cohort_ltv",
-        "rel_cusum_changepoint",
-        "rel_growth_accounting",
-        # r09 batch 2: the systematic catalog audit found five MORE
-        # sites of the half-boundary idiom the r8 inventory missed
-        # (grep for round(CAST(sum / round over exact operands) — all
-        # migrated to halfup_mean / the generalized halfup_ratio:
-        "emb_dim_stats",
-        "text_ngram_novelty",
-        "rel_incremental_mv",
-        "rel_multitouch_attribution",
-        "cur_mix_entropy",
-        # r09 batch 3: the ratio-shaped siblings (round of an exact
-        # int/int or decimal ratio), completing the class catalog-wide —
-        # including pagerank's per-iteration recurrence (d=12) and the
-        # Bresenham/mixture sampling rates whose last digit feeds
-        # floor() selection:
-        "rel_event_transitions",
-        "text_set_similarity_battery",
-        "rel_try_arithmetic",
-        "graph_reciprocity",
-        "cur_bitext_ratio_filter",
-        "rel_hhi_concentration",
-        "sim_ivf_ndcg",
-        "cur_bresenham_sample",
-        "cur_mixture_weights",
-        "graph_pagerank",
-        # r09: NULL-text edge-fuzz catches (the generator now plants a
-        # NULL text): explicit NULLS FIRST window/ntile order, NULL-doc
-        # exclusion in the pair block, and per-rule NULL semantics in
-        # the expectations gate — all four were REAL cross-engine
-        # divergences on NULL-text data.
-        "cur_expectations",
-        "cur_psi_sources",
-        "rel_quantile_normalize",
-        # text_set_similarity_battery already queued above (halfup)
-    ),
-    # the migration lands before the round-9 gate runs
-    9,
-) | dict.fromkeys(
-    (
-        # r10: the payload-decode chain changed for every composer —
-        # extract_payload_stats now tries png_pixel_stats between the
-        # BMP and WAV decoders, bmp_pixel_stats gained the px_off>=54
-        # malformed-offset guard (ADVICE r9), and _real_features (under
-        # extract_media_features) now emits REAL descriptors for PNG
-        # payloads too. Values identical on fixtures; executed plans
-        # changed.
-        "mm_pixel_stats",
-        "mm_media_quality_gate",
-        "mm_header_decode",
-        # r10: the composite-double round() class killed catalog-wide —
-        # every round(double, d>0) site migrated to the scaled-round
-        # statement (exactmath.dblround / dblround_duck; constructed
-        # real-engine divergences pinned in tests/test_double_boundary
-        # .py). Values identical on fixtures; executed plans changed.
-        "rel_abtest_ztest",
-        "cur_labeler_agreement",
-        "text_readability_fk",
-        "text_bigram_backoff_lm",
-        "sim_ivf_ndcg",
-        "rel_price_volume_bridge",
-        "emb_dim_stats",
-        "text_drift_terms",
-        "rel_regression_moments",
-        "rel_window_family2",
-        "dedup_containment",
-        "cur_curriculum_phases",
-        "text_bm25_topk",
-        "cur_domain_mix",
-        "text_tfidf_terms",
-        # trigram score SQL + Spark fn changed -> transitive composers
-        "text_trigram_lm",
-        "cur_perplexity_filter",
-        "rel_hhi_concentration",
-        "cur_mix_entropy",
-        "s28_scalar_fns",
-        "cur_psi_sources",
-        "rel_cusum_changepoint",
-        "text_term_burstiness",
-        "text_zipf_slope",
-        "cur_winsorize",
-        "emb_hard_negatives",
-        "rel_quantile_normalize",
-        "rel_capped_running_sum",
-        "emb_training_triplets",
-        "rel_benford_audit",
-        "rel_rolling_corr",
-        "sim_mmr_rerank",
-        "rel_purchase_dispersion",
-        "emb_isotropy",
-        "rel_seasonality_index",
-        "emb_pca_power",
-        "text_pmi_pairs",
-        "stream_anomaly_hours",
-        "rel_ewma_hourly",
-        "rel_survival_km",
-        "rel_scd2_pit_join",
-        "rel_higher_moments",
-        "sim_ivf_recall",
-        "emb_matryoshka_eval",
-        # r10: oracle-side CTE materialization (sf0.1 disk-spill fix) —
-        # the DuckDB statement changed for the graph family
-        "graph_reciprocity",
-        "graph_triangles",
-        "graph_bfs_levels",
-        "graph_sssp_bellman",
-        # r10: window ORDER BY totalized with l_quantity — the sf0.1
-        # fixture duplicates the full (suppkey, shipdate, orderkey,
-        # linenumber) sort key, so these were order-dependent
-        "rel_window_running",
-        "rel_window_family",
-        "rel_window_family2",
-    ),
-    # the change lands before the round-10 gate runs
-    10,
-)
-
-
-def _active_rechecks(
-    queued: dict[str, int],
-    verdicts: dict[str, bool],
-    rounds: dict[str, int],
-) -> frozenset:
-    """Names still owed a post-change driver verdict: the pin stays
-    active until a GREEN record from a round >= the queue round exists.
-    A red later record keeps the pin (the name re-fronts anyway via the
-    tier-2 path, but staying here keeps it ahead of the backlog)."""
-    return frozenset(
-        n
-        for n, queue_round in queued.items()
-        if not (verdicts.get(n, False) and rounds.get(n, -1) >= queue_round)
-    )
-
-
-_RECHECK: frozenset[str] = _active_rechecks(
-    _RECHECK_QUEUED, _VERDICTS, _VERDICT_ROUNDS
-)
-
-# Names pulled to the VERY FRONT of the driver window, regardless of
-# tier — the r04 driver-red pair (reshaped outputs that must re-green at
-# the hard gate) followed by the ANN-quality evals the judge asked to
-# certify early (VERDICT r4 next-steps #1 and #5). All are tier-1 (never
-# driver-green) anyway; this pins their position so the ~50-entry window
-# cannot miss them behind other unchecked names. A pin auto-expires once
-# its latest driver record is green (unless explicitly re-queued via
-# _RECHECK), so a stale pin cannot waste window slots in later rounds.
-_PRIORITY = tuple(
-    n
-    for n in (
-        # r10: the only never-driver-checked entries (new this round) —
-        # first slots, because the 50+-deep recheck tier (the composite-
-        # double migration) would otherwise push them past the window
-        "mm_png_stats",
-        "mm_gif_stats",
-        "mm_adpcm_stats",
-        "mm_jpeg_stats",
-        # r09: the ONLY catalog entry with no driver record (registered
-        # last in r8, window position 50 trade — ROUND8.md §1; judge
-        # parity green). First slot so CORRECTNESS_r09 closes the full
-        # 285/285 catalog certification.
-        "mm_header_decode",
-        "emb_label_centroids",   # r04 RED: raw array output → exploded rows
-        "rel_grouping_sets",     # r04 RED: decimal hash → exact string surface
-        "sim_ivf_recall",
-        "sim_ivf_ndcg",
-        "sim_mmr_rerank",
-        "sim_ivf_filtered",
-        "stream_tws_type_counts",
-    )
-    if not _VERDICTS.get(n, False) or n in _RECHECK
-)
-
-
 def driver_ordered(mapping: dict) -> dict:
-    """Driver-facing iteration order, used ONLY by __spark_entry__.py —
-    everything else gets registration order from queries()/oracle_sql().
+    """Driver-facing iteration order, used only by __spark_entry__.py.
 
-    Three tiers: (1) _RECHECK names — green on record but implementation
-    touched this round; a stale green claim over changed code is the
-    worst silent-failure mode, so the external gate re-verifies these
-    FIRST (they must not queue behind a multi-round backlog of
-    never-checked names); (2) names with NO recorded green — new work
-    must land inside the driver's ~50-entry CORRECTNESS window at least
-    once (each is parity-green locally in the meantime); (3)
-    recorded-green last, ORDERED STALEST-CERTIFICATION-FIRST (r10 —
-    VERDICT r9 task 5): with zero never-checked entries left, the
-    window's spare slots should re-verify the entries whose only driver
-    record is oldest (many date from r02-r03 while the code under them
-    has been refactored since), so certifications rotate instead of the
-    same early-registered names recycling. Names only in the
-    _STATIC_GREEN fallback (no CORRECTNESS file round) sort first; ties
-    keep registration order (stable sort). When the catalog outgrows
-    the window, the cut lands in tier 2/3, and tier-2 names cut off
-    this round lead the next round's window. _PRIORITY names (if
-    present in the mapping) lead everything."""
-    prio = {k: mapping[k] for k in _PRIORITY if k in mapping}
-    recheck = {
-        k: v
-        for k, v in mapping.items()
-        if k in _DRIVER_GREEN and k in _RECHECK and k not in prio
-    }
-    # tier 2 leads with RECORDED-RED names (the driver saw these fail —
-    # they must re-enter the very next window, not wait at their
-    # registration position behind the never-checked backlog; this
-    # generalizes the manual _PRIORITY pins the r04 reds needed), then
-    # the never-checked names in registration order.
-    red = {
-        k: v
-        for k, v in mapping.items()
-        if _VERDICTS.get(k) is False and k not in _DRIVER_GREEN
-        and k not in prio
-    }
-    never = {
-        k: v
-        for k, v in mapping.items()
-        if k not in _DRIVER_GREEN and k not in prio and k not in red
-    }
-    back_names = [
-        k
-        for k in mapping
-        if k not in prio and k not in never and k not in recheck
-        and k not in red
-    ]
-    back_names.sort(key=lambda k: _VERDICT_ROUNDS.get(k, 0))
-    back = {k: mapping[k] for k in back_names}
-    return {**prio, **recheck, **red, **never, **back}
+    Names whose latest driver record is red come first, then names with no
+    record, then green names oldest certification round first, so every
+    entry rotates back into the ~50-entry window. Ties keep the mapping's
+    (registration) order. The records are read on each call."""
+    verdicts, rounds = _recorded_verdicts()
+
+    def key(name: str) -> tuple[int, int]:
+        if name not in verdicts:
+            return (1, 0)
+        if not verdicts[name]:
+            return (0, 0)
+        return (2, rounds[name])
+
+    return {k: mapping[k] for k in sorted(mapping, key=key)}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

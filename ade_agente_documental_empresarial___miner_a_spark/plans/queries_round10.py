@@ -27,17 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import register, table
-
-_HEXPOS = "'0123456789abcdef'"
-
-
-def _hexval(pos: int) -> str:
-    return f"(strpos({_HEXPOS}, substr(h, {pos}, 1)) - 1)"
-
-
-def _byte(k: int) -> str:
-    """md5-hex byte k (0-based) as an integer SQL expression."""
-    return f"({_hexval(2 * k + 1)} * 16 + {_hexval(2 * k + 2)})"
+from .queries_round8 import _byte
 
 
 # w = 4 + b0 % 13, h = 5 + b1 % 12 (>= 5 rows: every image carries all

@@ -126,8 +126,15 @@ def _footer_user_tail(path: str, user: str, n: int):
     subdirectory, missing/unexpected columns, absent or non-int64/
     non-timestamp statistics, or any NULL ts/turn_id (the Spark path's
     nulls-last ordering is then authoritative). Work is O(covering
-    files), independent of stored history depth.
+    files), independent of stored history depth. ``n == 0`` returns
+    ``[]`` without reading a file; ``n < 0`` returns ``_FOOTER_MISS`` so
+    the Spark path raises its own limit error.
     """
+    if n == 0:
+        return []
+    if n < 0:
+        return _FOOTER_MISS
+
     import os
 
     import pyarrow as pa

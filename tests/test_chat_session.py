@@ -11,6 +11,8 @@ counter/buffer resume across sessions.
 
 import datetime as dt
 
+import pytest
+
 from ade_agente_documental_empresarial___miner_a_spark.plans.chat import (
     ChatSession,
     answer_question,
@@ -270,6 +272,14 @@ def test_footer_user_tail_matches_spark(spark, tmp_path):
             fast = _footer_user_tail(path, user, n)
             assert fast is not _FOOTER_MISS
             assert fast == spark_tail(user, n), (user, n)
+
+    # n == 0: empty like limit(0), decided before any file is opened;
+    # n < 0: Spark rejects the limit, so the fast path must defer to it
+    assert _footer_user_tail(str(tmp_path / "absent"), "ana", 0) == []
+    assert spark_tail("ana", 0) == []
+    assert _footer_user_tail(path, "ana", -1) is _FOOTER_MISS
+    with pytest.raises(Exception, match="INVALID_LIMIT_LIKE_EXPRESSION"):
+        spark_tail("ana", -1)
 
     # file pruning actually fires: with n=1 the newest-bound file
     # suffices for ana's tail (m0 at t=20 is in the file with the

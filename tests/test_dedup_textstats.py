@@ -213,11 +213,12 @@ def test_prefix_jaccard_property_random_corpora(spark):
     check()
 
 
-def test_lsh_verified_materialized_mode_matches_pipelined(spark):
+def test_lsh_verified_materialized_mode_matches_pipelined(spark, monkeypatch):
     """r11 optimization pin: lsh_candidate_pairs' size-adaptive bucket
     materialization (latency mode for tiny inputs) must be a pure
     re-materialization — the pair set, band counts, and the downstream
     verified jaccard values are identical in both modes."""
+    from ade_agente_documental_empresarial___miner_a_spark.operators import dedup
     from ade_agente_documental_empresarial___miner_a_spark.operators.dedup import (
         lsh_verified_pairs,
     )
@@ -242,11 +243,9 @@ def test_lsh_verified_materialized_mode_matches_pipelined(spark):
     }
     assert pipelined_c == materialized_c and pipelined_c
 
-    spark.conf.set("spark.ade.dedup.smallInputBytes", "0")  # force pipeline
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_SMALL_INPUT_BYTES", 0)  # force pipeline
         pipelined_v = {tuple(r) for r in lsh_verified_pairs(df).collect()}
-    finally:
-        spark.conf.unset("spark.ade.dedup.smallInputBytes")
     # literal DataFrames are tiny: the default (auto) path materializes
     materialized_v = {tuple(r) for r in lsh_verified_pairs(df).collect()}
     assert pipelined_v == materialized_v and pipelined_v

@@ -71,92 +71,81 @@ def test_no_driver_hostile_output_types(spark):
 
 def test_driver_window_ordering():
     """The driver certifies only the first ~50 queries() entries per
-    round; pin the rotation invariants so a catalog edit cannot silently
-    push unchecked work out of the window: (1) _PRIORITY names lead,
-    (2) every never-driver-green name precedes every green name that is
-    not in _RECHECK, (3) the order is deterministic across loads."""
+    round; pin the derived rotation on the live records: latest-red names
+    lead, unrecorded names follow, green names come last, stalest
+    certification round first; the order is deterministic across loads
+    and oracle_sql() iterates in it on shared keys."""
     from ade_agente_documental_empresarial___miner_a_spark.plans.catalog import (
-        _DRIVER_GREEN,
-        _PRIORITY,
-        _RECHECK,
+        _recorded_verdicts,
     )
 
+    verdicts, rounds = _recorded_verdicts()
     mod = load_entry()
     order = list(mod.queries())
-    assert order[: len(_PRIORITY)] == [
-        n for n in _PRIORITY if n in set(order)
-    ]
-    pos = {n: i for i, n in enumerate(order)}
-    recheck = [
-        n for n in order
-        if n in _DRIVER_GREEN and n in _RECHECK and n not in _PRIORITY
-    ]
-    never = [
-        n for n in order
-        if n not in _DRIVER_GREEN and n not in _PRIORITY
-    ]
-    settled_green = [
-        n for n in order
-        if n in _DRIVER_GREEN and n not in _RECHECK and n not in _PRIORITY
-    ]
-    # touched-green names re-verify FIRST (a stale green claim over
-    # changed code must not queue behind the never-checked backlog)
-    if recheck and never:
-        assert max(pos[n] for n in recheck) < min(pos[n] for n in never)
-    if never and settled_green:
-        assert max(pos[n] for n in never) < min(
-            pos[n] for n in settled_green
-        )
+
+    def tier(n):
+        return 1 if n not in verdicts else (2 if verdicts[n] else 0)
+
+    assert [tier(n) for n in order] == sorted(tier(n) for n in order)
+    green_rounds = [rounds[n] for n in order if tier(n) == 2]
+    assert green_rounds == sorted(green_rounds)
     # deterministic across module loads
     assert list(load_entry().queries()) == order
     # oracle_sql iterates in the same driver-facing order on shared keys
+    pos = {n: i for i, n in enumerate(order)}
     osql_order = [n for n in mod.oracle_sql() if n in pos]
     assert osql_order == [n for n in order if n in set(osql_order)]
 
 
-def test_recorded_red_names_lead_tier_two(monkeypatch):
-    """A name whose LATEST driver record is red must lead tier 2 — it
-    re-enters the very next window instead of waiting at its
-    registration position behind the never-checked backlog (the r04
-    reds needed manual _PRIORITY pins for exactly this; the ordering
-    now generalizes it)."""
+def test_driver_ordered_synthetic_records(monkeypatch):
+    """Exact order over fixed records: red, then unrecorded, then green by
+    round; ties keep registration order and values ride along."""
     from ade_agente_documental_empresarial___miner_a_spark.plans import (
         catalog,
     )
 
     mapping = {f"q{i}": i for i in range(8)}
-    # q1/q2 green, q5 RED on record, q0/q3/q4/q6/q7 never checked;
-    # q5 registers LATE (position 5) yet must front tier 2
-    monkeypatch.setattr(catalog, "_VERDICTS", {
-        "q1": True, "q2": True, "q5": False,
-    })
+    verdicts = {"q1": True, "q2": True, "q3": True, "q5": False,
+                "q6": False, "q7": True}
+    rounds = {"q1": 5, "q2": 3, "q3": 3, "q5": 9, "q6": 2, "q7": 5}
     monkeypatch.setattr(
-        catalog, "_DRIVER_GREEN", frozenset({"q1", "q2"})
+        catalog, "_recorded_verdicts", lambda: (verdicts, rounds)
     )
-    monkeypatch.setattr(catalog, "_RECHECK", frozenset({"q2"}))
-    monkeypatch.setattr(catalog, "_PRIORITY", ("q7",))
-    got = list(catalog.driver_ordered(mapping))
-    assert got == [
-        "q7",                       # priority
-        "q2",                       # recheck (green + touched)
-        "q5",                       # RED record — fronts tier 2
-        "q0", "q3", "q4", "q6",    # never-checked, registration order
-        "q1",                       # settled green last
+    got = catalog.driver_ordered(mapping)
+    assert list(got) == [
+        "q5", "q6",    # latest record red, registration order
+        "q0", "q4",    # no record
+        "q2", "q3",    # green r3
+        "q1", "q7",    # green r5
     ]
-    # values ride along untouched
-    assert catalog.driver_ordered(mapping)["q5"] == 5
+    assert got == mapping
+
+
+def test_catalog_import_reads_no_records():
+    """The records are read when an order is asked for, not at import."""
+    import subprocess
+    import sys
+
+    code = (
+        "import glob\n"
+        "def guard(pattern, *a, **k):\n"
+        "    assert 'CORRECTNESS' not in pattern, pattern\n"
+        "    return real(pattern, *a, **k)\n"
+        "real = glob.glob\n"
+        "glob.glob = guard\n"
+        "import ade_agente_documental_empresarial___miner_a_spark"
+        ".plans.catalog\n"
+    )
+    subprocess.run([sys.executable, "-c", code], cwd=ROOT, check=True)
 
 
 def test_recorded_verdicts_derivation(tmp_path):
-    """The driver-green set is derived from the CORRECTNESS_r{N}.json
-    files the driver writes; latest round wins so regressions re-enter
-    the window automatically and re-greens settle without manual edits."""
+    """The verdicts are derived from the CORRECTNESS_r{N}.json files the
+    driver writes; latest round wins so regressions re-enter the window
+    automatically and re-greens settle without manual edits."""
     import json
 
     from ade_agente_documental_empresarial___miner_a_spark.plans.catalog import (
-        _DRIVER_GREEN,
-        _STATIC_GREEN,
-        _VERDICTS,
         _recorded_verdicts,
     )
 
@@ -181,59 +170,3 @@ def test_recorded_verdicts_derivation(tmp_path):
     # rounds track the LATEST record per name (the r06 file is unparseable
     # so r05 is the newest valid record for b and c)
     assert rounds == {"a": 4, "b": 5, "c": 5, "d": 4}
-
-    # the module-level wiring: greens union the static baseline, latest
-    # reds are excluded even if an older round (or the baseline) had them
-    live, _ = _recorded_verdicts()
-    expect = frozenset(
-        (_STATIC_GREEN | {n for n, g in live.items() if g})
-        - {n for n, g in live.items() if not g}
-    )
-    assert _DRIVER_GREEN == expect
-    assert _VERDICTS == live
-    # the r04 reds must be rotation-eligible (front of the window)
-    for name in ("emb_label_centroids", "rel_grouping_sets"):
-        if name in live:
-            assert live[name] is False or name in _DRIVER_GREEN
-
-
-def test_recheck_auto_expiry():
-    """A _RECHECK pin queued for round Q stays active until a GREEN
-    driver record from round >= Q exists: pre-change greens (older
-    rounds) don't satisfy it, later reds don't satisfy it, and a
-    post-change green retires it without a manual reset."""
-    from ade_agente_documental_empresarial___miner_a_spark.plans.catalog import (
-        _RECHECK,
-        _RECHECK_QUEUED,
-        _VERDICT_ROUNDS,
-        _VERDICTS,
-        _active_rechecks,
-    )
-
-    queued = {"x": 6, "y": 6, "z": 6, "w": 6}
-    verdicts = {"x": True, "y": True, "z": False}
-    rounds = {"x": 5, "y": 6, "z": 7}
-    active = _active_rechecks(queued, verdicts, rounds)
-    assert "x" in active  # green but PRE-change (r5 < queue r6)
-    assert "y" not in active  # post-change green -> retired
-    assert "z" in active  # post-change but red -> still owed a green
-    assert "w" in active  # never recorded
-
-    # module wiring: the live _RECHECK is exactly the derivation over
-    # the live verdict/round maps
-    assert _RECHECK == _active_rechecks(
-        _RECHECK_QUEUED, _VERDICTS, _VERDICT_ROUNDS
-    )
-    # as of the r5 records currently in-repo, nothing can have a r>=6
-    # green yet, so every queued name is still active; once the driver
-    # writes CORRECTNESS_r06 greens, these retire with no code change
-    import glob
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest = max(
-        int(p.rsplit("_r", 1)[1].split(".")[0])
-        for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-    )
-    if latest < 6:
-        assert _RECHECK == frozenset(_RECHECK_QUEUED)

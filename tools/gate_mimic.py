@@ -180,13 +180,15 @@ def main():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
-    from ade_agente_documental_empresarial___miner_a_spark.plans.catalog import _VERDICTS
+    from ade_agente_documental_empresarial___miner_a_spark.plans.catalog import (
+        _recorded_verdicts,
+    )
     from ade_agente_documental_empresarial___miner_a_spark.session import get_spark
 
     spark = get_spark("gate_mimic", shuffle_partitions=16)
     con = duck_conn(sf_dir)
     qs, oracles = mod.queries(), mod.oracle_sql()
-    greened = {n for n, g in _VERDICTS.items() if g}
+    greened = {n for n, g in _recorded_verdicts()[0].items() if g}
 
     results: dict[str, dict] = {}
     for name, fn in qs.items():

@@ -308,7 +308,6 @@ def _verify_jaccard(
     shingle_arrays: DataFrame,
     id_col: str,
     threshold: float,
-    broadcast_candidates: bool = True,
 ) -> DataFrame:
     """Exact Jaccard over candidate pairs only: O(candidates × shingles),
     independent of any shingle's corpus frequency.
@@ -336,14 +335,13 @@ def _verify_jaccard(
     replicas have near-equal sizes — but it is free here and prunes
     hard on heterogeneous corpora.)
 
-    ``broadcast_candidates`` pins the candidate-side broadcast for the
-    pair ⋈ arrays joins. Left to AQE, the r10 explode-form join was
-    bimodal under concurrent memory pressure (the post-LSH pair list's
-    size estimate sometimes tipped AQE into re-shuffling the whole
-    shingle table — observed 10–26 s swings on the 50k-doc leg). The
-    candidate list is output-sensitive (near-dup pairs + band FPs),
-    orders of magnitude below the corpus; set False only if candidates
-    outgrow the broadcast budget — semantics identical."""
+    The candidate side of the pair ⋈ arrays joins is always broadcast.
+    Left to AQE, the r10 explode-form join was bimodal under concurrent
+    memory pressure (the post-LSH pair list's size estimate sometimes
+    tipped AQE into re-shuffling the whole shingle table — observed
+    10–26 s swings on the 50k-doc leg). The candidate list is
+    output-sensitive (near-dup pairs + band FPs), orders of magnitude
+    below the corpus."""
     aa = shingle_arrays.select(
         F.col(id_col).alias("doc_a"),
         F.col("sh_arr").alias("arr_a"),
@@ -357,9 +355,8 @@ def _verify_jaccard(
     ub = F.least(F.col("n_a"), F.col("n_b")).cast("double") / F.greatest(
         F.col("n_a"), F.col("n_b")
     ).cast("double")
-    cand_side = F.broadcast(cands) if broadcast_candidates else cands
     return (
-        cand_side.join(aa, "doc_a")
+        F.broadcast(cands).join(aa, "doc_a")
         .join(bb, "doc_b")
         .where(ub >= threshold)
         .withColumn(
@@ -388,7 +385,6 @@ def lsh_verified_pairs(
     bands: int = 4,
     shingle_n: int = 2,
     threshold: float = 0.3,
-    broadcast_candidates: bool = True,
 ) -> DataFrame:
     """The scale path for near-dup detection: MinHash-LSH candidate
     generation followed by exact Jaccard verification of ONLY the
@@ -404,9 +400,7 @@ def lsh_verified_pairs(
     arrs = spread(docs, id_col).select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh_arr")
     )
-    return _verify_jaccard(
-        cands, arrs, id_col, threshold, broadcast_candidates
-    )
+    return _verify_jaccard(cands, arrs, id_col, threshold)
 
 
 def connected_components(

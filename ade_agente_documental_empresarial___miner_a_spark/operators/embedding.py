@@ -80,12 +80,10 @@ def with_embeddings(
     out_col: str = "embedding",
     dim: int = DEFAULT_DIM,
     seed: int = DEFAULT_SEED,
-    parallel: bool = True,
 ) -> DataFrame:
-    if parallel:
-        # keep the Arrow/Python boundary spread over all cores (AQE
-        # would otherwise coalesce a small upstream shuffle to 1 task)
-        from .dedup import spread
+    # keep the Arrow/Python boundary spread over all cores (AQE would
+    # otherwise coalesce a small upstream shuffle to 1 task)
+    from .dedup import spread
 
-        df = spread(df)
+    df = spread(df)
     return df.withColumn(out_col, embed_text_udf(dim, seed)(F.col(text_col)))

@@ -1,5 +1,5 @@
 """Iterative graph kernels at scale — the reusable engine behind the
-catalog's graph entries (``plans/queries_round4c.py: graph_pagerank``
+catalog's graph entries (``plans/queries_graph.py: graph_pagerank``
 runs 3 UNROLLED iterations on the 25-node nation trade graph for oracle
 exactness; this module is the same recurrence shaped for million-edge
 graphs, matching the ``dedup.connected_components`` evidence pattern).

@@ -205,64 +205,16 @@ def _load():
     if _LOADED:
         return
     from . import queries_reference  # noqa: F401
-    from . import queries_ext  # noqa: F401
     from . import queries_ingest  # noqa: F401
+    from . import queries_tpch  # noqa: F401
+    from . import queries_relational  # noqa: F401
     from . import queries_curation  # noqa: F401
-    from . import queries_round3  # noqa: F401
-    from . import queries_round4  # noqa: F401
-    from . import queries_round4b  # noqa: F401
-    from . import queries_round4c  # noqa: F401
-    from . import queries_round4d  # noqa: F401
-    from . import queries_round4e  # noqa: F401
-    from . import queries_round4f  # noqa: F401
-    from . import queries_round4g  # noqa: F401
-    from . import queries_round4h  # noqa: F401
-    from . import queries_round4i  # noqa: F401
-    from . import queries_round4j  # noqa: F401
-    from . import queries_round4k  # noqa: F401
-    from . import queries_round4l  # noqa: F401
-    from . import queries_round4m  # noqa: F401
-    from . import queries_round4n  # noqa: F401
-    from . import queries_round4o  # noqa: F401
-    from . import queries_round4p  # noqa: F401
-    from . import queries_round4q  # noqa: F401
-    from . import queries_round4r  # noqa: F401
-    from . import queries_round4s  # noqa: F401
-    from . import queries_round4t  # noqa: F401
-    from . import queries_round4u  # noqa: F401
-    from . import queries_round4v  # noqa: F401
-    from . import queries_round4w  # noqa: F401
-    from . import queries_round4x  # noqa: F401
-    from . import queries_round4y  # noqa: F401
-    from . import queries_round4z  # noqa: F401
-    from . import queries_round4aa  # noqa: F401
-    from . import queries_round4ab  # noqa: F401
-    from . import queries_round4ac  # noqa: F401
-    from . import queries_round4ad  # noqa: F401
-    from . import queries_round4ae  # noqa: F401
-    from . import queries_round4af  # noqa: F401
-    from . import queries_round4ag  # noqa: F401
-    from . import queries_round4ah  # noqa: F401
-    from . import queries_round4ai  # noqa: F401
-    from . import queries_round4aj  # noqa: F401
-    from . import queries_round4ak  # noqa: F401
-    from . import queries_round4al  # noqa: F401
-    from . import queries_round4am  # noqa: F401
-    from . import queries_round4an  # noqa: F401
-    from . import queries_round4ao  # noqa: F401
-    from . import queries_round4ap  # noqa: F401
-    from . import queries_round4aq  # noqa: F401
-    from . import queries_round4ar  # noqa: F401
-    from . import queries_round4as  # noqa: F401
-    from . import queries_round4at  # noqa: F401
-    from . import queries_round4au  # noqa: F401
-    from . import queries_round4av  # noqa: F401
-    from . import queries_round4aw  # noqa: F401
-    from . import queries_round4ax  # noqa: F401
-    from . import queries_round4ay  # noqa: F401
-    from . import queries_round4az  # noqa: F401
-    from . import queries_round8  # noqa: F401
-    from . import queries_round10  # noqa: F401
+    from . import queries_text  # noqa: F401
+    from . import queries_dedup  # noqa: F401
+    from . import queries_similarity  # noqa: F401
+    from . import queries_streaming  # noqa: F401
+    from . import queries_multimodal  # noqa: F401
+    from . import queries_graph  # noqa: F401
 
     _LOADED = True
 
@@ -272,6 +224,18 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ensure_package_shipped(spark)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _source_tag(sf: str, name: str) -> str:
+    """Cache key for a derived-artifact directory: sf dir name + the
+    source parquet's (mtime, size), so a regenerated fixture invalidates
+    the cache instead of silently serving data derived from the old
+    file (the driver regenerated testdata between rounds 3 and 4)."""
+    st = os.stat(os.path.join(sf, f"{name}.parquet"))
+    return (
+        f"{os.path.basename(sf.rstrip('/'))}"
+        f"_{int(st.st_mtime)}_{st.st_size}"
+    )
 
 
 # events.parquet's ts column has shipped in two physical layouts across
@@ -286,10 +250,18 @@ _EVENTS_SCHEMA = (
     "value double, props string"
 )
 
-DUCK_EVENTS = (
-    "ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, "
-    "event_type, value, props FROM events)"
-)
+
+def duck_ev(*cols: str) -> str:
+    """The DuckDB ``ev`` CTE over events: event_id, ts (as TIMESTAMP),
+    user_id, event_type, then ``cols``."""
+    return (
+        "ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, "
+        + ", ".join(("event_type", *cols))
+        + " FROM events)"
+    )
+
+
+DUCK_EVENTS = duck_ev("value", "props")
 
 
 def _events_ts_unit(path: str) -> str:

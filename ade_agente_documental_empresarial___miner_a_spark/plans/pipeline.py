@@ -47,9 +47,7 @@ def build_chunks(
     )
 
 
-def save_index(
-    chunks: DataFrame, path: str, buckets: int = 0, kind: str = "chunks"
-) -> str:
+def save_index(chunks: DataFrame, path: str, buckets: int = 0) -> str:
     """S8 — persist the chunks table; Parquet IS the vector index
     (SURVEY §1.3). With ``buckets`` > 0, bucket by section so
     section-filtered retrieval (F2/J2/K3) prunes files and co-locates
@@ -57,16 +55,8 @@ def save_index(
     Exchange-free plan). Returns the reference to pass to
     ``load_index``: the table name when bucketed (bucket metadata lives
     in the catalog — reading the files as bare parquet would silently
-    drop it), else the path.
-
-    ``kind="ivf_i8"`` persists the ANN serving index instead (codebook +
-    cell-partitioned int8 codes, ``operators/ann.save_ivf_i8_index``);
-    ``chunks`` must then be an embeddings-shaped frame (vec_id,
-    embedding)."""
-    if kind == "ivf_i8":
-        from ..operators.ann import save_ivf_i8_index
-
-        return save_ivf_i8_index(chunks, path)
+    drop it), else the path. The ANN serving index has its own pair,
+    ``operators/ann.save_ivf_i8_index`` / ``load_ivf_i8_index``."""
     if buckets:
         # deterministic table name (NOT Python hash(): PYTHONHASHSEED
         # varies across processes and sessions)
@@ -86,18 +76,11 @@ def save_index(
     return path
 
 
-def load_index(spark, ref: str, kind: str = "chunks"):
+def load_index(spark, ref: str) -> DataFrame:
     """Load a saved index: catalog table name (bucketed path) or a
     filesystem path (partitioned path). Catalog membership decides —
     a path-shaped heuristic would misread a relative single-segment
-    parquet path (e.g. ``'idx'``) as a table name.
-
-    ``kind="ivf_i8"`` returns ``(codes DataFrame, codebook literals)``
-    from a ``save_index(kind="ivf_i8")`` path — no rebuild jobs run."""
-    if kind == "ivf_i8":
-        from ..operators.ann import load_ivf_i8_index
-
-        return load_ivf_i8_index(spark, ref)
+    parquet path (e.g. ``'idx'``) as a table name."""
     # tableExists() itself throws on slash-containing refs, so only probe
     # the catalog for identifier-shaped refs.
     if "/" not in ref and not ref.startswith("file:") and spark.catalog.tableExists(ref):

@@ -3,12 +3,21 @@
 Every query here re-expresses an operator of ``micro-infobot/app.py`` as a
 Spark DataFrame job over the driver fixtures, with a DuckDB SQL oracle that
 computes the identical result (same float op order, same fold direction,
-decimal-exact money sums — see module comments inline).
+decimal-exact money sums — see module comments inline): the filters,
+sectioning, chunking and embedding core (f*/t*), joins and aggregates
+(j*/a*), top-k retrieval (k*), the hierarchical search and legacy concat
+(e2/d2), scalar functions (s28), transcript reconstruction (s6) and the
+chat-turn accounting (chat_*).
 
 The fixture ``documents.text`` has no newlines, so sectioning queries first
 inject deterministic structure (identical literal ``replace`` on both
 engines): selected words become paragraph breaks + ALL-CAPS titles, which
 then exercise the title regex / forward-fill / semi-join paths for real.
+
+Conventions shared by every catalog module: Spark callable paired with a
+bit-exact DuckDB oracle; integer surface columns are BIGINT on both
+sides; float expressions use the same cast/fold order; order-sensitive
+money aggregates go through DECIMAL.
 """
 
 from __future__ import annotations
@@ -18,11 +27,16 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import is_title
-from ..functions.vector import cosine_similarity, duck_cosine
-from ..operators.sectioning import assign_sections, extract_titles, split_paragraphs
 from ..functions.exactmath import dblround
+from ..functions.vector import duck_cosine
+from ..operators.chunking import chunk_sections
+from ..operators.sectioning import (
+    assign_sections,
+    extract_titles,
+    split_paragraphs,
+)
 from .catalog import events_table, register, table
+
 
 # ---------------------------------------------------------------------------
 # deterministic structure injection (both engines, identical literal replace)
@@ -56,9 +70,11 @@ paras AS (
   FROM s
 )"""
 
+
 _DUCK_IS_TITLE = (
     r"(regexp_full_match(trim(paragraph), '[A-Z\s]+') AND length(trim(paragraph)) > 5)"
 )
+
 
 _DUCK_SECTIONS = f"""{_DUCK_PARAS},
 sect AS (
@@ -628,3 +644,299 @@ def s28_scalar_fns(spark: SparkSession, sf: str) -> DataFrame:
             F.nullif("event_type", F.lit("error")), F.lit("ERR")
         ).alias("safe_type"),
     )
+
+
+# ---------------------------------------------------------------------------
+# T3 — the recursive chunker through the real pandas_udf pipeline.
+# At the correctness SF every sectioned paragraph is < 500 chars (verified:
+# max 409 at sf0.01), so the 500/50 splitter is provably a strip()
+# pass-through there and the oracle below is exact. Real splitting is
+# exercised by `t3b_chunk_long_docs` (exact CTE oracle) and unit tests.
+@register(
+    "t3_chunk_pipeline",
+    f"""WITH {_DUCK_SECTIONS}
+SELECT doc_id, section, para_pos, CAST(0 AS BIGINT) AS chunk_pos,
+       trim(paragraph) AS text
+FROM content WHERE trim(paragraph) <> ''""",
+)
+def t3_chunk_pipeline(spark: SparkSession, sf: str) -> DataFrame:
+    content = assign_sections(_structured(table(spark, sf, "documents")))
+    return chunk_sections(content).select(
+        "doc_id",
+        "section",
+        F.col("para_pos").cast("long").alias("para_pos"),
+        F.col("chunk_pos").cast("long").alias("chunk_pos"),
+        "text",
+    )
+
+
+# T3b — real splitting (chunk_size=120 over raw text). The synthetic
+# documents contain no '\n\n'/'\n'/'.', no doubled/leading/trailing
+# spaces, and no word piece >= 120 chars (all three pinned for
+# sf0.001/0.01/0.1 by tests/test_t3b_oracle.py — an oversized piece
+# would take the splitter's append-as-is branch, outside this oracle), so
+# the recursive splitter provably reduces to its single-level greedy
+# word-merge scan: split on ' ' (separator attached to the start of the
+# following piece), greedily fill windows of <= 120 chars, keep a
+# <= 20-char tail as overlap, strip each emitted join. That scan has a
+# closed form over per-doc prefix sums of piece lengths — chunk k covers
+# pieces [a_k, b_k] where b_k = max e with cum(e) - cum(a_k - 1) <= 120
+# and a_(k+1) = min j > a_k with cum(b_k) - cum(j-1) <= 20 and
+# cum(b_k) - cum(j-1) + len(piece b_k + 1) <= 120 (or the window is
+# empty) — which the oracle walks with a recursive CTE, reproducing
+# every chunk byte-for-byte (pinned vs RecursiveCharacterSplitter over
+# all sf0.01 docs, 1647/1647 chunks). Reference semantics:
+# micro-infobot/app.py:116-126.
+_T3B_ORACLE = """
+WITH RECURSIVE lens AS (
+  SELECT doc_id, text, i,
+         CAST(length(w) + CASE WHEN i > 1 THEN 1 ELSE 0 END AS BIGINT) AS l
+  FROM (SELECT doc_id, text,
+               unnest(string_split(text, ' ')) AS w,
+               generate_subscripts(string_split(text, ' '), 1) AS i
+        FROM documents)
+), agg AS (
+  SELECT doc_id, any_value(text) AS text,
+         list_prepend(CAST(0 AS BIGINT), list(cumsum ORDER BY i)) AS cum,
+         max(i) AS n
+  FROM (SELECT doc_id, text, i,
+               CAST(sum(l) OVER (PARTITION BY doc_id ORDER BY i) AS BIGINT)
+                 AS cumsum
+        FROM lens)
+  GROUP BY doc_id
+), walk AS (
+  SELECT doc_id, text, cum, n, CAST(0 AS BIGINT) AS chunk_pos,
+         CAST(1 AS BIGINT) AS a,
+         CAST(greatest(1, len(list_filter(cum, x -> x <= cum[1] + 120)) - 1)
+              AS BIGINT) AS b
+  FROM agg
+  UNION ALL
+  SELECT doc_id, text, cum, n, chunk_pos + 1, a2,
+         CAST(greatest(a2, len(list_filter(cum,
+                x -> x <= cum[CAST(a2 AS BIGINT)] + 120)) - 1) AS BIGINT)
+  FROM (
+    SELECT doc_id, text, cum, n, chunk_pos,
+           CAST(least(greatest(
+             len(list_filter(cum, x -> x < greatest(cum[b + 1] - 20,
+                                                    cum[b + 2] - 120))) + 1,
+             a + 1), b + 1) AS BIGINT) AS a2,
+           b
+    FROM walk WHERE b < n
+  )
+)
+SELECT doc_id, chunk_pos,
+       CAST(length(trim(substr(text, CAST(cum[a] + 1 AS BIGINT),
+                               CAST(cum[b + 1] - cum[a] AS BIGINT))))
+            AS BIGINT) AS chunk_len,
+       trim(substr(text, CAST(cum[a] + 1 AS BIGINT),
+                   CAST(cum[b + 1] - cum[a] AS BIGINT))) AS text
+FROM walk
+"""
+
+
+@register("t3b_chunk_long_docs", _T3B_ORACLE)
+def t3b_chunk_long_docs(spark: SparkSession, sf: str) -> DataFrame:
+    docs = table(spark, sf, "documents").select(
+        "doc_id", F.lit("General").alias("section"),
+        F.lit(0).alias("para_pos"), "text",
+    )
+    chunks = chunk_sections(docs, text_col="text", chunk_size=120, chunk_overlap=20)
+    return chunks.select(
+        "doc_id",
+        F.col("chunk_pos").cast("long").alias("chunk_pos"),
+        F.length("text").cast("long").alias("chunk_len"),
+        "text",
+    )
+
+
+# T5 — embedding hash-projection core, oracle-checked: the md5 bucket/sign
+# histogram that embed_one() accumulates, exploded per (doc, bucket) with
+# integer weights. A unit test pins embed_one() to this exact histogram.
+_HEXPOS = "'0123456789abcdef'"
+
+
+def _hexval(pos: int) -> str:
+    return f"(strpos({_HEXPOS}, substr(h, {pos}, 1)) - 1)"
+
+
+_DUCK_IDX = (
+    f"(({_hexval(1)} * 16 + {_hexval(2)}) "
+    f"+ ({_hexval(3)} * 16 + {_hexval(4)}) * 256 "
+    f"+ ({_hexval(5)} * 16 + {_hexval(6)}) * 65536 "
+    f"+ ({_hexval(7)} * 16 + {_hexval(8)}) * 16777216) % 64"
+)
+
+
+_DUCK_SIGN = f"CASE WHEN {_hexval(10)} % 2 = 1 THEN 1 ELSE -1 END"
+
+
+@register(
+    "t5_embed_histogram",
+    f"""WITH toks AS (
+  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents),
+hashed AS (SELECT doc_id, md5('42:' || tok) AS h FROM toks)
+SELECT doc_id, CAST({_DUCK_IDX} AS BIGINT) AS bucket,
+       CAST(sum({_DUCK_SIGN}) AS BIGINT) AS weight
+FROM hashed GROUP BY doc_id, bucket""",
+)
+def t5_embed_histogram(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.dedup import spread
+
+    toks = spread(table(spark, sf, "documents"), "doc_id").select(
+        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
+    )
+    h = F.md5(F.concat(F.lit("42:"), F.col("tok")))
+    hexval = lambda pos: (  # noqa: E731
+        F.instr(F.lit("0123456789abcdef"), F.substring(F.col("h"), pos, 1)) - 1
+    )
+    byte = lambda k: (  # noqa: E731
+        hexval(2 * k + 1) * 16 + hexval(2 * k + 2)
+    ).cast("long")
+    idx = (
+        byte(0) + byte(1) * 256 + byte(2) * 65536 + byte(3) * 16777216
+    ) % 64
+    sign = F.when(hexval(10) % 2 == 1, F.lit(1)).otherwise(F.lit(-1))
+    return (
+        toks.withColumn("h", h)
+        .select("doc_id", idx.cast("long").alias("bucket"), sign.alias("s"))
+        .groupBy("doc_id", "bucket")
+        .agg(F.sum("s").cast("long").alias("weight"))
+    )
+
+
+# S6 — per-user transcript reconstruction (ConversationBufferMemory,
+# app.py:43-44) through sinks.session_transcripts, driven by a
+# deterministic chat history derived from events: message=event_type,
+# response=props, tokens from floor(value)/len(props). Messages exploded
+# to rows so the oracle compares scalars.
+@register(
+    "s6_transcript_reconstruct",
+    """WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events),
+chat AS (
+  SELECT user_id AS usr, event_type AS message, props AS response, ts,
+         CAST(floor(value) AS BIGINT) AS ptok,
+         CAST(length(props) AS BIGINT) AS ctok
+  FROM ev),
+ordered AS (
+  SELECT *, row_number() OVER (PARTITION BY usr ORDER BY ts, message, response) - 1 AS turn
+  FROM chat),
+totals AS (
+  SELECT usr, count(*) AS n_turns,
+         CAST(sum(ptok) AS BIGINT) AS prompt_tokens,
+         CAST(sum(ctok) AS BIGINT) AS completion_tokens,
+         CAST(sum(ptok) AS DOUBLE) * 0.00001 + CAST(sum(ctok) AS DOUBLE) * 0.00003 AS cost_usd
+  FROM chat GROUP BY usr),
+msgs AS (
+  SELECT usr, turn * 2 AS pos, 'user' AS role, message AS content FROM ordered
+  UNION ALL
+  SELECT usr, turn * 2 + 1, 'assistant', response FROM ordered)
+SELECT m.usr AS chat_user, CAST(m.pos AS BIGINT) AS msg_pos, m.role, m.content,
+       t.n_turns, t.prompt_tokens, t.completion_tokens, t.cost_usd
+FROM msgs m JOIN totals t ON m.usr = t.usr""",
+)
+def s6_transcript_reconstruct(spark: SparkSession, sf: str) -> DataFrame:
+    from ..sources.sinks import session_transcripts
+
+    ev = events_table(spark, sf)
+    chat = ev.select(
+        F.col("user_id").alias("user"),
+        F.col("event_type").alias("message"),
+        F.col("props").alias("response"),
+        "ts",
+        F.floor("value").cast("long").alias("prompt_tokens"),
+        F.length("props").cast("long").alias("completion_tokens"),
+    )
+    tr = session_transcripts(chat)
+    return tr.select(
+        F.col("user").alias("chat_user"),
+        F.posexplode("messages").alias("msg_pos", "m"),
+        "n_turns",
+        "prompt_tokens",
+        "completion_tokens",
+        "cost_usd",
+    ).select(
+        "chat_user",
+        F.col("msg_pos").cast("long").alias("msg_pos"),
+        F.col("m.role").alias("role"),
+        F.col("m.content").alias("content"),
+        "n_turns",
+        "prompt_tokens",
+        "completion_tokens",
+        "cost_usd",
+    )
+
+
+# ---------------------------------------------------------------------------
+# chat_session_costs — the reference's tab-2 analytics generalized
+# (micro-infobot/app.py:270-283 shows per-conversation token cost): the
+# A5 token/cost model rolled up per SESSION instead of per user, by
+# composing the sessionization window with the cost projections at the
+# EVENT level — one user-partitioned window + one groupBy, no
+# session⋈event range join. DECIMAL cost sums stay order-insensitive.
+def _register_chat_session_costs():
+    from .catalog import DUCK_EVENTS, events_table
+
+    @register(
+        "chat_session_costs",
+        f"""WITH {DUCK_EVENTS},
+t AS (
+  SELECT user_id, event_id, ts,
+         CAST(value AS DECIMAL(18,2)) AS ptok,
+         CAST(CAST(regexp_extract(props, '([0-9]+)', 1) AS BIGINT)
+              AS DECIMAL(18,2)) AS ctok
+  FROM ev),
+o AS (
+  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
+                      OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
+                         > 43200000000
+                 THEN 1 ELSE 0 END AS new_s
+  FROM t WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+s AS (
+  SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+              AS session_id
+  FROM o)
+SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
+       count(*) AS n_turns,
+       CAST(sum(ptok) AS DOUBLE) AS prompt_tokens,
+       CAST(sum(ctok) AS DOUBLE) AS completion_tokens,
+       CAST(sum(ptok * 0.00001 + ctok * 0.00003) AS DOUBLE) AS cost_usd,
+       CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS DOUBLE) / 1000000.0
+         AS duration_s
+FROM s GROUP BY user_id, session_id""",
+    )
+    def chat_session_costs(spark: SparkSession, sf: str) -> DataFrame:
+        from decimal import Decimal
+
+        from ..operators.sessions import with_session_ids
+
+        ev = events_table(spark, sf).select(
+            "user_id",
+            "event_id",
+            "ts",
+            F.col("value").cast("decimal(18,2)").alias("ptok"),
+            F.regexp_extract("props", r"([0-9]+)", 1)
+            .cast("bigint")
+            .cast("decimal(18,2)")
+            .alias("ctok"),
+        )
+        s = with_session_ids(ev, gap_minutes=720)
+        return s.groupBy("user_id", "session_id").agg(
+            F.count(F.lit(1)).alias("n_turns"),
+            F.sum("ptok").cast("double").alias("prompt_tokens"),
+            F.sum("ctok").cast("double").alias("completion_tokens"),
+            F.sum(
+                F.col("ptok") * F.lit(Decimal("0.00001"))
+                + F.col("ctok") * F.lit(Decimal("0.00003"))
+            )
+            .cast("double")
+            .alias("cost_usd"),
+            (
+                (
+                    F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))
+                ).cast("double")
+                / 1_000_000.0
+            ).alias("duration_s"),
+        )
+
+
+_register_chat_session_costs()

@@ -13,7 +13,7 @@ metrics — ``micro-infobot/app.py:43-71, 227-283``) expressed natively:
   the ConversationBufferMemory equivalent (running turn count + token
   totals with a processing-timeout eviction)
 
-The same aggregations run as batch in ``plans/queries_ext.py``
+The same aggregations run as batch in ``plans/queries_streaming.py``
 (``stream_tumbling_1h`` / ``stream_session_windows``) where the DuckDB
 oracle checks them — Structured Streaming reuses identical expressions,
 so the batch gate covers the logic and the tests here cover the stream

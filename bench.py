@@ -778,8 +778,8 @@ def main() -> None:
     spark.range(32, numPartitions=32).select(_warm("id")).collect()
 
     # Noise sentinel: a FIXED JVM-side workload (no IO, no Python) whose
-    # quiet-box time is stable (~1s, see docs/bench_r5_quietbox*.json
-    # era calibration in the round notes). This sandbox hosts external
+    # quiet-box time is stable (~1s, see the r5 quietbox rows of
+    # docs/BENCH_RECORDINGS.md). The bench host has external
     # CPU bursts (BENCH_r05 landed during one: the same tree measured
     # 16.69s vs a 9.92s quiet floor); a recording whose sentinel legs sit
     # far above calibration is self-identified as hot rather than read

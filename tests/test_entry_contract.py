@@ -170,3 +170,42 @@ def test_recorded_verdicts_derivation(tmp_path):
     # rounds track the LATEST record per name (the r06 file is unparseable
     # so r05 is the newest valid record for b and c)
     assert rounds == {"a": 4, "b": 5, "c": 5, "d": 4}
+
+
+# Entry-name prefix -> the domain module that holds the entry; the first
+# matching pattern wins.
+_DOMAIN_OF_PREFIX = (
+    (r"rel_q\d+_", "queries_tpch"),
+    (r"(rel|agg|skew)_", "queries_relational"),
+    (r"cur_", "queries_curation"),
+    (r"(text|func)_", "queries_text"),
+    (r"dedup_", "queries_dedup"),
+    (r"(sim|emb)_", "queries_similarity"),
+    (r"stream_", "queries_streaming"),
+    (r"mm_", "queries_multimodal"),
+    (r"graph_", "queries_graph"),
+    (r"(s6_|s28_|chat_)", "queries_reference"),
+    (r"(s\d+[a-z]?_|e1_)", "queries_ingest"),
+    (r"", "queries_reference"),
+)
+
+
+def test_catalog_modules_by_domain():
+    """The catalog is filed by domain: every entry lives in the module
+    its name prefix maps to, and no round-named module is left."""
+    import re
+
+    from ade_agente_documental_empresarial___miner_a_spark.plans import catalog
+
+    for name, fn in catalog.queries().items():
+        want = next(
+            mod for pat, mod in _DOMAIN_OF_PREFIX if re.match(pat, name)
+        )
+        assert fn.__module__.rsplit(".", 1)[1] == want, name
+    plans = os.path.dirname(catalog.__file__)
+    leftovers = [
+        f
+        for f in os.listdir(plans)
+        if re.match(r"queries_(round\w*|ext)\.py$", f)
+    ]
+    assert leftovers == []

@@ -1,5 +1,5 @@
 """operators/graph.pagerank — the reusable checkpointed kernel behind
-the catalog's unrolled oracle entry (queries_round4c.graph_pagerank)."""
+the catalog's unrolled oracle entry (queries_graph.graph_pagerank)."""
 
 import pytest
 
@@ -59,7 +59,7 @@ def test_matches_catalog_recurrence_on_nation_graph(spark):
     nation trade graph (sf0.001) the reusable kernel must agree with the
     unrolled decimal-quantized version to well inside the latter's
     round(.,12) quantum accumulated over 3 iterations."""
-    from ade_agente_documental_empresarial___miner_a_spark.plans.queries_round4c import (
+    from ade_agente_documental_empresarial___miner_a_spark.plans.queries_graph import (
         graph_pagerank,
     )
 

@@ -145,7 +145,6 @@ def test_ivf_i8_persisted_serves_without_rebuild(spark, sf_dir, tmp_path, monkey
     load+search path still produces results identical to a from-scratch
     ivf_quantized_topk run."""
     from ade_agente_documental_empresarial___miner_a_spark.operators import ann
-    from ade_agente_documental_empresarial___miner_a_spark.plans import pipeline
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     expected = {
@@ -156,7 +155,7 @@ def test_ivf_i8_persisted_serves_without_rebuild(spark, sf_dir, tmp_path, monkey
     }
 
     path = str(tmp_path / "ivf_idx")
-    ref = pipeline.save_index(emb, path, kind="ivf_i8")
+    ref = ann.save_ivf_i8_index(emb, path)
     assert ref == path
 
     def _boom(*a, **k):
@@ -166,7 +165,7 @@ def test_ivf_i8_persisted_serves_without_rebuild(spark, sf_dir, tmp_path, monkey
     monkeypatch.setattr(ann, "_centroid_rows", _boom)
     monkeypatch.setattr(ann, "ivf_assign", _boom)
 
-    codes, cents = pipeline.load_index(spark, path, kind="ivf_i8")
+    codes, cents = ann.load_ivf_i8_index(spark, path)
     assert len(cents) == 16 and codes.columns == ["vec_id", "m", "q", "cell"]
     got = {
         (r.query_id, r.rnk): (r.vec_id, r.approx_dot)

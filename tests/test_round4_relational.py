@@ -167,7 +167,7 @@ def test_emb_label_centroids_match_numpy_mean(spark):
 def test_partition_pruned_scan_reads_only_three_days(spark):
     import os
 
-    from ade_agente_documental_empresarial___miner_a_spark.plans.queries_round4 import (
+    from ade_agente_documental_empresarial___miner_a_spark.plans.queries_ingest import (
         _ensure_partitioned_events,
     )
 

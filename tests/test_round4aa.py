@@ -4,7 +4,8 @@ diff)."""
 from pyspark.sql import functions as F
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4aa as q,
+    queries_curation,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -22,10 +23,10 @@ def test_transition_matrix_literal(spark, monkeypatch):
     ev = spark.createDataFrame(
         rows, "event_id long, ts string, user_id long, event_type string"
     ).selectExpr("event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id", "event_type")
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
     got = {
         (r.prev_type, r.next_type): (r.n_transitions, r.p_transition)
-        for r in q.rel_event_transitions(spark, SF).collect()
+        for r in queries_relational.rel_event_transitions(spark, SF).collect()
     }
     # user1: a->b, b->a, a->b ; user2: a->a
     assert got[("a", "b")] == (2, round(2 / 3, 9))
@@ -34,7 +35,7 @@ def test_transition_matrix_literal(spark, monkeypatch):
 
 
 def test_transition_probabilities_row_normalize(spark):
-    rows = q.rel_event_transitions(spark, SF).collect()
+    rows = queries_relational.rel_event_transitions(spark, SF).collect()
     by_prev = {}
     for r in rows:
         by_prev.setdefault(r.prev_type, []).append(r.p_transition)
@@ -46,7 +47,7 @@ def test_dataset_diff_classes(spark):
     import duckdb
 
     got = {r.change: (r.n_docs, r.token_delta)
-           for r in q.cur_dataset_diff(spark, SF).collect()}
+           for r in queries_curation.cur_dataset_diff(spark, SF).collect()}
     n, = duckdb.sql(
         f"SELECT count(*) FROM read_parquet('{SF}/documents.parquet')"
     ).fetchone()

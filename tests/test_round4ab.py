@@ -4,7 +4,8 @@ novelty, compression ratio)."""
 import zlib
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ab as q,
+    queries_relational,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -29,10 +30,10 @@ def test_nearest_event_picks_smaller_gap(spark, monkeypatch):
     ev = spark.createDataFrame(
         rows, "event_id long, ts string, user_id long, event_type string"
     ).selectExpr("event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id", "event_type")
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
     got = {
         r.purchase_id: (r.direction, r.gap_sec)
-        for r in q.rel_nearest_event_join(spark, SF).collect()
+        for r in queries_relational.rel_nearest_event_join(spark, SF).collect()
     }
     assert got == {
         2: ("after", 180),
@@ -42,7 +43,7 @@ def test_nearest_event_picks_smaller_gap(spark, monkeypatch):
 
 
 def test_novelty_bounds_and_boilerplate_detection(spark):
-    rows = q.text_ngram_novelty(spark, SF).collect()
+    rows = queries_text.text_ngram_novelty(spark, SF).collect()
     assert rows
     for r in rows:
         assert 0.0 <= r.novelty <= 1.0
@@ -58,11 +59,12 @@ def test_compression_ratio_pins_zlib(spark):
         ],
         "doc_id long, text string",
     )
-    got = {r.doc_id: r for r in q.compression_ratio(docs).collect()}
+    got = {r.doc_id: r for r in queries_text.compression_ratio(docs).collect()}
     for i, text in ((1, "ab" * 500), (2, "the quick brown fox jumps over the lazy dog " * 3)):
         raw = text.encode()
         assert got[i].n_raw_bytes == len(raw)
-        assert got[i].n_zlib_bytes == len(zlib.compress(raw, q._ZLIB_LEVEL))
-        assert abs(got[i].ratio - round(len(zlib.compress(raw, q._ZLIB_LEVEL)) / len(raw), 9)) < 1e-12
+        packed = zlib.compress(raw, queries_text._ZLIB_LEVEL)
+        assert got[i].n_zlib_bytes == len(packed)
+        assert abs(got[i].ratio - round(len(packed) / len(raw), 9)) < 1e-12
     assert got[1].ratio < got[2].ratio  # repetition compresses harder
     assert got[3].ratio is None

@@ -3,7 +3,8 @@
 import math
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ac as q,
+    queries_relational,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -23,8 +24,8 @@ def test_ztest_literal(spark, monkeypatch):
     ev = spark.createDataFrame(
         rows, "event_id long, user_id long, event_type string"
     )
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
-    r = q.rel_abtest_ztest(spark, SF).collect()[0]
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
+    r = queries_relational.rel_abtest_ztest(spark, SF).collect()[0]
     assert (r.n0, r.c0, r.n1, r.c1) == (10, 2, 10, 8)
     p0, p1, pp = 0.2, 0.8, 0.5
     z = (p1 - p0) / math.sqrt(pp * 0.5 * (0.1 + 0.1))
@@ -37,14 +38,14 @@ def test_ztest_degenerate_pool_is_null_not_error(spark, monkeypatch):
     ev = spark.createDataFrame(
         rows, "event_id long, user_id long, event_type string"
     )
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
-    r = q.rel_abtest_ztest(spark, SF).collect()[0]
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
+    r = queries_relational.rel_abtest_ztest(spark, SF).collect()[0]
     assert r.z_score is None
     assert bool(r.significant) is False
 
 
 def test_sentence_stats_consistency(spark):
-    rows = q.text_sentence_stats(spark, SF).collect()
+    rows = queries_text.text_sentence_stats(spark, SF).collect()
     assert rows
     for r in rows:
         assert r.n_sentences >= 1

@@ -2,14 +2,15 @@
 agreement)."""
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ad as q,
+    queries_curation,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_set_similarity_identities(spark):
-    rows = q.text_set_similarity_battery(spark, SF).collect()
+    rows = queries_text.text_set_similarity_battery(spark, SF).collect()
     assert rows
     for r in rows:
         # coefficient orderings: jaccard <= dice <= overlap
@@ -25,7 +26,7 @@ def test_set_similarity_identities(spark):
 def test_labeler_agreement_confusion_is_complete(spark):
     import duckdb
 
-    r = q.cur_labeler_agreement(spark, SF).collect()[0]
+    r = queries_curation.cur_labeler_agreement(spark, SF).collect()[0]
     n_docs = duckdb.sql(
         f"SELECT count(*) FROM read_parquet('{SF}/documents.parquet')"
     ).fetchone()[0]

@@ -1,9 +1,7 @@
 """Unit tests for the round-4ae batch (capped running sum, peak
 concurrency)."""
 
-from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ae as q,
-)
+from ade_agente_documental_empresarial___miner_a_spark.plans import queries_relational
 
 SF = "/root/testdata/sf0.001"
 
@@ -26,8 +24,8 @@ def test_capped_running_sum_literal(spark, monkeypatch):
         (3, "2024-01-01 10:02:00", 1, "click", 3.0),
         (4, "2024-01-01 10:03:00", 1, "purchase", 1.0),
     ])
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
-    r = q.rel_capped_running_sum(spark, SF).collect()[0]
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
+    r = queries_relational.rel_capped_running_sum(spark, SF).collect()[0]
     assert (r.n_steps, r.final_balance, r.peak_balance, r.n_floored) == (
         4, 2.0, 5.0, 1,
     )
@@ -40,8 +38,8 @@ def test_capped_running_sum_is_not_window_expressible(spark, monkeypatch):
         (1, "2024-01-01 10:00:00", 1, "purchase", 10.0),
         (2, "2024-01-01 10:01:00", 1, "click", 4.0),
     ])
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
-    r = q.rel_capped_running_sum(spark, SF).collect()[0]
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
+    r = queries_relational.rel_capped_running_sum(spark, SF).collect()[0]
     # clamped fold: max(0,-10)=0 then 0+4=4; naive clamp of the plain
     # running sum would read max(0, -6)=0
     assert r.final_balance == 4.0
@@ -57,9 +55,9 @@ def test_peak_concurrency_literal(spark, monkeypatch):
         # touching intervals do NOT overlap: ends sort before starts
         (5, "2024-01-01 12:10:00", 5, "click", 0.0),
     ])
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
     got = {
         r.event_type: r.peak_concurrent
-        for r in q.rel_peak_concurrency(spark, SF).collect()
+        for r in queries_relational.rel_peak_concurrency(spark, SF).collect()
     }
     assert got == {"click": 3}

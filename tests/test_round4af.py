@@ -1,16 +1,17 @@
 """Unit tests for the round-4af batch (referential audit, script mix)."""
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4af as q,
+    queries_relational,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_referential_audit_clean_fixture(spark):
-    rows = {r.fk_edge: r for r in q.rel_referential_audit(spark, SF).collect()}
+    rows = {r.fk_edge: r for r in queries_relational.rel_referential_audit(spark, SF).collect()}
     assert set(rows) == {
-        f"{c}.{k}" for c, k, _, _ in q._FK_EDGES
+        f"{c}.{k}" for c, k, _, _ in queries_relational._FK_EDGES
     }
     for edge, r in rows.items():
         assert r.n_orphans == 0, edge  # fixtures are FK-clean
@@ -30,14 +31,14 @@ def test_referential_audit_detects_orphans(spark, tmp_path):
         if t == "nation":
             df = df.where("n_nationkey < 12")
         df.write.mode("overwrite").parquet(os.path.join(lake, f"{t}.parquet"))
-    rows = {r.fk_edge: r for r in q.rel_referential_audit(spark, lake).collect()}
+    rows = {r.fk_edge: r for r in queries_relational.rel_referential_audit(spark, lake).collect()}
     assert rows["customer.c_nationkey"].n_orphans > 0
     assert rows["supplier.s_nationkey"].n_orphans > 0
     assert rows["lineitem.l_orderkey"].n_orphans == 0  # untouched edge
 
 
 def test_script_mix_counts(spark):
-    got = {r.row_id: r for r in q.text_script_mix(spark, SF).collect()}
+    got = {r.row_id: r for r in queries_text.text_script_mix(spark, SF).collect()}
     assert got[1].n_latin == 10 and got[1].n_cyrillic == 0
     assert got[2].n_cyrillic == 9 and got[2].n_latin == 0
     assert got[3].n_han == 3 and got[3].n_latin == 4

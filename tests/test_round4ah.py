@@ -4,7 +4,8 @@ reciprocity)."""
 import math
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ah as q,
+    queries_curation,
+    queries_graph,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -13,7 +14,7 @@ SF = "/root/testdata/sf0.001"
 def test_bresenham_selects_floor_rate_n_exactly(spark):
     import duckdb
 
-    kept = {r.lang: r.n_kept for r in q.cur_bresenham_sample(spark, SF).collect()}
+    kept = {r.lang: r.n_kept for r in queries_curation.cur_bresenham_sample(spark, SF).collect()}
     stats = duckdb.sql(
         f"""WITH avail AS (
               SELECT lang, count(*) AS n_docs,
@@ -33,20 +34,19 @@ def test_bresenham_spreads_selection(spark):
     # rate 0.5 over 10 ranked rows keeps exactly every other row
     rows = [(i, "x", " ".join(["w"] * 10)) for i in range(10)]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    import ade_agente_documental_empresarial___miner_a_spark.plans.queries_round4ah as mod
     from ade_agente_documental_empresarial___miner_a_spark.plans import catalog
 
-    orig = mod.table
+    orig = queries_curation.table
     try:
-        mod.table = lambda _s, _sf, _n: df
-        out = q.cur_bresenham_sample(spark, SF).collect()
+        queries_curation.table = lambda _s, _sf, _n: df
+        out = queries_curation.cur_bresenham_sample(spark, SF).collect()
     finally:
-        mod.table = orig
+        queries_curation.table = orig
     # single lang -> rate = min(1, total/1/total) = 1.0 -> keeps all
     assert out[0].n_kept == 10
 
 
 def test_reciprocity_bounds(spark):
-    r = q.graph_reciprocity(spark, SF).collect()[0]
+    r = queries_graph.graph_reciprocity(spark, SF).collect()[0]
     assert 0 <= r.n_reciprocated <= r.n_directed_edges
     assert abs(r.reciprocity - round(r.n_reciprocated / r.n_directed_edges, 9)) < 1e-12

@@ -5,14 +5,15 @@ import glob
 import os
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ai as q,
+    queries_ingest,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_multiband_is_single_scan(spark):
-    df = q.rel_multiband_counts(spark, SF)
+    df = queries_relational.rel_multiband_counts(spark, SF)
     plan = df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -25,14 +26,14 @@ def test_multiband_is_single_scan(spark):
     )
     assert n_scans == 1  # 9 answers, ONE scan
     r = df.collect()[0]
-    bands = [getattr(r, name) for name, *_ in q._BANDS]
+    bands = [getattr(r, name) for name, *_ in queries_relational._BANDS]
     assert all(b >= 0 for b in bands)
     assert sum(bands) <= r.n_total
 
 
 def test_layout_migration_partitions_by_month(spark):
-    q.s19_layout_migration(spark, SF).collect()
-    monthly = q._monthly_dir(SF)
+    queries_ingest.s19_layout_migration(spark, SF).collect()
+    monthly = queries_ingest._monthly_dir(SF)
     dirs = sorted(
         os.path.basename(p)
         for p in glob.glob(os.path.join(monthly, "event_month=*"))

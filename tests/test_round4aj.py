@@ -1,7 +1,8 @@
 """Unit tests for the round-4aj batch (blocklist filter, readability)."""
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4aj as q,
+    queries_curation,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -18,14 +19,13 @@ def test_blocklist_scunthorpe_cases(spark):
         ],
         "doc_id long, text string",
     )
-    import ade_agente_documental_empresarial___miner_a_spark.plans.queries_round4aj as mod
 
-    orig = mod.table
+    orig = queries_curation.table
     try:
-        mod.table = lambda _s, _sf, _n: df
-        got = {r.doc_id: r for r in q.cur_blocklist_filter(spark, SF).collect()}
+        queries_curation.table = lambda _s, _sf, _n: df
+        got = {r.doc_id: r for r in queries_curation.cur_blocklist_filter(spark, SF).collect()}
     finally:
-        mod.table = orig
+        queries_curation.table = orig
     assert got[1].flagged_substr and not got[1].flagged_word
     assert got[1].scunthorpe
     assert got[2].flagged_word and not got[2].scunthorpe
@@ -35,7 +35,7 @@ def test_blocklist_scunthorpe_cases(spark):
 
 
 def test_fk_grade_formula(spark):
-    rows = q.text_readability_fk(spark, SF).collect()
+    rows = queries_text.text_readability_fk(spark, SF).collect()
     assert rows
     for r in rows[:20]:
         expect = round(

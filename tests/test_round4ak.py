@@ -4,7 +4,8 @@ import numpy as np
 import pyarrow.parquet as pq
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ak as q,
+    queries_relational,
+    queries_similarity,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -16,8 +17,8 @@ def test_triplets_pick_correct_pos_and_neg(spark):
     labels = np.array(t.column("label").to_pylist())
     mat = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
     norms = np.linalg.norm(mat, axis=1)
-    out = {r.anchor_id: r for r in q.emb_training_triplets(spark, SF).collect()}
-    cand = ids < q._TRIPLET_CANDS
+    out = {r.anchor_id: r for r in queries_similarity.emb_training_triplets(spark, SF).collect()}
+    cand = ids < queries_similarity._TRIPLET_CANDS
     for aid in list(out)[:6]:
         ai = np.where(ids == aid)[0][0]
         cos = mat @ mat[ai] / (norms * norms[ai])
@@ -33,7 +34,7 @@ def test_triplets_pick_correct_pos_and_neg(spark):
 
 
 def test_lead_time_nonnegative_and_ordered(spark):
-    rows = q.rel_order_lead_time(spark, SF).collect()
+    rows = queries_relational.rel_order_lead_time(spark, SF).collect()
     assert rows
     for r in rows:
         assert 0 <= r.p50_days <= r.p90_days <= r.max_days

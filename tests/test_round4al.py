@@ -4,14 +4,15 @@ families)."""
 import math
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4al as q,
+    queries_relational,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_benford_shares_sum_to_one(spark):
-    rows = q.rel_benford_audit(spark, SF).collect()
+    rows = queries_relational.rel_benford_audit(spark, SF).collect()
     assert {r.digit for r in rows} <= set(range(1, 10))
     assert abs(sum(r.observed_share for r in rows) - 1.0) < 1e-6
     for r in rows:
@@ -25,7 +26,7 @@ def test_template_families_share_prefix(spark):
         table,
     )
 
-    fams = q.text_template_families(spark, SF).collect()
+    fams = queries_text.text_template_families(spark, SF).collect()
     if not fams:  # tiny SF may have no collisions; the sf0.01 parity run does
         return
     docs = {
@@ -36,5 +37,5 @@ def test_template_families_share_prefix(spark):
         members = [int(x) for x in fam.member_ids.split(",")]
         assert fam.family_size == len(members)
         assert fam.keeper_id == min(members)
-        prefixes = {docs[m][: q._PREFIX_LEN] for m in members}
+        prefixes = {docs[m][: queries_text._PREFIX_LEN] for m in members}
         assert len(prefixes) == 1  # the family really shares its prefix

@@ -3,14 +3,15 @@ continuation detection). File suffix am2 avoids clashing with the
 earlier round-4m test module name."""
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4am as q,
+    queries_dedup,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_bridge_identity_holds(spark):
-    rows = q.rel_price_volume_bridge(spark, SF).collect()
+    rows = queries_relational.rel_price_volume_bridge(spark, SF).collect()
     complete = [
         r for r in rows
         if None not in (r.revenue_delta, r.volume_effect, r.price_effect)
@@ -33,17 +34,16 @@ def test_continuation_detects_split_docs(spark):
         [(1, head), (2, tail), (3, "unrelated " * 30)],
         "doc_id long, text string",
     )
-    import ade_agente_documental_empresarial___miner_a_spark.plans.queries_round4am as mod
 
-    orig = mod.table
+    orig = queries_dedup.table
     try:
-        mod.table = lambda _s, _sf, _n: df
+        queries_dedup.table = lambda _s, _sf, _n: df
         pairs = {
             (r.head_doc, r.tail_doc)
-            for r in q.dedup_continuation(spark, SF).collect()
+            for r in queries_dedup.dedup_continuation(spark, SF).collect()
         }
     finally:
-        mod.table = orig
+        queries_dedup.table = orig
     assert (1, 2) in pairs
     assert (2, 1) not in pairs  # direction matters: suffix -> prefix
     assert all(3 not in p for p in pairs)

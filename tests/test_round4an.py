@@ -1,7 +1,8 @@
 """Unit tests for the round-4an batch (max drawdown, PSI)."""
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4an as q,
+    queries_curation,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -22,21 +23,21 @@ def test_max_drawdown_literal(spark, monkeypatch):
         "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id",
         "event_type", "value",
     )
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
-    r = q.rel_max_drawdown(spark, SF).collect()[0]
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
+    r = queries_relational.rel_max_drawdown(spark, SF).collect()[0]
     assert (r.peak_value, r.max_drawdown) == (8.0, -5.0)
 
 
 def test_max_drawdown_nonpositive(spark):
-    rows = q.rel_max_drawdown(spark, SF).collect()
+    rows = queries_relational.rel_max_drawdown(spark, SF).collect()
     assert rows
     for r in rows:
         assert r.max_drawdown <= 0.0
 
 
 def test_psi_bounds_and_self_consistency(spark):
-    rows = q.cur_psi_sources(spark, SF).collect()
+    rows = queries_curation.cur_psi_sources(spark, SF).collect()
     assert rows
     for r in rows:
         assert r.psi >= -1e-9  # PSI is a sum of (p-q)ln(p/q) terms, each >= 0
-        assert 1 <= r.n_active_bins <= q._PSI_BINS
+        assert 1 <= r.n_active_bins <= queries_curation._PSI_BINS

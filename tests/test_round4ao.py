@@ -3,9 +3,7 @@ sequence)."""
 
 from pyspark.sql import functions as F
 
-from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ao as q,
-)
+from ade_agente_documental_empresarial___miner_a_spark.plans import queries_relational
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,10 +27,10 @@ def test_duplicate_payments_literal(spark, monkeypatch):
         "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id",
         "event_type", "value",
     )
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
     got = [
         (r.suspect_event, r.original_event, r.gap_sec)
-        for r in q.rel_duplicate_payments(spark, SF).collect()
+        for r in queries_relational.rel_duplicate_payments(spark, SF).collect()
     ]
     assert got == [(2, 1, 120)]
 
@@ -41,14 +39,14 @@ def test_missing_sequence_literal(spark, monkeypatch):
     df = spark.createDataFrame(
         [(k,) for k in (1, 2, 3, 7, 8, 12)], "o_orderkey long"
     )
-    monkeypatch.setattr(q, "table", lambda _s, _sf, _n: df)
+    monkeypatch.setattr(queries_relational, "table", lambda _s, _sf, _n: df)
     got = sorted(
         (r.missing_from, r.missing_to, r.n_missing)
-        for r in q.rel_missing_sequence(spark, SF).collect()
+        for r in queries_relational.rel_missing_sequence(spark, SF).collect()
     )
     assert got == [(4, 6, 3), (9, 11, 3)]
 
 
 def test_fixture_is_clean_on_both_audits(spark):
-    assert q.rel_duplicate_payments(spark, SF).count() == 0
-    assert q.rel_missing_sequence(spark, SF).count() == 0
+    assert queries_relational.rel_duplicate_payments(spark, SF).count() == 0
+    assert queries_relational.rel_missing_sequence(spark, SF).count() == 0

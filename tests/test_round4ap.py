@@ -1,8 +1,6 @@
 """Unit tests for the round-4ap batch (growth accounting)."""
 
-from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ap as q,
-)
+from ade_agente_documental_empresarial___miner_a_spark.plans import queries_relational
 
 SF = "/root/testdata/sf0.001"
 
@@ -27,7 +25,7 @@ def test_growth_accounting_literal(spark, monkeypatch):
         "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id",
         "event_type", "value",
     )
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
     # week is TIMESTAMP since r9 (gate-mimic date-class retirement):
     # midnight UTC, so keying on the date part keeps the literals
     got = {
@@ -35,11 +33,11 @@ def test_growth_accounting_literal(spark, monkeypatch):
             r.n_new, r.n_retained, r.n_resurrected, r.n_active,
             r.n_churned_from_prev,
         )
-        for r in q.rel_growth_accounting(spark, SF).collect()
+        for r in queries_relational.rel_growth_accounting(spark, SF).collect()
     }
     assert all(
         r.week.time().isoformat() == "00:00:00"
-        for r in q.rel_growth_accounting(spark, SF).collect()
+        for r in queries_relational.rel_growth_accounting(spark, SF).collect()
     )
     assert got["2024-01-01"] == (3, 0, 0, 3, 0)
     assert got["2024-01-08"] == (0, 1, 0, 1, 2)  # users 2 and 3 churned
@@ -47,7 +45,7 @@ def test_growth_accounting_literal(spark, monkeypatch):
 
 
 def test_growth_identity_holds(spark):
-    rows = q.rel_growth_accounting(spark, SF).collect()
+    rows = queries_relational.rel_growth_accounting(spark, SF).collect()
     assert rows
     for r in rows:
         assert r.n_active == r.n_new + r.n_retained + r.n_resurrected

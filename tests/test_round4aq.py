@@ -4,21 +4,22 @@ import glob
 import os
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4aq as q,
+    queries_ingest,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_gzip_roundtrip_files_are_gz_shards(spark):
-    df = q.s20_jsonl_gzip_roundtrip(spark, SF)
+    df = queries_ingest.s20_jsonl_gzip_roundtrip(spark, SF)
     import duckdb
 
     n = duckdb.sql(
         f"SELECT count(*) FROM read_parquet('{SF}/documents.parquet')"
     ).fetchone()[0]
     assert df.count() == n
-    parts = glob.glob(os.path.join(q._gz_dir(SF), "*.json.gz"))
+    parts = glob.glob(os.path.join(queries_ingest._gz_dir(SF), "*.json.gz"))
     assert len(parts) == 8  # shard count == future read parallelism
     # the files really are gzip (magic bytes)
     with open(parts[0], "rb") as f:
@@ -26,7 +27,7 @@ def test_gzip_roundtrip_files_are_gz_shards(spark):
 
 
 def test_bitwise_semantics(spark):
-    got = {r.row_id: r for r in q.func_bitwise_battery(spark, SF).collect()}
+    got = {r.row_id: r for r in queries_text.func_bitwise_battery(spark, SF).collect()}
     assert got[1].bit_and == (0b10101100 & 0b01100110)
     assert got[1].bit_or == (0b10101100 | 0b01100110)
     assert got[1].bit_xor == (0b10101100 ^ 0b01100110)

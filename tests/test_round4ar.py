@@ -1,8 +1,6 @@
 """Unit tests for the round-4ar batch (Kaplan-Meier survival)."""
 
-from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ar as q,
-)
+from ade_agente_documental_empresarial___miner_a_spark.plans import queries_relational
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,8 +27,8 @@ def test_km_literal_with_censoring(spark, monkeypatch):
         ("2024-01-01 10:00:00", 3), ("2024-01-29 10:00:00", 3),
         ("2024-01-01 10:00:00", 4), ("2024-01-30 10:00:00", 4),
     ]
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: _ev(spark, rows))
-    out = {r.lifetime_days: r for r in q.rel_survival_km(spark, SF).collect()}
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: _ev(spark, rows))
+    out = {r.lifetime_days: r for r in queries_relational.rel_survival_km(spark, SF).collect()}
     # t=2: 4 at risk, 1 churn -> S=0.75 ; t=5: 3 at risk, 1 churn -> 0.5
     assert out[2].n_at_risk == 4 and out[2].n_churned == 1
     assert abs(out[2].survival - 0.75) < 1e-6
@@ -43,7 +41,7 @@ def test_km_literal_with_censoring(spark, monkeypatch):
 
 def test_km_curve_is_monotone_nonincreasing(spark):
     rows = sorted(
-        q.rel_survival_km(spark, SF).collect(),
+        queries_relational.rel_survival_km(spark, SF).collect(),
         key=lambda r: r.lifetime_days,
     )
     assert rows

@@ -1,14 +1,12 @@
 """Unit tests for the round-4as batch (cohort LTV, ABC)."""
 
-from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4as as q,
-)
+from ade_agente_documental_empresarial___miner_a_spark.plans import queries_relational
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_cohort_ltv_cum_is_running_sum(spark):
-    rows = q.rel_cohort_ltv(spark, SF).collect()
+    rows = queries_relational.rel_cohort_ltv(spark, SF).collect()
     assert rows
     by_cohort = {}
     for r in rows:
@@ -23,7 +21,7 @@ def test_cohort_ltv_cum_is_running_sum(spark):
 
 
 def test_abc_classes_cover_revenue_bands(spark):
-    got = {r.abc: r for r in q.rel_abc_classification(spark, SF).collect()}
+    got = {r.abc: r for r in queries_relational.rel_abc_classification(spark, SF).collect()}
     total = sum(r.class_revenue for r in got.values())
     assert set(got) <= {"A", "B", "C"}
     # class A completes the 80% band, so its share is >= 0.80 (boundary

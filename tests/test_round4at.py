@@ -1,24 +1,18 @@
 """Unit tests for the round-4at batch (IVF nDCG)."""
 
-from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4at as q,
-)
+from ade_agente_documental_empresarial___miner_a_spark.plans import queries_similarity
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_ndcg_bounds_and_relation_to_recall(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans.queries_round4e import (
-        sim_ivf_recall,
-    )
-
-    ndcg = {r.qid: r for r in q.sim_ivf_ndcg(spark, SF).collect()}
-    recall = {r.qid: r for r in sim_ivf_recall(spark, SF).collect()}
+    ndcg = {r.qid: r for r in queries_similarity.sim_ivf_ndcg(spark, SF).collect()}
+    recall = {r.qid: r for r in queries_similarity.sim_ivf_recall(spark, SF).collect()}
     assert set(ndcg) == set(recall)
     for qid, r in ndcg.items():
         assert 0.0 <= r.ndcg <= 1.0 + 1e-9
         assert r.n_graded == recall[qid].n_overlap
-        if recall[qid].recall == 1.0 and r.n_graded == q._EVAL_K:
+        if recall[qid].recall == 1.0 and r.n_graded == queries_similarity._EVAL_K:
             # perfect recall in perfect order would be ndcg == 1; any
             # order permutation keeps it positive but <= 1
             assert r.ndcg > 0.5
@@ -31,9 +25,9 @@ def test_idcg_constant_matches_formula(spark):
 
     expect = round(
         sum(
-            round((q._EVAL_K + 1 - p) / math.log2(p + 1), 9)
-            for p in range(1, q._EVAL_K + 1)
+            round((queries_similarity._EVAL_K + 1 - p) / math.log2(p + 1), 9)
+            for p in range(1, queries_similarity._EVAL_K + 1)
         ),
         9,
     )
-    assert q._IDCG == expect
+    assert queries_similarity._IDCG == expect

@@ -3,14 +3,15 @@
 import math
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4aw as q,
+    queries_curation,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_hhi_bounds(spark):
-    rows = q.rel_hhi_concentration(spark, SF).collect()
+    rows = queries_relational.rel_hhi_concentration(spark, SF).collect()
     assert rows
     for r in rows:
         assert 1.0 / r.n_suppliers - 1e-6 <= r.hhi <= 1.0 + 1e-9
@@ -19,7 +20,7 @@ def test_hhi_bounds(spark):
 
 
 def test_mix_entropy_bounds(spark):
-    rows = q.cur_mix_entropy(spark, SF).collect()
+    rows = queries_curation.cur_mix_entropy(spark, SF).collect()
     assert rows
     for r in rows:
         max_h = math.log(r.n_sources)

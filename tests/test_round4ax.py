@@ -1,7 +1,8 @@
 """Unit tests for the round-4ax batch (CUSUM changepoint, burstiness)."""
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ax as q,
+    queries_relational,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -22,8 +23,8 @@ def test_cusum_finds_injected_shift(spark, monkeypatch):
         "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id",
         "event_type", "value",
     )
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
-    r = q.rel_cusum_changepoint(spark, SF).collect()[0]
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
+    r = queries_relational.rel_cusum_changepoint(spark, SF).collect()[0]
     # change_day is TIMESTAMP since r9 (gate-mimic date-class
     # retirement): midnight UTC of the changepoint day
     assert str(r.change_day) == "2024-01-10 00:00:00"
@@ -33,7 +34,7 @@ def test_cusum_finds_injected_shift(spark, monkeypatch):
 
 
 def test_burstiness_bounds(spark):
-    rows = q.text_term_burstiness(spark, SF).collect()
+    rows = queries_text.text_term_burstiness(spark, SF).collect()
     assert rows
     for r in rows:
         assert 0.0 <= r.burstiness <= 1.0

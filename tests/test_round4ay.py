@@ -1,7 +1,8 @@
 """Unit tests for the round-4ay batch (isotropy, seasonality)."""
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4ay as q,
+    queries_relational,
+    queries_similarity,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -14,20 +15,20 @@ def test_isotropy_matches_numpy(spark):
     t = pq.read_table(f"{SF}/embeddings.parquet")
     ids = np.array(t.column("vec_id").to_pylist())
     mat = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
-    sel = mat[ids < q._ISO_CAP]
+    sel = mat[ids < queries_similarity._ISO_CAP]
     n = len(sel)
     norms = np.linalg.norm(sel, axis=1)
     cos = (sel @ sel.T) / np.outer(norms, norms)
     iu = np.triu_indices(n, k=1)
     vals = cos[iu]
-    r = q.emb_isotropy(spark, SF).collect()[0]
+    r = queries_similarity.emb_isotropy(spark, SF).collect()[0]
     assert r.n_pairs == len(vals)
     assert abs(r.mean_cosine - vals.mean()) < 1e-6
     assert abs(r.std_cosine - vals.std()) < 1e-6
 
 
 def test_seasonality_index_averages_to_one(spark):
-    rows = q.rel_seasonality_index(spark, SF).collect()
+    rows = queries_relational.rel_seasonality_index(spark, SF).collect()
     assert rows
     # weighted by n_days, the indices average to exactly 1
     total_days = sum(r.n_days for r in rows)

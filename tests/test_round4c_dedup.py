@@ -9,6 +9,13 @@ from ade_agente_documental_empresarial___miner_a_spark.operators.dedup import (
     incremental_dedup,
     substring_duplicate_spans,
 )
+from ade_agente_documental_empresarial___miner_a_spark.plans import (
+    queries_curation,
+    queries_dedup,
+    queries_graph,
+    queries_ingest,
+    queries_text,
+)
 
 
 def _docs(spark, rows):
@@ -80,11 +87,7 @@ def test_incremental_dedup_plan_has_no_broadcast_of_history(spark):
 
 
 def test_text_normalize_catalog_entry(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4c as q,
-    )
-
-    df = q.text_normalize(spark, "/root/testdata/sf0.001")
+    df = queries_text.text_normalize(spark, "/root/testdata/sf0.001")
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("changed").cast("int")).alias("changed"),
@@ -96,11 +99,7 @@ def test_text_normalize_catalog_entry(spark):
 
 
 def test_graph_pagerank_is_a_distribution(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4c as q,
-    )
-
-    rows = q.graph_pagerank(spark, "/root/testdata/sf0.001").collect()
+    rows = queries_graph.graph_pagerank(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) == 25
     total = sum(r["pagerank"] for r in rows)
     # leaky formulation: mass from dangling nations is dropped, so the
@@ -110,11 +109,7 @@ def test_graph_pagerank_is_a_distribution(spark):
 
 
 def test_trigram_lm_scores_are_negative_logs(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4c as q,
-    )
-
-    df = q.text_trigram_lm(spark, "/root/testdata/sf0.001")
+    df = queries_text.text_trigram_lm(spark, "/root/testdata/sf0.001")
     rows = df.collect()
     assert len(rows) > 0
     assert all(r["avg_logp"] < 0 for r in rows)
@@ -122,11 +117,7 @@ def test_trigram_lm_scores_are_negative_logs(spark):
 
 
 def test_corpus_funnel_is_monotone(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4c as q,
-    )
-
-    rows = q.cur_corpus_funnel(spark, "/root/testdata/sf0.001").collect()
+    rows = queries_curation.cur_corpus_funnel(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) > 0
     for r in rows:
         assert r["n_input"] >= r["n_quality"] >= r["n_unique"] >= 0
@@ -134,12 +125,8 @@ def test_corpus_funnel_is_monotone(spark):
 
 
 def test_format_roundtrips_preserve_rows(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4c as q,
-    )
-
     src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for fn in (q.s9_orc_roundtrip, q.s10_jsonl_roundtrip):
+    for fn in (queries_ingest.s9_orc_roundtrip, queries_ingest.s10_jsonl_roundtrip):
         df = fn(spark, "/root/testdata/sf0.001")
         assert df.count() == src.count()
         assert df.schema == src.select(
@@ -152,9 +139,6 @@ def test_incremental_dedup_bloom_filter_injects_at_scale_shape(spark):
     a shuffle join (the only possibility at corpus scale — emulated by
     disabling auto-broadcast), Spark's runtime bloom-filter injection
     rewrites the probe side with bloom_filter_agg/might_contain."""
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4c as q,
-    )
 
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
@@ -166,7 +150,7 @@ def test_incremental_dedup_bloom_filter_injects_at_scale_shape(spark):
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
-        df = q.dedup_incremental(spark, "/root/testdata/sf0.001")
+        df = queries_dedup.dedup_incremental(spark, "/root/testdata/sf0.001")
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "bloom_filter_agg" in plan
     finally:

@@ -5,14 +5,22 @@ inputs and structural properties on the fixtures)."""
 from pyspark.sql import functions as F
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4d as q,
+    queries_curation,
+    queries_dedup,
+    queries_relational,
+    queries_similarity,
+    queries_streaming,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_weighted_median_reaches_half_weight(spark):
-    rows = {r["l_returnflag"]: r for r in q.rel_weighted_median(spark, SF).collect()}
+    rows = {
+        r["l_returnflag"]: r
+        for r in queries_relational.rel_weighted_median(spark, SF).collect()
+    }
     assert set(rows) == {"A", "N", "R"}
     for r in rows.values():
         assert r["weighted_median_qty"] is not None
@@ -21,7 +29,7 @@ def test_weighted_median_reaches_half_weight(spark):
 
 
 def test_zorder_buckets_are_locality_boxes(spark):
-    rows = q.rel_zorder_keys(spark, SF).collect()
+    rows = queries_relational.rel_zorder_keys(spark, SF).collect()
     assert len(rows) > 1
     for r in rows:
         # each z-bucket must span a narrow box in BOTH dimensions —
@@ -32,7 +40,7 @@ def test_zorder_buckets_are_locality_boxes(spark):
 
 
 def test_cms_estimate_is_one_sided(spark):
-    rows = q.rel_heavy_hitters_cms(spark, SF).collect()
+    rows = queries_relational.rel_heavy_hitters_cms(spark, SF).collect()
     assert len(rows) == 10
     for r in rows:
         assert r["n_cms"] >= r["n_exact"] > 0
@@ -40,7 +48,7 @@ def test_cms_estimate_is_one_sided(spark):
 
 def test_curriculum_phases_are_ordered_by_quality(spark):
     rows = sorted(
-        q.cur_curriculum_phases(spark, SF).collect(), key=lambda r: r["phase"]
+        queries_curation.cur_curriculum_phases(spark, SF).collect(), key=lambda r: r["phase"]
     )
     assert [r["phase"] for r in rows] == [1, 2, 3, 4]
     qualities = [r["avg_quality"] for r in rows]
@@ -58,8 +66,6 @@ def test_containment_is_directional(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    import ade_agente_documental_empresarial___miner_a_spark.plans.queries_round4d as m
-
     # drive the same plan body via a temp parquet dir
     import os
     import tempfile
@@ -68,7 +74,7 @@ def test_containment_is_directional(spark):
     docs.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
     out = {
         (r["doc_a"], r["doc_b"]): r["containment"]
-        for r in m.dedup_containment(spark, d).collect()
+        for r in queries_dedup.dedup_containment(spark, d).collect()
     }
     assert out[(0, 1)] == 1.0
     assert out[(1, 0)] < 1.0
@@ -76,27 +82,19 @@ def test_containment_is_directional(spark):
 
 
 def test_asof_cogrouped_matches_dataframe_asof(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans.queries_ext import (
-        rel_asof_join,
-    )
-
     cg = {
         r["event_id"]: (r["matched_event_id"], r["lag_us"])
-        for r in q.rel_asof_cogrouped(spark, SF).collect()
+        for r in queries_relational.rel_asof_cogrouped(spark, SF).collect()
     }
     df = {
         r["event_id"]: (r["matched_event_id"], r["lag_us"])
-        for r in rel_asof_join(spark, SF).collect()
+        for r in queries_relational.rel_asof_join(spark, SF).collect()
     }
     assert cg == df
 
 
 def test_pca_loading_is_unit_norm(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4e as q5,
-    )
-
-    rows = q5.emb_pca_power(spark, SF).collect()
+    rows = queries_similarity.emb_pca_power(spark, SF).collect()
     assert len(rows) == 64
     norm2 = sum(r["loading"] ** 2 for r in rows)
     # quantized to 12 dp per component -> norm within 1e-9 of 1
@@ -104,13 +102,9 @@ def test_pca_loading_is_unit_norm(spark):
 
 
 def test_pmi_pairs_are_canonical_and_bounded(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4e as q5,
-    )
-
     import math
 
-    rows = q5.text_pmi_pairs(spark, SF).collect()
+    rows = queries_text.text_pmi_pairs(spark, SF).collect()
     assert len(rows) > 0
     n_docs = (
         spark.read.parquet(SF + "/documents.parquet").select("doc_id").count()
@@ -123,21 +117,13 @@ def test_pmi_pairs_are_canonical_and_bounded(spark):
 
 
 def test_anomaly_hours_exceed_two_sigma(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4e as q5,
-    )
-
-    rows = q5.stream_anomaly_hours(spark, SF).collect()
+    rows = queries_streaming.stream_anomaly_hours(spark, SF).collect()
     for r in rows:
         assert abs(r["zscore"]) >= 2.0
 
 
 def test_gap_fill_marks_gaps_and_carries_forward(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4e as q5,
-    )
-
-    rows = q5.rel_gap_fill(spark, SF).collect()
+    rows = queries_relational.rel_gap_fill(spark, SF).collect()
     by_key = {(r["event_type"], str(r["hr"])): r for r in rows}
     assert len(rows) > 0
     # grid is complete: every type covers the same number of hours
@@ -151,12 +137,8 @@ def test_gap_fill_marks_gaps_and_carries_forward(spark):
 
 
 def test_ewma_needs_full_lookback(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4e as q5,
-    )
-
-    gap = q5.rel_gap_fill(spark, SF)
-    ew = q5.rel_ewma_hourly(spark, SF)
+    gap = queries_relational.rel_gap_fill(spark, SF)
+    ew = queries_relational.rel_ewma_hourly(spark, SF)
     n_types = gap.select("event_type").distinct().count()
     # exactly 23 leading rows are dropped per type (full 24-hour lookback)
     assert ew.count() == gap.count() - 23 * n_types
@@ -186,11 +168,7 @@ def test_incremental_dedup_empty_history(spark):
 
 
 def test_ivf_recall_eval_bounds(spark):
-    from ade_agente_documental_empresarial___miner_a_spark.plans import (
-        queries_round4e as q5,
-    )
-
-    rows = q5.sim_ivf_recall(spark, SF).collect()
+    rows = queries_similarity.sim_ivf_recall(spark, SF).collect()
     assert len(rows) == 8  # vec_id % 64 == 3 probes over the 500-vec fixture
     for r in rows:
         assert 0.0 <= r["recall"] <= 1.0

@@ -7,7 +7,9 @@ hand-built inputs and structural properties on the fixtures."""
 from pyspark.sql import functions as F
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4f as q,
+    queries_dedup,
+    queries_relational,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -16,7 +18,7 @@ SF = "/root/testdata/sf0.001"
 def test_udtf_termvec_counts_match_explode(spark):
     """The Python UDTF's per-doc word counts must agree with the
     JVM-side explode/groupBy production path on the same corpus."""
-    out = q.func_udtf_termvec(spark, SF)
+    out = queries_text.func_udtf_termvec(spark, SF)
     from ade_agente_documental_empresarial___miner_a_spark.plans.catalog import (
         table,
     )
@@ -35,7 +37,7 @@ def test_udtf_termvec_counts_match_explode(spark):
 
 
 def test_udtf_termvec_handles_empty_and_null(spark):
-    spark.udtf.register("term_vec_t", q._make_termvec_udtf())
+    spark.udtf.register("term_vec_t", queries_text._make_termvec_udtf())
     spark.createDataFrame(
         [(1, "a b a"), (2, ""), (3, None), (4, "  x ")],
         "doc_id long, text string",
@@ -49,7 +51,7 @@ def test_udtf_termvec_handles_empty_and_null(spark):
 
 
 def test_lateral_topk_is_per_group_topk(spark):
-    rows = q.rel_lateral_topk(spark, SF).collect()
+    rows = queries_relational.rel_lateral_topk(spark, SF).collect()
     by_nation = {}
     for r in rows:
         by_nation.setdefault(r.nation, []).append(r.c_acctbal)
@@ -80,13 +82,13 @@ def test_lateral_topk_matches_window_form(spark):
             F.col("n_name").alias("nation"), "c_custkey", "c_acctbal"
         )
     )
-    out = q.rel_lateral_topk(spark, SF)
+    out = queries_relational.rel_lateral_topk(spark, SF)
     assert out.exceptAll(ref).isEmpty()
     assert ref.exceptAll(out).isEmpty()
 
 
 def test_variant_props_decile_bounds(spark):
-    rows = q.rel_variant_props(spark, SF).collect()
+    rows = queries_relational.rel_variant_props(spark, SF).collect()
     assert rows
     for r in rows:
         assert 0 <= r.k_decile <= 9
@@ -108,7 +110,7 @@ def test_gini_udaf_known_values(spark):
         F.round(F.col("bal") * 100).cast("long").alias("cents"),
         F.col("key").alias("c_custkey"),
     )
-    gini = q._make_gini_udaf()
+    gini = queries_relational._make_gini_udaf()
     got = {
         r.nation: r.g
         for r in df.groupBy("nation")
@@ -121,7 +123,7 @@ def test_gini_udaf_known_values(spark):
 
 
 def test_gini_fixture_range(spark):
-    rows = q.agg_gini_nation(spark, SF).collect()
+    rows = queries_relational.agg_gini_nation(spark, SF).collect()
     assert len(rows) == 25
     for r in rows:
         # acctbal can be negative, so gini can exceed 1, but it must
@@ -130,7 +132,7 @@ def test_gini_fixture_range(spark):
 
 
 def test_semdedup_lower_id_kept(spark):
-    rows = q.dedup_semantic(spark, SF).collect()
+    rows = queries_dedup.dedup_semantic(spark, SF).collect()
     assert len(rows) == 500
     dups = [r for r in rows if r.is_dup]
     assert dups  # fixture contains semantic near-dups
@@ -151,7 +153,7 @@ def test_gini_udaf_equals_mean_absolute_difference(spark):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    gini = q._make_gini_udaf()
+    gini = queries_relational._make_gini_udaf()
 
     @settings(max_examples=8, deadline=None)
     @given(

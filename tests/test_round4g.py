@@ -6,14 +6,15 @@ properties on the fixtures."""
 from pyspark.sql import functions as F
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4g as q,
+    queries_ingest,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_range_frame_counts_trailing_hour(spark):
-    rows = q.rel_range_frame(spark, SF).collect()
+    rows = queries_relational.rel_range_frame(spark, SF).collect()
     assert rows
     by_user = {}
     for r in rows:
@@ -53,7 +54,7 @@ def test_range_frame_peer_rows_share_value(spark):
 
 
 def test_column_stats_shape_and_exactness(spark):
-    rows = {r.col_name: r for r in q.rel_column_stats(spark, SF).collect()}
+    rows = {r.col_name: r for r in queries_relational.rel_column_stats(spark, SF).collect()}
     assert set(rows) == {"l_quantity", "l_extendedprice", "l_discount"}
     n = {r.n for r in rows.values()}
     assert len(n) == 1  # all columns scanned from the same table
@@ -67,12 +68,13 @@ def test_column_stats_shape_and_exactness(spark):
 def test_column_stats_single_pass_plan(spark):
     # the wide aggregate must be ONE scan of lineitem (plus Expand for
     # the multi-distinct), never one scan per column
-    plan = q.rel_column_stats(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    df = queries_relational.rel_column_stats(spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
 
 
 def test_null_semantics_nullsafe_join_and_counts(spark):
-    rows = {r.dim_flag: r for r in q.rel_null_semantics(spark, SF).collect()}
+    rows = {r.dim_flag: r for r in queries_relational.rel_null_semantics(spark, SF).collect()}
     assert set(rows) == {"A", "R", None, "X"}
     # NULL dim row MUST match the nullif'd 'N' group (null-safe =)
     assert rows[None].n_group > 0
@@ -86,7 +88,7 @@ def test_null_semantics_nullsafe_join_and_counts(spark):
 
 
 def test_recursive_ancestors_chain(spark):
-    rows = q.rel_recursive_ancestors(spark, SF).collect()
+    rows = queries_relational.rel_recursive_ancestors(spark, SF).collect()
     # every node appears at depth 0 as its own ancestor
     self_rows = {r.nk for r in rows if r.depth == 0 and r.anc_nk == r.nk}
     assert len(self_rows) == 25
@@ -131,7 +133,7 @@ def test_python_datasource_partitions_and_rows(spark):
 
 
 def test_python_datasource_catalog_entry(spark):
-    rows = q.s11_python_datasource(spark, SF).collect()
+    rows = queries_ingest.s11_python_datasource(spark, SF).collect()
     assert sum(r.n for r in rows) == 10_000
     assert sum(r.i_sum for r in rows) == 10_000 * 9_999 // 2
     # quadratic residues mod 97: exactly (97+1)/2 = 49 classes occur
@@ -139,7 +141,7 @@ def test_python_datasource_catalog_entry(spark):
 
 
 def test_dpp_join_prunes_partitions_dynamically(spark):
-    df = q.rel_dpp_join(spark, SF)
+    df = queries_relational.rel_dpp_join(spark, SF)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the fact scan must carry a runtime pruning subquery, not a static

@@ -3,9 +3,7 @@ DuckDB is covered by tools/parity.py / the driver gate; these pin the
 chars≠bytes semantics on multibyte input (the fixture corpus is ASCII,
 so the distinction only shows here) and the grouped-Arrow contract."""
 
-from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4h as q,
-)
+from ade_agente_documental_empresarial___miner_a_spark.plans import queries_text
 
 SF = "/root/testdata/sf0.001"
 
@@ -18,7 +16,7 @@ def test_mapinarrow_multibyte_chars_vs_bytes(spark):
     out = {
         r.doc_id: (r.n_chars, r.n_bytes)
         for r in df.mapInArrow(
-            q._bytestats_batches,
+            queries_text._bytestats_batches,
             "doc_id long, n_chars long, n_bytes long",
         ).collect()
     }
@@ -31,7 +29,7 @@ def test_mapinarrow_multibyte_chars_vs_bytes(spark):
 def test_applyinarrow_rollup_matches_builtin(spark):
     from pyspark.sql import functions as F
 
-    out = {r.lang: r for r in q.text_arrow_lang_rollup(spark, SF).collect()}
+    out = {r.lang: r for r in queries_text.text_arrow_lang_rollup(spark, SF).collect()}
     from ade_agente_documental_empresarial___miner_a_spark.plans.catalog import (
         table,
     )
@@ -55,7 +53,7 @@ def test_applyinarrow_rollup_matches_builtin(spark):
 
 def test_bytestats_is_map_only(spark):
     plan = (
-        q.text_arrow_bytestats(spark, SF)
+        queries_text.text_arrow_bytestats(spark, SF)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -3,14 +3,15 @@
 import math
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4i as q,
+    queries_ingest,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_regression_moments_bounds_and_builtin_agreement(spark):
-    rows = q.rel_regression_moments(spark, SF).collect()
+    rows = queries_relational.rel_regression_moments(spark, SF).collect()
     assert rows
     from pyspark.sql import functions as F
 
@@ -48,7 +49,7 @@ def test_regression_moments_bounds_and_builtin_agreement(spark):
 
 
 def test_approx_percentile_contract_holds(spark):
-    rows = q.rel_approx_percentile_contract(spark, SF).collect()
+    rows = queries_relational.rel_approx_percentile_contract(spark, SF).collect()
     assert {r.l_returnflag for r in rows} == {"A", "N", "R"}
     for r in rows:
         assert r.approx_ok
@@ -56,7 +57,7 @@ def test_approx_percentile_contract_holds(spark):
 
 
 def test_window_family2_distribution_bounds(spark):
-    rows = q.rel_window_family2(spark, SF).collect()
+    rows = queries_relational.rel_window_family2(spark, SF).collect()
     assert rows
     by_supp = {}
     for r in rows:
@@ -78,7 +79,7 @@ def test_xml_extract_matches_direct_columns(spark):
         table,
     )
 
-    out = {r.status: r for r in q.s12_xml_extract(spark, SF).collect()}
+    out = {r.status: r for r in queries_ingest.s12_xml_extract(spark, SF).collect()}
     ref = {
         r.o_orderstatus: r
         for r in table(spark, SF, "orders")

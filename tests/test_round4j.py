@@ -3,14 +3,17 @@
 from pyspark.sql import functions as F
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4j as q,
+    queries_curation,
+    queries_ingest,
+    queries_relational,
+    queries_similarity,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_schema_evolution_backfills_nulls(spark):
-    rows = q.s13_schema_evolution(spark, SF).collect()
+    rows = queries_ingest.s13_schema_evolution(spark, SF).collect()
     assert rows
     for r in rows:
         assert r.n == r.n_with_priority + r.n_legacy
@@ -28,7 +31,7 @@ def test_union_by_name_allow_missing(spark):
 
 
 def test_full_outer_fixture_structure(spark):
-    rows = q.rel_full_outer_family(spark, SF).collect()
+    rows = queries_relational.rel_full_outer_family(spark, SF).collect()
     assert len(rows) == len({r.nationkey for r in rows})  # key coalesced
     unmatched = [
         r for r in rows if (r.n_cust == 0) != (r.n_supp == 0)
@@ -78,7 +81,7 @@ def test_expectations_flags_and_quarantine(spark):
 
 
 def test_expectations_summary_fixture(spark):
-    rows = {r.rule: r.n for r in q.cur_expectations(spark, SF).collect()}
+    rows = {r.rule: r.n for r in queries_curation.cur_expectations(spark, SF).collect()}
     assert rows["doc_id_present"] == 0
     assert rows["n_chars_consistent"] == 0
     assert rows["lang_supported"] > 0  # the zh quarantine slice
@@ -86,7 +89,7 @@ def test_expectations_summary_fixture(spark):
 
 
 def test_matryoshka_overlap_range_and_selfhit(spark):
-    rows = q.emb_matryoshka_eval(spark, SF).collect()
+    rows = queries_similarity.emb_matryoshka_eval(spark, SF).collect()
     assert len(rows) == 8  # vec_id % 64 == 7 probe set at 500 vectors
     for r in rows:
         assert 0 <= r.n_overlap <= 5
@@ -99,7 +102,7 @@ def test_matryoshka_overlap_range_and_selfhit(spark):
 
 
 def test_bpe_pair_stats_rank_and_counts(spark):
-    rows = q.cur_bpe_pair_stats(spark, SF).collect()
+    rows = queries_curation.cur_bpe_pair_stats(spark, SF).collect()
     assert len(rows) == 20
     assert [r.merge_rank for r in rows] == list(range(1, 21))
     ns = [r.n for r in rows]
@@ -131,7 +134,7 @@ def test_join_strategy_hints_control_physical_plan(spark):
 
 
 def test_collation_ci_merges_cases(spark):
-    rows = q.rel_collation_ci(spark, SF).collect()
+    rows = queries_relational.rel_collation_ci(spark, SF).collect()
     keys = [r.ptype for r in rows]
     assert keys == [k.lower() for k in keys]  # normalized keys
     assert len(keys) == len(set(keys))
@@ -141,7 +144,7 @@ def test_collation_ci_merges_cases(spark):
 
 
 def test_try_arithmetic_null_vs_value(spark):
-    rows = q.rel_try_arithmetic(spark, SF).collect()
+    rows = queries_relational.rel_try_arithmetic(spark, SF).collect()
     for r in rows:
         assert r.per_jumbo is None      # /0 -> NULL, never an error
         assert r.per_normal is not None

@@ -9,14 +9,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4k as q,
+    queries_curation,
+    queries_dedup,
+    queries_relational,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_hof_battery_invariants(spark):
-    rows = q.func_hof_battery(spark, SF).collect()
+    rows = queries_text.func_hof_battery(spark, SF).collect()
     assert rows
     for r in rows:
         # filter-count and exists/forall agree with each other
@@ -64,7 +67,7 @@ def test_mode_is_deterministic_on_ties(spark):
 
 
 def test_chi2_cells_marginals(spark):
-    rows = q.rel_chi2_cells(spark, SF).collect()
+    rows = queries_relational.rel_chi2_cells(spark, SF).collect()
     assert rows
     n = sum(r.obs for r in rows)
     # expected counts are positive and sum to ≤ N (equality only when
@@ -78,7 +81,7 @@ def test_chi2_cells_marginals(spark):
 
 
 def test_representatives_have_best_quality(spark):
-    reps = q.dedup_representatives(spark, SF)
+    reps = queries_dedup.dedup_representatives(spark, SF)
     rows = reps.collect()
     assert rows
     # a representative is a member of its own cluster and n_members >= 2
@@ -90,7 +93,7 @@ def test_representatives_have_best_quality(spark):
 
 def test_vocab_coverage_monotone_and_bounded(spark):
     rows = (
-        q.cur_vocab_coverage(spark, SF)
+        queries_curation.cur_vocab_coverage(spark, SF)
         .orderBy("rank")
         .collect()
     )

@@ -4,7 +4,8 @@ MERGE classification)."""
 from pyspark.sql import functions as F
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4l as q,
+    queries_graph,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -46,7 +47,7 @@ def test_triangles_known_graph(spark):
 
 
 def test_triangles_fixture_nonneg(spark):
-    rows = q.graph_triangles(spark, SF).collect()
+    rows = queries_graph.graph_triangles(spark, SF).collect()
     assert len(rows) == 25  # every nation reported, zero or not
     assert all(r.n_triangles >= 0 for r in rows)
     assert any(r.n_triangles > 0 for r in rows)
@@ -66,7 +67,6 @@ def test_merge_intervals_overlap_rule(spark):
         .select("event_id", "user_id", F.col("s").cast("timestamp").alias("ts"))
         .createOrReplaceTempView("_iv_ev")
     )
-    import ade_agente_documental_empresarial___miner_a_spark.plans.queries_round4l as m
     from pyspark.sql import Window
 
     ev = spark.table("_iv_ev")
@@ -93,7 +93,7 @@ def test_merge_intervals_overlap_rule(spark):
 
 
 def test_merge_intervals_fixture_structure(spark):
-    rows = q.rel_merge_intervals(spark, SF).collect()
+    rows = queries_relational.rel_merge_intervals(spark, SF).collect()
     assert rows
     for r in rows:
         assert r.island_end > r.island_start
@@ -101,7 +101,7 @@ def test_merge_intervals_fixture_structure(spark):
 
 
 def test_upsert_merge_actions_complete(spark):
-    rows = {r.action: r for r in q.rel_upsert_merge(spark, SF).collect()}
+    rows = {r.action: r for r in queries_relational.rel_upsert_merge(spark, SF).collect()}
     assert set(rows) == {"insert", "update", "unchanged", "noop"}
     # inserts came from the disjoint key space: one per %100==7 order
     assert rows["insert"].n_rows >= 1

@@ -6,7 +6,11 @@ import os
 from pyspark.sql import functions as F
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4m as q,
+    queries_curation,
+    queries_dedup,
+    queries_ingest,
+    queries_similarity,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -24,7 +28,7 @@ def test_dynamic_overwrite_touches_only_target_partition(spark, tmp_path):
     repaired = spark.createDataFrame(
         [(2, 40.0, "F")], "k long, v double, status string"
     )
-    with q._dynamic_overwrite(spark):
+    with queries_ingest._dynamic_overwrite(spark):
         repaired.write.mode("overwrite").partitionBy("status").parquet(out)
 
     # sibling partitions survive byte-for-byte (same file names)
@@ -39,13 +43,13 @@ def test_dynamic_overwrite_touches_only_target_partition(spark, tmp_path):
 def test_dynamic_overwrite_restores_conf(spark):
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, "STATIC")
-    with q._dynamic_overwrite(spark):
+    with queries_ingest._dynamic_overwrite(spark):
         assert spark.conf.get(key) == "dynamic"
     assert spark.conf.get(key, "STATIC") == prev
 
 
 def test_oversample_factors(spark):
-    rows = {r.lang: r for r in q.cur_oversample_rare(spark, SF).collect()}
+    rows = {r.lang: r for r in queries_curation.cur_oversample_rare(spark, SF).collect()}
     assert rows
     max_before = max(r.n_before for r in rows.values())
     for r in rows.values():
@@ -71,7 +75,7 @@ def test_mad_is_robust_to_one_outlier(spark):
 
 
 def test_drift_terms_ranked_and_bounded(spark):
-    rows = q.text_drift_terms(spark, SF).collect()
+    rows = queries_text.text_drift_terms(spark, SF).collect()
     assert 0 < len(rows) <= 20
     contribs = [r.kl_contrib for r in rows]
     assert contribs == sorted(contribs, reverse=True)
@@ -84,7 +88,7 @@ def test_drift_terms_ranked_and_bounded(spark):
 
 
 def test_lsh_recall_bounds(spark):
-    r = q.dedup_lsh_recall(spark, SF).collect()[0]
+    r = queries_dedup.dedup_lsh_recall(spark, SF).collect()[0]
     assert r.n_exact > 0
     assert 0 <= r.n_found <= r.n_exact  # verified ⊆ exact by construction
     assert 0.0 <= r.recall <= 1.0
@@ -117,7 +121,7 @@ def test_set_ops_all_multiplicities(spark):
 
 
 def test_ivf_filtered_only_target_label(spark):
-    rows = q.sim_ivf_filtered(spark, SF).collect()
+    rows = queries_similarity.sim_ivf_filtered(spark, SF).collect()
     assert 0 < len(rows) <= 5
     assert all(r.label == 3 for r in rows)
     scores = [r.score for r in rows]

@@ -7,7 +7,9 @@ import random
 from pyspark.sql import functions as F
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4n as q,
+    queries_curation,
+    queries_graph,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -21,7 +23,7 @@ def test_bfs_levels_on_path_graph(spark):
     )
     source = spark.createDataFrame([(1, 0)], "node int, level int")
     got = {
-        r.node: r.level for r in q.bfs_levels(sym, source).collect()
+        r.node: r.level for r in queries_graph.bfs_levels(sym, source).collect()
     }
     assert got == {1: 0, 2: 1, 3: 2, 4: 3}
 
@@ -34,7 +36,7 @@ def test_bfs_levels_respects_max_iter(spark):
     source = spark.createDataFrame([(1, 0)], "node int, level int")
     got = {
         r.node: r.level
-        for r in q.bfs_levels(sym, source, max_iter=2).collect()
+        for r in queries_graph.bfs_levels(sym, source, max_iter=2).collect()
     }
     assert got == {1: 0, 2: 1, 3: 2}  # node 4 is beyond the horizon
 
@@ -79,13 +81,13 @@ def test_skyline_bruteforce_exact(spark):
 
 
 def test_hll_sketch_merge_contract(spark):
-    row = q.rel_hll_sketch_merge(spark, SF).collect()[0]
+    row = queries_relational.rel_hll_sketch_merge(spark, SF).collect()[0]
     assert row.merged_ok and row.global_ok
     assert row.n_shards >= 1 and row.exact_users > 0
 
 
 def test_perplexity_filter_decile_count(spark):
-    rows = q.cur_perplexity_filter(spark, SF).collect()
+    rows = queries_curation.cur_perplexity_filter(spark, SF).collect()
     n = len(rows)
     dropped = sum(1 for r in rows if not r.keep)
     assert dropped == math.ceil(0.1 * n)
@@ -98,12 +100,12 @@ def test_perplexity_filter_decile_count(spark):
 
 def test_bloom_runtime_filter_injected(spark):
     prev = {
-        k: spark.conf.get(k) for k in q._BLOOM_CONFS
+        k: spark.conf.get(k) for k in queries_relational._BLOOM_CONFS
     }
-    for k, v in q._BLOOM_CONFS.items():
+    for k, v in queries_relational._BLOOM_CONFS.items():
         spark.conf.set(k, v)
     try:
-        plan = q._bloom_plan(spark, SF)._jdf.queryExecution().explainString(
+        plan = queries_relational._bloom_plan(spark, SF)._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"
             )
@@ -120,8 +122,8 @@ def test_bloom_runtime_filter_injected(spark):
 
 def test_bloom_entry_restores_confs(spark):
     before = {
-        k: spark.conf.get(k) for k in q._BLOOM_CONFS
+        k: spark.conf.get(k) for k in queries_relational._BLOOM_CONFS
     }
-    q.rel_bloom_runtime_filter(spark, SF).collect()
-    after = {k: spark.conf.get(k) for k in q._BLOOM_CONFS}
+    queries_relational.rel_bloom_runtime_filter(spark, SF).collect()
+    after = {k: spark.conf.get(k) for k in queries_relational._BLOOM_CONFS}
     assert before == after

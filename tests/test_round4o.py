@@ -5,7 +5,8 @@ import glob
 import os
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4o as q,
+    queries_curation,
+    queries_ingest,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -65,7 +66,7 @@ def test_compaction_bounds_file_count(spark, tmp_path):
     n_before = len(glob.glob(os.path.join(src, "*.parquet")))
     assert n_before == 64
 
-    n_parts = q.compact_parquet(
+    n_parts = queries_ingest.compact_parquet(
         spark, src, dst, target_file_bytes=4 * 1024 * 1024
     )
     n_after = len(glob.glob(os.path.join(dst, "*.parquet")))
@@ -79,7 +80,7 @@ def test_compaction_bounds_file_count(spark, tmp_path):
 
 
 def test_winsorize_respects_bounds(spark):
-    out = {r.lang: r for r in q.cur_winsorize(spark, SF).collect()}
+    out = {r.lang: r for r in queries_curation.cur_winsorize(spark, SF).collect()}
     import duckdb
 
     con = duckdb.connect()

@@ -1,19 +1,17 @@
 """Unit tests for the round-4p batch (bucketed zero-shuffle join, outer
 stream-stream interval join)."""
 
-from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4p as q,
-)
+from ade_agente_documental_empresarial___miner_a_spark.plans import queries_relational
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_bucketed_join_plans_without_exchange(spark):
-    prev = {k: spark.conf.get(k) for k in q._NO_BROADCAST}
-    for k, v in q._NO_BROADCAST.items():
+    prev = {k: spark.conf.get(k) for k in queries_relational._NO_BROADCAST}
+    for k, v in queries_relational._NO_BROADCAST.items():
         spark.conf.set(k, v)
     try:
-        plan_df = q._bucketed_join_plan(spark, SF)
+        plan_df = queries_relational._bucketed_join_plan(spark, SF)
         plan_df.collect()
         plan = plan_df._jdf.queryExecution().executedPlan().toString()
     finally:
@@ -33,7 +31,7 @@ def test_bucketed_join_plans_without_exchange(spark):
 
 
 def test_bucketed_entry_restores_confs(spark):
-    before = {k: spark.conf.get(k) for k in q._NO_BROADCAST}
-    q.rel_bucketed_join(spark, SF).collect()
-    after = {k: spark.conf.get(k) for k in q._NO_BROADCAST}
+    before = {k: spark.conf.get(k) for k in queries_relational._NO_BROADCAST}
+    queries_relational.rel_bucketed_join(spark, SF).collect()
+    after = {k: spark.conf.get(k) for k in queries_relational._NO_BROADCAST}
     assert before == after

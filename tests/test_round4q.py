@@ -5,7 +5,8 @@ import duckdb
 from pyspark.sql import functions as F
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4q as q,
+    queries_graph,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -73,7 +74,7 @@ def test_higher_moments_match_numpy(spark):
     import numpy as np
 
     out = {
-        r.l_returnflag: r for r in q.rel_higher_moments(spark, SF).collect()
+        r.l_returnflag: r for r in queries_relational.rel_higher_moments(spark, SF).collect()
     }
     con = duckdb.connect()
     rows = con.execute(
@@ -109,7 +110,7 @@ def test_bellman_ford_prefers_cheap_two_hop(spark):
     )
     got = {
         r.node: float(r.dist)
-        for r in q.bellman_ford(edges, dist0, rounds=4).collect()
+        for r in queries_graph.bellman_ford(edges, dist0, rounds=4).collect()
     }
     assert got == {0: 0.0, 1: 3.0, 2: 7.0, 3: 8.0}
 
@@ -124,6 +125,6 @@ def test_bellman_ford_round_limit(spark):
     )
     got = {
         r.node: float(r.dist)
-        for r in q.bellman_ford(edges, dist0, rounds=2).collect()
+        for r in queries_graph.bellman_ford(edges, dist0, rounds=2).collect()
     }
     assert got == {0: 0.0, 1: 1.0, 2: 2.0}  # node 3 needs a 3rd round

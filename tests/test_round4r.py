@@ -7,7 +7,9 @@ import os
 from pyspark.sql import functions as F
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4r as q,
+    queries_curation,
+    queries_ingest,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -20,7 +22,7 @@ def test_incremental_mv_equals_full_recompute(spark):
 
     merged = {
         r.event_type: (r.n_events, r.total_value)
-        for r in q.rel_incremental_mv(spark, SF).collect()
+        for r in queries_relational.rel_incremental_mv(spark, SF).collect()
     }
     full = {
         r.event_type: (r.n, r.s)
@@ -38,10 +40,10 @@ def test_incremental_mv_equals_full_recompute(spark):
 
 
 def test_corrupt_records_counts(spark):
-    row = q.s17_corrupt_records(spark, SF).collect()[0]
-    assert row.n_good == len(q._GOOD_ROWS)
-    assert row.n_corrupt == len(q._BAD_LINES)
-    assert row.good_value_sum == sum(v for _, v in q._GOOD_ROWS)
+    row = queries_ingest.s17_corrupt_records(spark, SF).collect()[0]
+    assert row.n_good == len(queries_ingest._GOOD_ROWS)
+    assert row.n_corrupt == len(queries_ingest._BAD_LINES)
+    assert row.good_value_sum == sum(v for _, v in queries_ingest._GOOD_ROWS)
 
 
 def test_gdpr_delete_touches_only_affected_partitions(spark, tmp_path):
@@ -59,7 +61,7 @@ def test_gdpr_delete_touches_only_affected_partitions(spark, tmp_path):
         for p in ("p0", "p2")
     }
     forget = F.col("doc_id").isin(7, 13)
-    q.gdpr_delete(spark, lake, forget, partition_col="source")
+    queries_curation.gdpr_delete(spark, lake, forget, partition_col="source")
 
     after = spark.read.parquet(lake)
     ids = {r.doc_id for r in after.collect()}
@@ -82,6 +84,6 @@ def test_gdpr_delete_is_idempotent(spark, tmp_path):
         "source"
     ).parquet(lake)
     forget = F.col("doc_id") == 4
-    q.gdpr_delete(spark, lake, forget, partition_col="source")
-    q.gdpr_delete(spark, lake, forget, partition_col="source")
+    queries_curation.gdpr_delete(spark, lake, forget, partition_col="source")
+    queries_curation.gdpr_delete(spark, lake, forget, partition_col="source")
     assert spark.read.parquet(lake).count() == 9

@@ -2,7 +2,8 @@
 shuffle, mixture weights)."""
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4s as q,
+    queries_curation,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -28,7 +29,7 @@ def test_pit_join_sees_version_valid_at_event_time(spark, monkeypatch):
     monkeypatch.setattr(catalog, "events_table", lambda _s, _sf: ev)
     got = {
         r.purchase_id: (r.attr_version, r.attr_value)
-        for r in q.rel_scd2_pit_join(spark, SF).collect()
+        for r in queries_relational.rel_scd2_pit_join(spark, SF).collect()
     }
     assert got == {3: (None, None), 4: (1, 100.0), 5: (2, 200.0)}
 
@@ -36,11 +37,11 @@ def test_pit_join_sees_version_valid_at_event_time(spark, monkeypatch):
 def test_epoch_shuffle_is_reproducible_and_partitioning(spark):
     a = {
         r.shard: (r.n_docs, r.id_sum, r.lead_doc)
-        for r in q.cur_epoch_shuffle(spark, SF).collect()
+        for r in queries_curation.cur_epoch_shuffle(spark, SF).collect()
     }
     b = {
         r.shard: (r.n_docs, r.id_sum, r.lead_doc)
-        for r in q.cur_epoch_shuffle(spark, SF).collect()
+        for r in queries_curation.cur_epoch_shuffle(spark, SF).collect()
     }
     assert a == b  # same epoch -> byte-identical deal
     import duckdb
@@ -53,24 +54,24 @@ def test_epoch_shuffle_is_reproducible_and_partitioning(spark):
 
 def test_epoch_change_redeals(spark):
     base = {
-        r.shard: r.id_sum for r in q.cur_epoch_shuffle(spark, SF).collect()
+        r.shard: r.id_sum for r in queries_curation.cur_epoch_shuffle(spark, SF).collect()
     }
-    orig = q._EPOCH
+    orig = queries_curation._EPOCH
     try:
-        q._EPOCH = orig + 1
+        queries_curation._EPOCH = orig + 1
         # rebuild the query with the new epoch literal (module-level
         # constant is read at call time inside the function body)
         other = {
             r.shard: r.id_sum
-            for r in q.cur_epoch_shuffle(spark, SF).collect()
+            for r in queries_curation.cur_epoch_shuffle(spark, SF).collect()
         }
     finally:
-        q._EPOCH = orig
+        queries_curation._EPOCH = orig
     assert other != base  # a different epoch deals different shards
 
 
 def test_mixture_weights_bounds(spark):
-    rows = q.cur_mixture_weights(spark, SF).collect()
+    rows = queries_curation.cur_mixture_weights(spark, SF).collect()
     total = sum(r.n_tokens for r in rows)
     target = total / len(rows)
     for r in rows:

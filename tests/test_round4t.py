@@ -3,9 +3,7 @@ equi-depth histogram)."""
 
 from pyspark.sql import functions as F
 
-from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4t as q,
-)
+from ade_agente_documental_empresarial___miner_a_spark.plans import queries_relational
 
 SF = "/root/testdata/sf0.001"
 
@@ -27,10 +25,10 @@ def test_longest_streak_literal(spark, monkeypatch):
         "event_id long, ts string, user_id long",
     ).selectExpr("event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id")
     # 4t binds events_table at module import time — patch ITS binding
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
     got = {
         r.user_id: (r.longest_streak, str(r.first_best_start))
-        for r in q.rel_longest_streak(spark, SF).collect()
+        for r in queries_relational.rel_longest_streak(spark, SF).collect()
     }
     assert got == {
         1: (3, "2024-01-01"),
@@ -39,7 +37,7 @@ def test_longest_streak_literal(spark, monkeypatch):
 
 
 def test_basket_pairs_bounded_and_symmetric_free(spark):
-    rows = q.rel_basket_pairs(spark, SF).collect()
+    rows = queries_relational.rel_basket_pairs(spark, SF).collect()
     assert len(rows) <= 15
     for r in rows:
         assert r.brand_a < r.brand_b  # canonical ordering, no mirrors
@@ -49,7 +47,7 @@ def test_basket_pairs_bounded_and_symmetric_free(spark):
 
 
 def test_equidepth_hist_depth_balanced(spark):
-    rows = q.rel_equidepth_hist(spark, SF).collect()
+    rows = queries_relational.rel_equidepth_hist(spark, SF).collect()
     assert {r.decile for r in rows} == set(range(1, 11))
     counts = [r.n_orders for r in rows]
     assert max(counts) - min(counts) <= 1  # equi-DEPTH

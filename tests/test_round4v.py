@@ -4,7 +4,8 @@ time-to-convert, CSV interop)."""
 import glob
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4v as q,
+    queries_ingest,
+    queries_relational,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -30,8 +31,11 @@ def test_rolling_corr_perfect_linear(spark, monkeypatch):
         eid += 1
         rows.append((eid, f"2024-01-{day:02d} 11:00:00", 1, "view", float(2 * day + 3)))
     ev = _events(spark, rows)
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
-    out = {str(r.d): (r.n_days, r.corr_7d) for r in q.rel_rolling_corr(spark, SF).collect()}
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
+    out = {
+        str(r.d): (r.n_days, r.corr_7d)
+        for r in queries_relational.rel_rolling_corr(spark, SF).collect()
+    }
     assert out["2024-01-01"][0] == 1
     assert out["2024-01-01"][1] is None  # single point: zero variance
     assert out["2024-01-05"][0] == 5
@@ -47,8 +51,8 @@ def test_time_to_convert_literal(spark, monkeypatch):
         (3, "2024-01-01 12:00:00", 5, "purchase", 1.0),   # 7200 s, same view
         (4, "2024-01-01 09:00:00", 6, "purchase", 1.0),   # no prior view
     ])
-    monkeypatch.setattr(q, "events_table", lambda _s, _sf: ev)
-    rows = q.rel_time_to_convert(spark, SF).collect()
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
+    rows = queries_relational.rel_time_to_convert(spark, SF).collect()
     assert len(rows) == 1  # only cohort 5%4=1 converts with a prior view
     r = rows[0]
     assert r.cohort == 1 and r.n_conversions == 2
@@ -57,9 +61,9 @@ def test_time_to_convert_literal(spark, monkeypatch):
 
 
 def test_csv_interop_quotes_in_files(spark):
-    df = q.s18_csv_interop(spark, SF)
+    df = queries_ingest.s18_csv_interop(spark, SF)
     assert df.count() > 0
-    csv_dir = q._csv_dir(SF)
+    csv_dir = queries_ingest._csv_dir(SF)
     raw = ""
     for p in glob.glob(csv_dir + "/*.csv"):
         with open(p) as f:

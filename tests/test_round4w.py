@@ -6,25 +6,26 @@ import hashlib
 import duckdb
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4w as q,
+    queries_curation,
+    queries_text,
 )
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_k_anonymity_flags_small_groups(spark):
-    rows = q.cur_k_anonymity(spark, SF).collect()
+    rows = queries_curation.cur_k_anonymity(spark, SF).collect()
     assert rows
     for r in rows:
         assert r.min_group_size >= 1
-        if r.min_group_size >= q._K_ANON:
+        if r.min_group_size >= queries_curation._K_ANON:
             assert r.n_below_k == 0
         else:
             assert r.n_below_k >= 1
 
 
 def test_release_manifest_digest_recomputable(spark):
-    out = {r.source: r for r in q.cur_release_manifest(spark, SF).collect()}
+    out = {r.source: r for r in queries_curation.cur_release_manifest(spark, SF).collect()}
     ids = duckdb.sql(
         f"""SELECT source, list(doc_id ORDER BY doc_id)
             FROM read_parquet('{SF}/documents.parquet') GROUP BY source"""
@@ -38,7 +39,7 @@ def test_release_manifest_digest_recomputable(spark):
 
 
 def test_unicode_battery_semantics(spark):
-    got = {r.row_id: r for r in q.func_unicode_battery(spark, SF).collect()}
+    got = {r.row_id: r for r in queries_text.func_unicode_battery(spark, SF).collect()}
     # codepoints vs bytes on multibyte rows
     assert got[2].n_codepoints == len("café crème")
     assert got[2].n_bytes == len("café crème".encode())

@@ -5,7 +5,8 @@ import numpy as np
 import pyarrow.parquet as pq
 
 from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4y as q,
+    queries_relational,
+    queries_similarity,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -18,8 +19,8 @@ def test_hard_negatives_are_cross_label_argmax(spark):
     mat = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
     norms = np.linalg.norm(mat, axis=1)
 
-    out = {r.anchor_id: r for r in q.emb_hard_negatives(spark, SF).collect()}
-    cand_mask = ids < q._CAND_CAP
+    out = {r.anchor_id: r for r in queries_similarity.emb_hard_negatives(spark, SF).collect()}
+    cand_mask = ids < queries_similarity._CAND_CAP
     for aid in list(out)[:8]:
         r = out[aid]
         ai = np.where(ids == aid)[0][0]
@@ -33,7 +34,7 @@ def test_hard_negatives_are_cross_label_argmax(spark):
 
 
 def test_quantile_normalize_range_and_order(spark):
-    rows = q.rel_quantile_normalize(spark, SF).collect()
+    rows = queries_relational.rel_quantile_normalize(spark, SF).collect()
     by_source = {}
     for r in rows:
         by_source.setdefault(r.source, []).append(r)

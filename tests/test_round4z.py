@@ -3,9 +3,7 @@
 import numpy as np
 import pyarrow.parquet as pq
 
-from ade_agente_documental_empresarial___miner_a_spark.plans import (
-    queries_round4z as q,
-)
+from ade_agente_documental_empresarial___miner_a_spark.plans import queries_similarity
 
 SF = "/root/testdata/sf0.001"
 
@@ -15,8 +13,8 @@ def test_mips_and_cosine_tops_match_numpy(spark):
     ids = np.array(t.column("vec_id").to_pylist())
     mat = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
     norms = np.linalg.norm(mat, axis=1)
-    out = {r.anchor_id: r for r in q.emb_mips_vs_cosine(spark, SF).collect()}
-    cand = (ids < q._MIPS_CANDS)
+    out = {r.anchor_id: r for r in queries_similarity.emb_mips_vs_cosine(spark, SF).collect()}
+    cand = (ids < queries_similarity._MIPS_CANDS)
     for aid in list(out)[:6]:
         ai = np.where(ids == aid)[0][0]
         dots = mat @ mat[ai]

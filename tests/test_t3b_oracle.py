@@ -1,6 +1,6 @@
 """Pins for the t3b_chunk_long_docs exact oracle (VERDICT r5 task 4).
 
-The DuckDB oracle in ``plans/queries_ext.py`` replaces the recursive
+The DuckDB oracle in ``plans/queries_reference.py`` replaces the recursive
 splitter with a closed-form greedy word-merge walk. That reduction is
 valid only while the input text (a) contains none of the higher-priority
 separators ('\\n\\n', '\\n', '.') and (b) has no doubled / leading /

@@ -9,10 +9,12 @@ separator, greedily merge small pieces up to ``chunk_size`` keeping
 ``chunk_overlap`` trailing characters; separators are kept attached to the
 start of the following piece) as a pure function — no network, no state.
 
-Spark integration: an Arrow-batched ``pandas_udf`` returning
-``ARRAY<STRING>`` followed by ``posexplode`` — one Python boundary, batched,
-embarrassingly parallel per row. At 100 TB the chunker scales linearly with
-input partitions; there is no shuffle.
+Spark integration: the index build (``plans/pipeline.build_chunks``)
+calls the splitter inside its fused chunk-and-embed ``mapInArrow`` pass.
+``chunk_sections`` is the standalone operator for other callers: an
+Arrow-batched ``pandas_udf`` returning ``ARRAY<STRING>`` followed by
+``posexplode`` — one Python boundary, batched, embarrassingly parallel per
+row. At 100 TB the chunker scales linearly with input partitions.
 """
 
 from __future__ import annotations

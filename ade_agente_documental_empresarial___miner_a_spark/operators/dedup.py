@@ -57,14 +57,16 @@ def spread(df: DataFrame, *by: str) -> DataFrame:
     shuffle moves only the small input, not the exploded intermediate.
 
     When ``by`` columns are given, hash-partition on them instead of
-    round-robin. Explode/Generate preserves the partitioning, so a
-    downstream ``groupBy`` / ``Window.partitionBy`` whose keys include
-    ``by`` needs NO second exchange — the big exploded intermediate
-    never shuffles (HashPartitioning on a subset of the grouping keys
-    satisfies ClusteredDistribution). Measured 2.9x on minhash
-    signatures at sf0.1. Only safe when ``by`` is high-cardinality and
-    unskewed (doc_id is unique — ideal); round-robin remains the
-    default for arbitrary keys.
+    round-robin. Explode/Generate, Project and Filter preserve the
+    partitioning, so a downstream ``groupBy`` / ``Window.partitionBy``
+    whose keys include ``by`` needs no second exchange — the big
+    exploded intermediate never shuffles (HashPartitioning on a subset
+    of the grouping keys satisfies ClusteredDistribution). Measured 2.9x
+    on minhash signatures at sf0.1. This does NOT hold past a Python
+    UDF (``ArrowEvalPython``): it reports no output partitioning, so a
+    window after it shuffles again. Only safe when ``by`` is
+    high-cardinality and unskewed (doc_id is unique — ideal); round-robin
+    remains the default for arbitrary keys.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if by:
@@ -372,7 +374,9 @@ def _verify_jaccard(
                 - F.col("n_common")
             ).cast("double"),
         )
-        .where(F.col("jaccard") >= threshold)
+        # a pair that shares no shingle is never a near-duplicate, even
+        # at threshold 0.0
+        .where((F.col("n_common") > 0) & (F.col("jaccard") >= threshold))
         .select("doc_a", "doc_b", "n_common", "jaccard")
     )
 

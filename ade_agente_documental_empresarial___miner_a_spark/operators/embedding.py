@@ -8,12 +8,18 @@ with md5(seed:token) to a bucket and a sign, accumulated, then
 L2-normalized. A production deployment swaps in a service-backed
 ``mapInPandas`` embedder with identical schema.
 
-The UDF is Arrow-batched (``pandas_udf``); embedding is per-row map work —
-no shuffle, scales linearly with partitions at 100 TB.
+Embedding is per-row map work — no shuffle, scales linearly with
+partitions at 100 TB. Two Arrow-batched boundaries call one core,
+``embed_vector``: the ``pandas_udf`` of ``embed_text_udf`` /
+``with_embeddings``, and the index build's fused chunk-and-embed pass
+(``plans/pipeline.build_chunks``). The core caches each token's
+md5 → (slot, sign) step: a corpus repeats a few thousand distinct tokens
+over a hundred thousand token occurrences.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import numpy as np
@@ -26,19 +32,32 @@ DEFAULT_DIM = 64  # matches the embeddings fixture (ada-002 would be 1536)
 DEFAULT_SEED = 42
 
 
-def embed_one(text: str, dim: int = DEFAULT_DIM, seed: int = DEFAULT_SEED) -> list[float]:
-    """Deterministic hashing-projection embedding of one string."""
-    vec = np.zeros(dim, dtype=np.float64)
+@functools.lru_cache(maxsize=1 << 16)
+def _token_slot(tok: str, dim: int, seed: int) -> tuple[int, float]:
+    """md5(seed:token) → (bucket, sign) of one token."""
+    h = hashlib.md5(f"{seed}:{tok}".encode("utf-8")).digest()
+    return int.from_bytes(h[:4], "little") % dim, 1.0 if h[4] & 1 else -1.0
+
+
+def embed_vector(text: str, dim: int = DEFAULT_DIM, seed: int = DEFAULT_SEED) -> np.ndarray:
+    """Deterministic hashing-projection embedding of one string, as a
+    float32 vector. The ±1 sums are integers, so summing them in Python
+    floats is exact and the vector does not depend on token order."""
+    acc = [0.0] * dim
     if text:
         for tok in text.lower().split():
-            h = hashlib.md5(f"{seed}:{tok}".encode("utf-8")).digest()
-            idx = int.from_bytes(h[:4], "little") % dim
-            sign = 1.0 if h[4] & 1 else -1.0
-            vec[idx] += sign
+            idx, sign = _token_slot(tok, dim, seed)
+            acc[idx] += sign
+    vec = np.array(acc)
     n = float(np.linalg.norm(vec))
     if n > 0:
         vec = vec / n
-    return [float(x) for x in vec.astype(np.float32)]
+    return vec.astype(np.float32)
+
+
+def embed_one(text: str, dim: int = DEFAULT_DIM, seed: int = DEFAULT_SEED) -> list[float]:
+    """Deterministic hashing-projection embedding of one string."""
+    return embed_vector(text, dim, seed).tolist()
 
 
 def embed_text_udf(dim: int = DEFAULT_DIM, seed: int = DEFAULT_SEED):

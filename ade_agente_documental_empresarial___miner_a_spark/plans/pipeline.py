@@ -3,22 +3,72 @@
 E1 (ingest/index build, ``micro-infobot/app.py:110-131, 286-287``):
 documents → paragraph split (T1) → section forward-fill (T2) → recursive
 chunking (T3) → deterministic embedding (T5) → the ``chunks`` table, which
-*is* the vector index (SURVEY §1.3).
+*is* the vector index (SURVEY §1.3). T3 and T5 run as one Arrow-batched
+Python pass over the section window's partitions.
 
 E3 (scored inspection, app.py:306-328): scored top-k + A4 normalization.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, FloatType, IntegerType, StringType, StructField, StructType,
+)
 
 from ..functions.exactmath import dblround
 
-from ..operators.chunking import chunk_sections
-from ..operators.embedding import embed_one, with_embeddings
+# chunk_sections and with_embeddings are the standalone T3/T5 operators;
+# they stay importable here because callers trace the index-build layers
+# by these names
+from ..operators.chunking import RecursiveCharacterSplitter, chunk_sections  # noqa: F401
+from ..operators.dedup import spread
+from ..operators.embedding import embed_one, embed_vector, with_embeddings  # noqa: F401
 from ..operators.sectioning import assign_sections
 from ..operators.similarity import normalize_scores, topk_similar
+
+
+def _chunk_and_embed(dim: int | None):
+    """The fused T3+T5 pass for ``mapInArrow``: split each paragraph row
+    into chunks, number the chunks of each doc 1, 2, ... (``chunk_seq``)
+    and, unless ``dim`` is None, embed each chunk.
+
+    Rows must arrive grouped by doc_id and in para_pos order within a
+    doc; the counter carries over Arrow batch boundaries, so a doc may
+    straddle batches. Pass-through columns are gathered with ``take``,
+    which keeps their Arrow types (a NULL doc_id stays NULL)."""
+
+    def run(batches):
+        sp = RecursiveCharacterSplitter()
+        doc, seq = object(), 0  # no doc seen yet
+        for b in batches:
+            src, chunk_pos, chunk_seq, texts = [], [], [], []
+            ids = b.column("doc_id").to_pylist()
+            paras = b.column("paragraph").to_pylist()
+            for row, (d, para) in enumerate(zip(ids, paras)):
+                if d != doc:
+                    doc, seq = d, 0
+                for pos, text in enumerate(sp.split_text(para)):
+                    seq += 1
+                    src.append(row)
+                    chunk_pos.append(pos)
+                    chunk_seq.append(seq)
+                    texts.append(text)
+            take = pa.array(src, pa.int64())
+            out = {c: b.column(c).take(take) for c in ("doc_id", "section", "para_pos")}
+            out["chunk_pos"] = pa.array(chunk_pos, pa.int32())
+            out["chunk_seq"] = pa.array(chunk_seq, pa.int32())
+            out["text"] = pa.array(texts, pa.string())
+            if dim is not None:
+                flat = np.array([embed_vector(t, dim) for t in texts], np.float32).ravel()
+                offsets = pa.array(np.arange(0, flat.size + 1, dim, dtype=np.int32))
+                out["embedding"] = pa.ListArray.from_arrays(offsets, pa.array(flat))
+            yield pa.RecordBatch.from_pydict(out)
+
+    return run
 
 
 def build_chunks(
@@ -29,18 +79,35 @@ def build_chunks(
 ) -> DataFrame:
     """E1 — the full index build. Returns the ``chunks`` table
     (chunk_id, doc_id, section, para_pos, chunk_pos, text[, embedding]).
+
+    The documents are hash-spread on doc_id once; the section window
+    reuses that partitioning, so the plan holds ONE Exchange and it moves
+    document rows only. Chunking (``RecursiveCharacterSplitter``), the
+    per-doc chunk numbering and embedding (``embed_vector``) then run as
+    one ``mapInArrow`` pass over the window's partitions, which arrive
+    in (doc_id, para_pos) order. ``chunk_id`` = doc_id · 10⁶ + the chunk's
+    1-based rank in (para_pos, chunk_pos) order within its doc.
     """
-    sectioned = assign_sections(documents, text_col)
-    chunks = chunk_sections(sectioned)
-    w = Window.partitionBy("doc_id").orderBy("para_pos", "chunk_pos")
-    chunks = chunks.withColumn(
-        "chunk_seq", F.row_number().over(w)
+    docs = spread(documents.select("doc_id", text_col), "doc_id")
+    # the window already sorts each partition this way, so Catalyst drops
+    # this sort; it states the order the pass depends on
+    sectioned = assign_sections(docs, text_col).sortWithinPartitions(
+        "doc_id", "para_pos"
+    )
+    fields = [sectioned.schema[c] for c in ("doc_id", "section", "para_pos")]
+    fields += [
+        StructField("chunk_pos", IntegerType(), False),
+        StructField("chunk_seq", IntegerType(), False),
+        StructField("text", StringType()),
+    ]
+    if with_embedding:
+        fields.append(StructField("embedding", ArrayType(FloatType())))
+    chunks = sectioned.mapInArrow(
+        _chunk_and_embed(dim if with_embedding else None), StructType(fields)
     ).withColumn(
         # globally unique, deterministic chunk id
         "chunk_id", F.col("doc_id") * F.lit(1_000_000) + F.col("chunk_seq")
     )
-    if with_embedding:
-        chunks = with_embeddings(chunks, "text", dim=dim)
     return chunks.select(
         "chunk_id", "doc_id", "section", "para_pos", "chunk_pos", "text",
         *(["embedding"] if with_embedding else []),

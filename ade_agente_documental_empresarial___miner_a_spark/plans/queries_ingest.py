@@ -38,7 +38,7 @@ from ..operators.chunking import chunk_sections
 from ..operators.sectioning import assign_sections
 from ..session import CONF_DEFAULTS, config_source
 from ..sources.extract import binary_scan, csv_scan, extract_text
-from .catalog import _source_tag, duck_ev, register, table
+from .catalog import _source_tag, duck_ev, events_table, register, table
 
 
 FIXTURE_DIR = os.path.abspath(
@@ -272,7 +272,6 @@ def _ensure_partitioned_events(spark: SparkSession, sf: str) -> str:
     import tempfile
 
     from ..sources.layout import write_partitioned
-    from .catalog import events_table
 
     out = os.path.join(
         tempfile.gettempdir(),

@@ -874,7 +874,7 @@ def s6_transcript_reconstruct(spark: SparkSession, sf: str) -> DataFrame:
 # EVENT level — one user-partitioned window + one groupBy, no
 # session⋈event range join. DECIMAL cost sums stay order-insensitive.
 def _register_chat_session_costs():
-    from .catalog import DUCK_EVENTS, events_table
+    from .catalog import DUCK_EVENTS
 
     @register(
         "chat_session_costs",

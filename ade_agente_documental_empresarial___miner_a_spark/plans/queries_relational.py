@@ -1231,8 +1231,6 @@ FROM events
 GROUP BY event_type, k_decile""",
 )
 def rel_variant_props(spark: SparkSession, sf: str) -> DataFrame:
-    from .catalog import events_table
-
     ev = events_table(spark, sf)
     v = ev.select(
         "event_type", F.parse_json(F.col("props")).alias("pv")
@@ -2799,8 +2797,6 @@ FROM facts f LEFT JOIN dim d
 def rel_scd2_pit_join(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from .catalog import events_table
-
     ev = events_table(spark, sf)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     dim = (
@@ -3791,8 +3787,6 @@ FROM ev"""
 
 @register("rel_multiband_counts", _band_sql())
 def rel_multiband_counts(spark: SparkSession, sf: str) -> DataFrame:
-    from .catalog import events_table
-
     ev = events_table(spark, sf)
     aggs = [F.count(F.lit(1)).alias("n_total")]
     for name, h0, h1, lo, hi in _BANDS:
@@ -4594,8 +4588,6 @@ SELECT CAST(n AS BIGINT) AS n_users,
 FROM m""",
 )
 def rel_purchase_dispersion(spark: SparkSession, sf: str) -> DataFrame:
-    from .catalog import events_table
-
     ev = events_table(spark, sf).select("user_id", "event_type")
     counts = ev.groupBy("user_id").agg(
         F.sum(

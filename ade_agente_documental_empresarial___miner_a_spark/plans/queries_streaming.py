@@ -532,8 +532,6 @@ FROM events
 GROUP BY user_id""",
 )
 def stream_tws_type_counts(spark: SparkSession, sf: str) -> DataFrame:
-    from .catalog import events_table
-
     return (
         events_table(spark, sf)
         .groupBy("user_id")

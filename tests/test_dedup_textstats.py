@@ -249,3 +249,27 @@ def test_lsh_verified_materialized_mode_matches_pipelined(spark, monkeypatch):
     # literal DataFrames are tiny: the default (auto) path materializes
     materialized_v = {tuple(r) for r in lsh_verified_pairs(df).collect()}
     assert pipelined_v == materialized_v and pipelined_v
+
+
+def test_verify_jaccard_threshold_zero_drops_disjoint_pairs(spark):
+    """At threshold 0.0 every candidate passes ``jaccard >= t``, so the
+    verify step itself must drop a candidate pair that shares no shingle.
+    The pair list is built by hand: LSH would rarely propose such a pair."""
+    from ade_agente_documental_empresarial___miner_a_spark.operators.dedup import (
+        _verify_jaccard,
+        word_shingles,
+    )
+
+    df = docs(
+        spark,
+        [
+            (1, "alpha beta gamma delta", "en"),
+            (2, "alpha beta gamma omega", "en"),
+            (3, "one two three four", "en"),
+        ],
+    )
+    arrs = df.select("doc_id", word_shingles(F.col("text")).alias("sh_arr"))
+    cands = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "doc_a long, doc_b long")
+    got = {(r.doc_a, r.doc_b): r.n_common
+           for r in _verify_jaccard(cands, arrs, "doc_id", 0.0).collect()}
+    assert got == {(1, 2): 2}

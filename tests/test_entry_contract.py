@@ -209,3 +209,31 @@ def test_catalog_modules_by_domain():
         if re.match(r"queries_(round\w*|ext)\.py$", f)
     ]
     assert leftovers == []
+
+
+def test_catalog_entries_read_events_table_from_their_module():
+    """Tests swap an entry's events with ``monkeypatch.setattr(<module>,
+    "events_table", ...)``. A function that re-imports ``events_table``
+    from ``.catalog`` binds the catalog's copy and misses that swap, so
+    every catalog module imports it once, at the top."""
+    import ast
+
+    from ade_agente_documental_empresarial___miner_a_spark.plans import catalog
+
+    plans = os.path.dirname(catalog.__file__)
+    local = []
+    for f in sorted(os.listdir(plans)):
+        if not f.startswith("queries_"):
+            continue
+        with open(os.path.join(plans, f)) as fh:
+            tree = ast.parse(fh.read())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            local += [
+                f"{f}:{node.lineno}"
+                for node in ast.walk(fn)
+                if isinstance(node, ast.ImportFrom)
+                and any(a.name == "events_table" for a in node.names)
+            ]
+    assert local == []

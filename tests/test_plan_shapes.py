@@ -120,3 +120,25 @@ def test_headline_legs_ban_row_python(spark, sf_dir):
 def test_map_only_entries_have_no_exchange(spark, sf_dir, name):
     plan = _plan(spark, sf_dir, name)
     assert "Exchange" not in plan, f"{name}: map-only contract broken"
+
+
+def test_build_chunks_one_exchange_one_python_pass(spark, sf_dir):
+    """The index build spreads the documents on doc_id once: the section
+    window reuses that partitioning, and chunking, chunk numbering and
+    embedding run as ONE Arrow-batched map pass. A second Exchange or a
+    per-column ArrowEvalPython here means a layer boundary came back."""
+    from ade_agente_documental_empresarial___miner_a_spark.plans.catalog import table
+    from ade_agente_documental_empresarial___miner_a_spark.plans.pipeline import (
+        build_chunks,
+    )
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    plan = build_chunks(docs)._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange ", plan)) == 1
+    python = re.findall(
+        r"\b(MapInArrow|MapInPandas|ArrowEvalPython|BatchEvalPython"
+        r"|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas)\b",
+        plan,
+    )
+    assert python == ["MapInArrow"]
+    assert "Exchange hashpartitioning(doc_id" in plan

@@ -24,9 +24,7 @@ def test_pit_join_sees_version_valid_at_event_time(spark, monkeypatch):
         "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id",
         "event_type", "value",
     )
-    from ade_agente_documental_empresarial___miner_a_spark.plans import catalog
-
-    monkeypatch.setattr(catalog, "events_table", lambda _s, _sf: ev)
+    monkeypatch.setattr(queries_relational, "events_table", lambda _s, _sf: ev)
     got = {
         r.purchase_id: (r.attr_version, r.attr_value)
         for r in queries_relational.rel_scd2_pit_join(spark, SF).collect()

@@ -21,7 +21,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_similarity
@@ -33,9 +33,9 @@ def normalized_text(col):
 
 
 # Inputs at or below this estimated size take the latency-optimized
-# execution mode in lsh_candidate_pairs (eagerly materialized bucket
-# table); larger inputs keep the fully pipelined plan. See the comment at
-# the decision site for the measured trade.
+# execution mode in lsh_verified_pairs (eagerly materialized per-doc
+# shingle arrays); larger inputs keep the fully pipelined plan. See the
+# comment at the decision site for the measured trade.
 _SMALL_INPUT_BYTES = 4 * 1024 * 1024
 
 
@@ -123,6 +123,12 @@ def minhash_signatures(
     sh = spread(docs, id_col).select(
         F.col(id_col), F.explode(word_shingles(F.col(text_col), shingle_n)).alias("shingle")
     )
+    return _min_md5_per_doc(sh, id_col, num_perm)
+
+
+def _min_md5_per_doc(sh: DataFrame, id_col: str, num_perm: int) -> DataFrame:
+    """The signature aggregate over one ``(id_col, shingle)`` row per
+    shingle occurrence."""
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{p}:"), F.col("shingle")))).alias(f"sig_{p}")
         for p in range(num_perm)
@@ -137,20 +143,30 @@ def lsh_candidate_pairs(
     num_perm: int = 8,
     bands: int = 4,
     shingle_n: int = 2,
-    materialize_buckets: bool | None = False,
+    shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate duplicate pairs: docs sharing any band bucket.
 
     Returns (doc_a, doc_b, n_bands) with doc_a < doc_b.
 
-    ``materialize_buckets``: False (default) keeps the fully pipelined
-    plan; None picks by input size (see the decision-site comment) —
-    used by ``lsh_verified_pairs``, whose downstream verify phase is what
-    recoups the materialization latency on tiny inputs.
-    ``materialize_buckets=None`` may run one eager Spark job when called.
+    ``shingle_arrays`` is internal to ``lsh_verified_pairs``; leave it
+    None (the default), which shingles ``docs[text_col]`` inside the
+    signature pipeline. Otherwise it is one row per doc
+    ``(id_col, sh_arr)`` holding that doc's distinct ``shingle_n``-word
+    shingles, as ``lsh_verified_pairs`` builds it. The signatures are
+    then read from that frame alone: ``docs``, ``text_col`` and
+    ``shingle_n`` are unused, so a frame built from other text or
+    another ``shingle_n`` silently yields other signatures.
     """
     rows_per_band = num_perm // bands
-    sigs = minhash_signatures(docs, text_col, id_col, num_perm, shingle_n)
+    if shingle_arrays is None:
+        sigs = minhash_signatures(docs, text_col, id_col, num_perm, shingle_n)
+    else:  # the small-input mode of lsh_verified_pairs
+        sigs = _min_md5_per_doc(
+            shingle_arrays.select(F.col(id_col), F.explode("sh_arr").alias("shingle")),
+            id_col,
+            num_perm,
+        )
     # unhex: the band key only needs EQUALITY of the concatenated md5
     # signatures, and unhex is bijective on hex digests — the join keys
     # shrink from rows_per_band x 32 hex chars to half that in binary
@@ -169,25 +185,6 @@ def lsh_candidate_pairs(
     buckets = sigs.select(
         F.col(id_col), F.explode(F.array(*band_structs)).alias("bk")
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    # Scale-adaptive materialization (guide §2.4 + r10-verdict #1): on TINY
-    # inputs the verified leg is stage-wave-latency-bound — eagerly
-    # materializing the (doc, band, key) bucket table (edge-bounded:
-    # docs × bands rows) lets everything downstream plan against a
-    # known-small local RDD and coalesce to single-task stages. On real
-    # volume the same checkpoint LOSES: it serializes the DAG (the verify
-    # side's shingle scan can no longer overlap the band join) and pays a
-    # full materialization wave — measured at the 50k-doc leg 7.1 s
-    # pipelined vs 8.9 s checkpointed, while the 5k-doc verified leg is
-    # ~1.9 s pipelined vs ~1.7 s checkpointed (interleaved A/B). The mode
-    # picks by the *input's* estimated bytes (no job), so production
-    # volumes always pipeline; the candidates-only entry point defaults
-    # to pipelined at every size
-    # (without the verify phase the extra job is never recouped). Values
-    # are identical either way — the checkpoint only cuts lineage.
-    if materialize_buckets is None:
-        materialize_buckets = _plan_size_bytes(docs) <= _SMALL_INPUT_BYTES
-    if materialize_buckets:
-        buckets = buckets.localCheckpoint(eager=True)
     a = buckets.alias("a")
     b = buckets.alias("b")
     # Deliberate sort-merge on the band self-join (guide §3.1). Left to
@@ -396,14 +393,41 @@ def lsh_verified_pairs(
     up as Σ df(shingle)² on frequent shingles), this joins shingles
     against the candidate pair list — work is O(candidates × shingles),
     independent of how common any shingle is. Returns
-    (doc_a, doc_b, n_common, jaccard)."""
-    cands = lsh_candidate_pairs(
-        docs, text_col, id_col, num_perm, bands, shingle_n,
-        materialize_buckets=None,  # size-adaptive — see decision site
-    ).select("doc_a", "doc_b")
+    (doc_a, doc_b, n_common, jaccard).
+
+    On an input below ``_SMALL_INPUT_BYTES`` the call runs one eager
+    Spark job (the shingle checkpoint below). An input of unknown size,
+    such as a DataFrame built from local rows, counts as large."""
     arrs = spread(docs, id_col).select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh_arr")
     )
+    # Scale-adaptive materialization (guide §2.4 + r10-verdict #1). On
+    # TINY inputs the leg is stage-wave-latency-bound, and every reference
+    # to ``arrs`` (the signature explode, both verify sides, and the
+    # not-null filter Catalyst infers under them) would evaluate
+    # ``word_shingles`` again. So below the gate the one-row-per-doc
+    # (id, distinct shingles) frame is checkpointed ONCE and all of them
+    # read it. The checkpoint in turn serializes the DAG behind a full
+    # materialization wave, and its gain shrinks with volume. Medians of
+    # 4 alternating rounds, checkpoint vs pipelined (8 perms / 4 bands,
+    # local[4] on 4 vCPUs, subsets of bench.py's duplicate-dense 10x
+    # corpus): 3.2 vs 3.6 s at 0.57 MiB (sf0.1), 14.0 vs 14.6 s at
+    # 2.2 MiB, 37.8 vs 38.8 s at 4.0 MiB, 58.0 vs 56.2 s at 5.0 MiB.
+    # From 2 MiB up the two are within noise, so the 4 MiB gate is not
+    # sharply placed: it sits between the last size where the checkpoint
+    # won and the first where it lost (not timed at 32 perms). Pipelined
+    # signatures fed from a projected ``sh_arr`` column ran 17% slower
+    # than exploding ``word_shingles`` directly, so larger inputs keep
+    # ``lsh_candidate_pairs``' default plan. The mode picks by the
+    # *input's* estimated bytes (no job). Values are identical either
+    # way — the checkpoint only cuts lineage.
+    small = _plan_size_bytes(docs) <= _SMALL_INPUT_BYTES
+    if small:
+        arrs = arrs.localCheckpoint(eager=True)
+    cands = lsh_candidate_pairs(
+        docs, text_col, id_col, num_perm, bands, shingle_n,
+        shingle_arrays=arrs if small else None,
+    ).select("doc_a", "doc_b")
     return _verify_jaccard(cands, arrs, id_col, threshold)
 
 
@@ -411,62 +435,73 @@ def connected_components(
     pairs: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Cluster near-dup pairs into components: every node gets the min
     node id reachable from it (the canonical representative).
 
-    Iterative min-label propagation — each round joins labels across
-    edges and keeps the minimum, stopping at fixpoint. Converges in
-    O(diameter) rounds; each round is one shuffle join, so at 100 TB
-    this is `diameter × groupBy-cost` (dup components are shallow —
-    near-dup graphs are cliques-ish, diameter 1-2 in practice).
+    Iterative min-label propagation to the fixpoint. The labels are
+    seeded with each node's closed-neighbourhood minimum
+    ``least(node, min(neighbour))`` — what the first round would give —
+    so a clique (the usual near-dup family) is final after the seed and
+    one confirming round. Each later round joins labels across edges
+    and keeps the minimum. Labels only decrease, so the loop ends after
+    at most diameter + 1 rounds, whatever the graph. Each round is one
+    shuffle join, so at 100 TB this is `diameter × groupBy-cost` (dup
+    components are shallow — near-dup graphs are cliques-ish, diameter
+    1-2 in practice). Eager checkpoints: the edges, the seed, then one
+    per round; the changed count rides on the round's checkpoint as an
+    ``observe`` metric, so no probe job is run.
     """
-    # Materialize the pair list ONCE before the symmetric union: the two
-    # union branches are separate references to the (usually expensive —
-    # LSH + exact-verify) upstream plan, and Spark executes each branch
-    # independently, so without this the whole candidate/verify pipeline
-    # runs TWICE just to build the edge list (guide §2.4/§5 — measured
-    # 18.0 s → ~10 s on the 50k-doc clusters leg, where one verify pass
-    # costs ~8 s). The checkpoint stores only (a, b) id pairs — edge-
-    # bounded, the same footprint the edges checkpoint below already
-    # holds.
-    base = pairs.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=True)
-    edges = base.unionByName(
-        base.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct()
-    # iterative joins MUST truncate lineage each round (localCheckpoint),
-    # or the plan doubles per iteration and the driver hangs re-planning
-    edges = edges.localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
+    # The symmetric edge list comes from ONE reference to the pair list
+    # (explode of both orientations): the pairs' upstream plan (usually
+    # the expensive LSH + exact-verify) runs once, inside the eager edge
+    # checkpoint below. A union of two projections would be two
+    # references, each executing the upstream plan (running it once
+    # measured 18.0 s → ~10 s on the 50k-doc clusters leg).
+    # Duplicate edges or self-loops change no minimum, so no distinct.
+    # Iterative joins MUST truncate lineage each round (localCheckpoint),
+    # or the plan doubles per iteration and the driver hangs re-planning.
+    edges = (
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+                )
+            ).alias("e")
+        )
+        .select("e.a", "e.b")
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("lbl").alias("nlbl"))
+    # a NULL node id connects nothing: it keeps a NULL label and passes
+    # no label on (the join on b never matches it)
+    node = F.col("node")
+    labels = (
+        edges.groupBy(F.col("a").alias("node"))
+        .agg(F.min("b").alias("nb"))
+        .select(node, F.when(node.isNotNull(), F.least(node, F.col("nb"))).alias("lbl"))
+        .localCheckpoint(eager=True)
+    )
+    while True:
+        # each node's own label (kept as ``old``) plus every label it
+        # hears across an edge; the minimum is the new label. Labels only
+        # decrease, so "changed" is new < old
+        heard = (
+            edges.where(F.col("a").isNotNull())
+            .join(labels, edges.b == labels.node)
+            .select(F.col("a").alias("node"), "lbl", F.lit(None).alias("old"))
         )
-        # labels only decrease, so "changed" is decidable inside the same
-        # pass (nlbl < lbl) — no second join against the old labels; the
-        # fixpoint probe is a limit(1) scan of the just-checkpointed rows
-        new_lbl = F.least(F.col("lbl"), F.coalesce("nlbl", "lbl"))
+        changed = Observation()
         stepped = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                new_lbl.alias("new_lbl"),
-                (new_lbl < F.col("lbl")).alias("_chg"),
-            )
+            labels.select("node", "lbl", F.col("lbl").alias("old"))
+            .unionByName(heard)
+            .groupBy("node")
+            .agg(F.min("lbl").alias("lbl"), F.max("old").alias("old"))
+            .observe(changed, F.sum((F.col("lbl") < F.col("old")).cast("long")).alias("n"))
             .localCheckpoint(eager=True)
         )
-        labels = stepped.select("node", F.col("new_lbl").alias("lbl"))
-        if stepped.where(F.col("_chg")).limit(1).count() == 0:
+        labels = stepped.select("node", "lbl")
+        if not changed.get["n"]:
             break
     return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 

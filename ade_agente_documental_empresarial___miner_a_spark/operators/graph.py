@@ -15,9 +15,9 @@ Scale design (the part the tiny catalog graph cannot demonstrate):
 - **Bounded lineage.** Iterative loops grow the plan linearly; past
   ~10 joins Catalyst analysis time dominates and executors re-derive
   ever-deeper lineage on any retry. ``checkpoint_every`` truncates via
-  ``localCheckpoint(eager=True)`` — the same per-round pattern
-  ``dedup.connected_components`` uses (operators/dedup.py:315-366),
-  measured there at 50k docs / r4: 14.1 s.
+  ``localCheckpoint(eager=True)`` — the same per-round pattern as
+  ``dedup.connected_components``, measured there at 50k docs / r4:
+  14.1 s.
 - **No driver materialization.** Nothing collects; the returned frame
   is a plan over the final ranks.
 

@@ -10,11 +10,34 @@ available rather than a fixed 200.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+
+def _package_sources(pkg_dir: str) -> list[str]:
+    """Every ``.py`` file under ``pkg_dir``, in a fixed order."""
+    return sorted(
+        os.path.join(dirpath, fn)
+        for dirpath, _, files in os.walk(pkg_dir)
+        for fn in files
+        if fn.endswith(".py")
+    )
+
+
+def _package_zip_name(pkg_dir: str, sources: list[str]) -> str:
+    """File name of the shipped package zip: a digest of each source's
+    path and contents, so editing any module (however deeply nested)
+    names a new zip and workers never import a stale copy."""
+    h = hashlib.sha256()
+    for full in sources:
+        h.update(os.path.relpath(full, pkg_dir).encode() + b"\0")
+        with open(full, "rb") as fh:
+            h.update(hashlib.sha256(fh.read()).digest())
+    return f"ade_pkg_{h.hexdigest()[:16]}.zip"
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -42,17 +65,13 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"ade_pkg_{os.path.getmtime(pkg_dir):.0f}.zip"
-    )
+    sources = _package_sources(pkg_dir)
+    zpath = os.path.join(tempfile.gettempdir(), _package_zip_name(pkg_dir, sources))
     if not os.path.exists(zpath):
         tmp = zpath + ".tmp"
         with zipfile.ZipFile(tmp, "w") as z:
-            for dirpath, _, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        z.write(full, os.path.relpath(full, root))
+            for full in sources:
+                z.write(full, os.path.relpath(full, root))
         os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(zpath)
     spark.conf.set(key, "true")

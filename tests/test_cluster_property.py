@@ -74,7 +74,7 @@ def test_connected_components_matches_union_find(spark):
 
 def test_connected_components_long_chain_converges(spark):
     # a 12-node path is the max-diameter shape for its size — the
-    # hardest case for per-round min propagation within max_iter
+    # hardest case for per-round min propagation
     edges = [(i, i + 1) for i in range(11)]
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     got = {r.doc_id: r.cluster_id for r in connected_components(df).collect()}
@@ -82,9 +82,9 @@ def test_connected_components_long_chain_converges(spark):
 
 
 def test_connected_components_materializes_pairs_once(spark):
-    # r10 optimization pin: the symmetric edge union must read a
-    # checkpointed copy of the pair list, NOT re-execute the (often
-    # expensive LSH+verify) upstream plan once per union branch. An
+    # r10 optimization pin: the symmetric edge list must be built from
+    # one reference to the pair list, NOT re-execute the (often
+    # expensive LSH+verify) upstream plan once per orientation. An
     # accumulator-instrumented pandas_udf in the pairs plan counts
     # upstream row evaluations: exactly n_pairs, not 2*n_pairs.
     import pandas as pd
@@ -105,5 +105,35 @@ def test_connected_components_materializes_pairs_once(spark):
     assert got == {0: 0, 1: 0, 2: 0, 5: 5, 6: 5}
     assert acc.value == len(edges), (
         f"pairs plan executed {acc.value / len(edges):.1f}x; "
-        "expected exactly once (pre-union localCheckpoint)"
+        "expected exactly once (one reference, in the edge checkpoint)"
     )
+
+
+def test_connected_components_job_budget(spark):
+    # Spark jobs = a constant (the edge and seed checkpoints, the collect)
+    # plus a fixed count per round. A clique is final after the seed, so
+    # it takes one confirming round; an n-node path takes n - 1 rounds
+    # (the seed covers the first hop, each round one more, the last round
+    # confirms). The exact per-round figure depends on how AQE plans the
+    # round's join, so only linear growth and a ceiling on the per-round
+    # count are pinned. The changed count must ride on the round's
+    # checkpoint; a probe job per round would lift it over the ceiling.
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(edges, group):
+        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        df = df.localCheckpoint(eager=True)
+        sc.setJobGroup(group, "connected components job budget")
+        try:
+            connected_components(df).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group) or [])
+
+    clique = jobs([(i, j) for i in range(6) for j in range(i + 1, 6)], "cc-budget-clique")
+    path3 = jobs([(i, i + 1) for i in range(2)], "cc-budget-path3")
+    path5 = jobs([(i, i + 1) for i in range(4)], "cc-budget-path5")
+    per_round = path3 - clique  # 2 rounds against 1
+    assert 0 < per_round <= 5, (clique, path3, path5)
+    assert path5 - path3 == 2 * per_round, (clique, path3, path5)  # 4 rounds against 2

@@ -14,12 +14,18 @@ from ade_agente_documental_empresarial___miner_a_spark.operators.similarity impo
 
 
 def test_components_chain_and_islands(spark):
-    # chain 1-2-3 (one component), pair 10-11, isolated pair 20-21
+    # chain 1-2-3 (one component), pair 10-11, isolated pair 20-21; a
+    # NULL endpoint is a node with a NULL label that links 30 and 31 to
+    # nothing
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21)], "doc_a long, doc_b long"
+        [(1, 2), (2, 3), (10, 11), (20, 21), (None, 30), (31, None)],
+        "doc_a long, doc_b long",
     )
     got = {r.doc_id: r.cluster_id for r in connected_components(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+    assert got == {
+        1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20,
+        30: 30, 31: 31, None: None,
+    }
 
 
 def test_components_cycle(spark):
@@ -31,12 +37,15 @@ def test_components_cycle(spark):
 
 
 def test_components_long_chain_converges(spark):
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
-    )
-    got = {r.doc_id: r.cluster_id for r in connected_components(pairs).collect()}
-    assert set(got.values()) == {0}
-    assert len(got) == 13
+    # a 31-node path takes 30 rounds: the loop must run to the fixpoint,
+    # under no iteration cap
+    for n in (13, 31):
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+        )
+        got = {r.doc_id: r.cluster_id for r in connected_components(pairs).collect()}
+        assert set(got.values()) == {0}
+        assert len(got) == n
 
 
 def test_mllib_embeddings_drop_in(spark):

@@ -214,41 +214,54 @@ def test_prefix_jaccard_property_random_corpora(spark):
 
 
 def test_lsh_verified_materialized_mode_matches_pipelined(spark, monkeypatch):
-    """r11 optimization pin: lsh_candidate_pairs' size-adaptive bucket
-    materialization (latency mode for tiny inputs) must be a pure
-    re-materialization — the pair set, band counts, and the downstream
-    verified jaccard values are identical in both modes."""
+    """lsh_verified_pairs' size gate must fail closed: below it the
+    per-doc shingle arrays are checkpointed once and read by the
+    signatures, the band join and the verify join; forcing the pipelined
+    plan (gate at 0 bytes) must give exactly the same verified pairs —
+    on ordinary docs, on degenerate ones (one word, empty, NULL text,
+    exact duplicates) and on an empty frame."""
     from ade_agente_documental_empresarial___miner_a_spark.operators import dedup
-    from ade_agente_documental_empresarial___miner_a_spark.operators.dedup import (
-        lsh_verified_pairs,
-    )
 
-    df = docs(
-        spark,
-        [
-            (1, "alpha beta gamma delta epsilon zeta", "en"),
-            (2, "alpha beta gamma delta epsilon zeta", "en"),
-            (3, "alpha beta gamma delta epsilon eta", "en"),
-            (4, "totally different words entirely here now", "en"),
-            (5, "alpha beta gamma delta epsilon zeta theta", "en"),
-        ],
-    )
-    pipelined_c = {
-        tuple(r)
-        for r in lsh_candidate_pairs(df, materialize_buckets=False).collect()
-    }
-    materialized_c = {
-        tuple(r)
-        for r in lsh_candidate_pairs(df, materialize_buckets=True).collect()
-    }
-    assert pipelined_c == materialized_c and pipelined_c
+    base = [
+        (1, "alpha beta gamma delta epsilon zeta", "en"),
+        (2, "alpha beta gamma delta epsilon zeta", "en"),
+        (3, "alpha beta gamma delta epsilon eta", "en"),
+        (4, "totally different words entirely here now", "en"),
+        (5, "alpha beta gamma delta epsilon zeta theta", "en"),
+    ]
+    degenerate = [
+        (6, "alpha", "en"),
+        (7, "", "en"),
+        (8, None, "en"),
+        (9, "same words twice over here", "en"),
+        (10, "same words twice over here", "en"),
+    ]
 
-    with monkeypatch.context() as m:
-        m.setattr(dedup, "_SMALL_INPUT_BYTES", 0)  # force pipeline
-        pipelined_v = {tuple(r) for r in lsh_verified_pairs(df).collect()}
-    # literal DataFrames are tiny: the default (auto) path materializes
-    materialized_v = {tuple(r) for r in lsh_verified_pairs(df).collect()}
-    assert pipelined_v == materialized_v and pipelined_v
+    def verified(df, gate):
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "_SMALL_INPUT_BYTES", gate)
+            return {tuple(r) for r in dedup.lsh_verified_pairs(df).collect()}
+
+    def both_paths(rows):
+        # a literal DataFrame is an RDD scan whose size Catalyst does not
+        # know, so each path is forced: every input is large at gate 0,
+        # and small at an infinite gate
+        df = docs(spark, rows)
+        pipelined = verified(df, 0)
+        materialized = verified(df, float("inf"))
+        assert pipelined == materialized
+        # the candidate pairs and their band counts agree as well
+        arrs = df.select("doc_id", dedup.word_shingles(F.col("text")).alias("sh_arr"))
+        assert {tuple(r) for r in dedup.lsh_candidate_pairs(df).collect()} == {
+            tuple(r) for r in dedup.lsh_candidate_pairs(df, shingle_arrays=arrs).collect()
+        }
+        return materialized
+
+    assert both_paths(base)
+    got = both_paths(base + degenerate)
+    assert (9, 10, 4, 1.0) in got
+    assert not {6, 7, 8} & {d for pair in got for d in pair[:2]}
+    assert both_paths([]) == set()
 
 
 def test_verify_jaccard_threshold_zero_drops_disjoint_pairs(spark):

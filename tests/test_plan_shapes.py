@@ -142,3 +142,38 @@ def test_build_chunks_one_exchange_one_python_pass(spark, sf_dir):
     )
     assert python == ["MapInArrow"]
     assert "Exchange hashpartitioning(doc_id" in plan
+
+
+def test_lsh_verified_small_input_shingles_once(spark, monkeypatch, tmp_path):
+    """Below the size gate lsh_verified_pairs checkpoints the per-doc
+    shingle arrays once, and the signatures, the band join and both
+    verify sides read that checkpoint. Across every plan the call
+    executes (the eager checkpoint's and the collected result's),
+    ``word_shingles`` — the only ``array_distinct`` on this path — is
+    evaluated exactly once. More means some reference re-shingles the
+    text again."""
+    from ade_agente_documental_empresarial___miner_a_spark.operators.dedup import (
+        lsh_verified_pairs,
+    )
+
+    # a parquet input, as in the catalog and the benchmark: its size
+    # estimate is the file size, so the gate sees a small input
+    spark.createDataFrame(
+        [(i, f"w{i % 7} w{i % 5} w{i % 3} shared tail words") for i in range(40)],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    plans = []
+    cls = type(docs)
+    checkpoint = cls.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording_checkpoint)
+    out = lsh_verified_pairs(docs)
+    assert out.collect()
+    plans.append(out._jdf.queryExecution().executedPlan().toString())
+    assert len(plans) == 2  # the small-input path took the checkpoint
+    assert sum(p.count("array_distinct(") for p in plans) == 1

@@ -10,7 +10,8 @@ separator, greedily merge small pieces up to ``chunk_size`` keeping
 start of the following piece) as a pure function — no network, no state.
 
 Spark integration: the index build (``plans/pipeline.build_chunks``)
-calls the splitter inside its fused chunk-and-embed ``mapInArrow`` pass.
+calls the splitter inside its fused section, chunk and embed
+``mapInArrow`` pass.
 ``chunk_sections`` is the standalone operator for other callers: an
 Arrow-batched ``pandas_udf`` returning ``ARRAY<STRING>`` followed by
 ``posexplode`` — one Python boundary, batched, embarrassingly parallel per

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine_similarity
+from ..planstats import plan_size_bytes
 
 
 def normalized_text(col):
@@ -37,14 +38,6 @@ def normalized_text(col):
 # shingle arrays); larger inputs keep the fully pipelined plan. See the
 # comment at the decision site for the measured trade.
 _SMALL_INPUT_BYTES = 4 * 1024 * 1024
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's estimated size of the plan's output in bytes — read from
-    the optimized logical plan's statistics, no job is run (for a parquet
-    scan this is the file size). Used only to pick a latency-vs-throughput
-    execution mode; never changes what is computed."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def spread(df: DataFrame, *by: str) -> DataFrame:
@@ -67,6 +60,12 @@ def spread(df: DataFrame, *by: str) -> DataFrame:
     window after it shuffles again. Only safe when ``by`` is
     high-cardinality and unskewed (doc_id is unique — ideal); round-robin
     remains the default for arbitrary keys.
+
+    The spread is for inputs narrower than the cluster. The index build
+    (``plans/pipeline.build_chunks``) calls it only when its input has
+    fewer partitions than ``defaultParallelism`` (a small parquet table
+    read as one split); an input already that wide, such as a
+    content-sized ``binary_scan``, runs with no Exchange at all.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if by:
@@ -421,7 +420,7 @@ def lsh_verified_pairs(
     # ``lsh_candidate_pairs``' default plan. The mode picks by the
     # *input's* estimated bytes (no job). Values are identical either
     # way — the checkpoint only cuts lineage.
-    small = _plan_size_bytes(docs) <= _SMALL_INPUT_BYTES
+    small = plan_size_bytes(docs) <= _SMALL_INPUT_BYTES
     if small:
         arrs = arrs.localCheckpoint(eager=True)
     cands = lsh_candidate_pairs(

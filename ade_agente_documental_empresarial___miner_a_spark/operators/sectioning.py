@@ -12,8 +12,15 @@ Reference (``micro-infobot/app.py``):
 Spark-first re-expression: the stateful walk is a **window forward-fill**
 (``last(..., ignoreNulls=True)`` over rows-unbounded-preceding), partitioned
 by ``doc_id`` — embarrassingly parallel across documents, no Python, no
-driver loop. At 100 TB this is a single narrow shuffle on ``doc_id`` (or
-none, if the source is already bucketed by ``doc_id``).
+driver loop. ``assign_sections`` is that standalone T2 operator (the
+``t2_*`` catalog entries); at 100 TB it is a single narrow shuffle on
+``doc_id`` (or none, if the source is already bucketed by ``doc_id``).
+
+The index build (``plans/pipeline.build_chunks``) needs no window:
+``split_paragraphs`` emits each document's paragraphs consecutively and
+in ``para_pos`` order, so the build flags titles in Spark with the same
+``is_title`` and carries the section inside its fused chunk-and-embed
+Python pass, in the scan's own partitions.
 """
 
 from __future__ import annotations

@@ -3,8 +3,10 @@
 E1 (ingest/index build, ``micro-infobot/app.py:110-131, 286-287``):
 documents → paragraph split (T1) → section forward-fill (T2) → recursive
 chunking (T3) → deterministic embedding (T5) → the ``chunks`` table, which
-*is* the vector index (SURVEY §1.3). T3 and T5 run as one Arrow-batched
-Python pass over the section window's partitions.
+*is* the vector index (SURVEY §1.3). T2, T3 and T5 run as one
+Arrow-batched Python pass over the paragraphs, in the input's own
+partitions: no window, and no Exchange unless the input is narrower than
+the cluster.
 
 E3 (scored inspection, app.py:306-328): scored top-k + A4 normalization.
 """
@@ -20,48 +22,64 @@ from pyspark.sql.types import (
 )
 
 from ..functions.exactmath import dblround
+from ..functions.text import is_title
 
-# chunk_sections and with_embeddings are the standalone T3/T5 operators;
-# they stay importable here because callers trace the index-build layers
-# by these names
+# assign_sections, chunk_sections and with_embeddings are the standalone
+# T2/T3/T5 operators; they stay importable here because callers trace
+# the index-build layers by these names
 from ..operators.chunking import RecursiveCharacterSplitter, chunk_sections  # noqa: F401
 from ..operators.dedup import spread
 from ..operators.embedding import embed_one, embed_vector, with_embeddings  # noqa: F401
-from ..operators.sectioning import assign_sections
+from ..operators.sectioning import (  # noqa: F401
+    GENERAL_SECTION, assign_sections, split_paragraphs,
+)
 from ..operators.similarity import normalize_scores, topk_similar
+from ..planstats import num_partitions
 
 
-def _chunk_and_embed(dim: int | None):
-    """The fused T3+T5 pass for ``mapInArrow``: split each paragraph row
-    into chunks, number the chunks of each doc 1, 2, ... (``chunk_seq``)
-    and, unless ``dim`` is None, embed each chunk.
+def _section_chunk_and_embed(dim: int | None):
+    """The fused T2+T3+T5 pass for ``mapInArrow``: carry each doc's
+    section (``"General"`` until its first title; a title row sets it and
+    emits nothing), split each other paragraph row into chunks, number
+    the chunks of each doc 1, 2, ... (``chunk_seq``) and, unless ``dim``
+    is None, embed each chunk.
 
     Rows must arrive grouped by doc_id and in para_pos order within a
-    doc; the counter carries over Arrow batch boundaries, so a doc may
-    straddle batches. Pass-through columns are gathered with ``take``,
-    which keeps their Arrow types (a NULL doc_id stays NULL)."""
+    doc; the section and the counter carry over Arrow batch boundaries,
+    so a doc may straddle batches. Pass-through columns are gathered
+    with ``take``, which keeps their Arrow types (a NULL doc_id stays
+    NULL)."""
 
     def run(batches):
         sp = RecursiveCharacterSplitter()
-        doc, seq = object(), 0  # no doc seen yet
+        doc, section, seq = object(), GENERAL_SECTION, 0  # no doc seen yet
         for b in batches:
-            src, chunk_pos, chunk_seq, texts = [], [], [], []
+            src, sections, chunk_pos, chunk_seq, texts = [], [], [], [], []
             ids = b.column("doc_id").to_pylist()
             paras = b.column("paragraph").to_pylist()
-            for row, (d, para) in enumerate(zip(ids, paras)):
+            titles = b.column("title").to_pylist()
+            for row, (d, para, title) in enumerate(zip(ids, paras, titles)):
                 if d != doc:
-                    doc, seq = d, 0
+                    doc, section, seq = d, GENERAL_SECTION, 0
+                if title is not None:
+                    section = title
+                    continue
                 for pos, text in enumerate(sp.split_text(para)):
                     seq += 1
                     src.append(row)
+                    sections.append(section)
                     chunk_pos.append(pos)
                     chunk_seq.append(seq)
                     texts.append(text)
             take = pa.array(src, pa.int64())
-            out = {c: b.column(c).take(take) for c in ("doc_id", "section", "para_pos")}
-            out["chunk_pos"] = pa.array(chunk_pos, pa.int32())
-            out["chunk_seq"] = pa.array(chunk_seq, pa.int32())
-            out["text"] = pa.array(texts, pa.string())
+            out = {
+                "doc_id": b.column("doc_id").take(take),
+                "section": pa.array(sections, pa.string()),
+                "para_pos": b.column("para_pos").take(take),
+                "chunk_pos": pa.array(chunk_pos, pa.int32()),
+                "chunk_seq": pa.array(chunk_seq, pa.int32()),
+                "text": pa.array(texts, pa.string()),
+            }
             if dim is not None:
                 flat = np.array([embed_vector(t, dim) for t in texts], np.float32).ravel()
                 offsets = pa.array(np.arange(0, flat.size + 1, dim, dtype=np.int32))
@@ -80,30 +98,42 @@ def build_chunks(
     """E1 — the full index build. Returns the ``chunks`` table
     (chunk_id, doc_id, section, para_pos, chunk_pos, text[, embedding]).
 
-    The documents are hash-spread on doc_id once; the section window
-    reuses that partitioning, so the plan holds ONE Exchange and it moves
-    document rows only. Chunking (``RecursiveCharacterSplitter``), the
-    per-doc chunk numbering and embedding (``embed_vector``) then run as
-    one ``mapInArrow`` pass over the window's partitions, which arrive
-    in (doc_id, para_pos) order. ``chunk_id`` = doc_id · 10⁶ + the chunk's
+    ``documents`` holds one row per doc_id, as ``documents`` and
+    ``extract_text`` give; rows sharing a doc_id give an undefined
+    numbering.
+
+    ``split_paragraphs`` (``posexplode``) emits each document's
+    paragraphs consecutively and in para_pos order, so the section
+    forward-fill (T2), chunking (``RecursiveCharacterSplitter``), the
+    per-doc chunk numbering and embedding (``embed_vector``) run as one
+    ``mapInArrow`` pass in the input's own partitions: one stage, no
+    Exchange, no window. Titles are flagged in Spark (``is_title``, the
+    same Java regex as ``assign_sections``). Only an input with fewer
+    partitions than ``defaultParallelism`` — or one whose count is known
+    only at run time — is first hash-spread on doc_id (one Exchange,
+    moving document rows). ``chunk_id`` = doc_id · 10⁶ + the chunk's
     1-based rank in (para_pos, chunk_pos) order within its doc.
     """
-    docs = spread(documents.select("doc_id", text_col), "doc_id")
-    # the window already sorts each partition this way, so Catalyst drops
-    # this sort; it states the order the pass depends on
-    sectioned = assign_sections(docs, text_col).sortWithinPartitions(
-        "doc_id", "para_pos"
+    docs = documents.select("doc_id", text_col)
+    parts = num_partitions(docs)
+    if parts is None or parts < docs.sparkSession.sparkContext.defaultParallelism:
+        docs = spread(docs, "doc_id")
+    paras = split_paragraphs(docs, text_col).withColumn(
+        "title", F.when(is_title(F.col("paragraph")), F.trim("paragraph"))
     )
-    fields = [sectioned.schema[c] for c in ("doc_id", "section", "para_pos")]
-    fields += [
+    fields = [
+        paras.schema["doc_id"],
+        # non-null, as assign_sections' coalesce to "General" gives
+        StructField("section", StringType(), False),
+        paras.schema["para_pos"],
         StructField("chunk_pos", IntegerType(), False),
         StructField("chunk_seq", IntegerType(), False),
         StructField("text", StringType()),
     ]
     if with_embedding:
         fields.append(StructField("embedding", ArrayType(FloatType())))
-    chunks = sectioned.mapInArrow(
-        _chunk_and_embed(dim if with_embedding else None), StructType(fields)
+    chunks = paras.mapInArrow(
+        _section_chunk_and_embed(dim if with_embedding else None), StructType(fields)
     ).withColumn(
         # globally unique, deterministic chunk id
         "chunk_id", F.col("doc_id") * F.lit(1_000_000) + F.col("chunk_seq")

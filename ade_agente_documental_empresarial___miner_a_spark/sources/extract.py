@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..planstats import num_partitions, plan_size_bytes
+
 try:  # optional, not in this container
     import fitz  # PyMuPDF  # noqa: F401
 
@@ -66,13 +68,40 @@ _EXT_MIME = {
 }
 
 
+def _content_sized(df: DataFrame) -> DataFrame:
+    """``binary_scan``'s partition sizing rule (see there)."""
+    spark = df.sparkSession
+    max_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    target = max(
+        spark.sparkContext.defaultParallelism,
+        -(-plan_size_bytes(df) // max_bytes),
+    )
+    # a bare file scan is not adaptive, so its count is always known
+    if target < num_partitions(df):
+        return df.coalesce(target)
+    return df
+
+
 def binary_scan(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
     """S1 — parallel binary directory scan with MIME derived from the
-    extension (mirrors the uploader's type dispatch, app.py:191-195)."""
+    extension (mirrors the uploader's type dispatch, app.py:191-195).
+
+    Partitions are sized by content bytes: the scan is coalesced to
+    ``min(current, max(defaultParallelism, ceil(file_bytes /
+    spark.sql.files.maxPartitionBytes)))``, where ``file_bytes`` is the
+    scan's plan statistic — the matching files' total size, read with no
+    job. Every row downstream (extraction, the index build) is Python
+    work, and on pyspark 4.1.2 each Python task pays a fixed ≈200 ms
+    before its function is entered: a no-op ``mapInArrow`` over 1/2/7/14
+    partitions took 283/323/809/1468 ms against ≈50 ms for a plain noop
+    write (4 vCPUs). The file source charges every file a 4 MB open
+    cost, so 204 files (0.88 MB) made 7 splits on ``local[2]``; sized by
+    content they make 2. The rule only narrows: once files are large,
+    the file source's own split count is kept."""
     reader = spark.read.format("binaryFile")
     if glob:
         reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
+    df = _content_sized(reader.load(path))
     ext = F.lower(F.element_at(F.split(F.col("path"), r"\."), -1))
     mime_map = F.create_map(
         *[F.lit(x) for kv in _EXT_MIME.items() for x in kv]

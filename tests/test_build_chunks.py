@@ -1,9 +1,16 @@
-"""The index build's fused chunk-and-embed pass (``plans/pipeline.build_chunks``)
-against the layered composition it replaces: section window →
-``chunk_sections`` → ``row_number`` chunk numbering → ``with_embeddings``.
-Every row is compared, ``chunk_id`` and ``embedding`` included."""
+"""The index build's fused section, chunk and embed pass
+(``plans/pipeline.build_chunks``) against the layered composition it
+replaces: section window → ``chunk_sections`` → ``row_number`` chunk
+numbering → ``with_embeddings``. Every row is compared, ``chunk_id`` and
+``embedding`` included, and the schema with its nullability.
+
+Each comparison runs on both sides of the build's spread choice: a
+``createDataFrame`` input is already ``defaultParallelism`` partitions
+wide and runs with no Exchange; the same rows coalesced to one partition
+are first hash-spread on doc_id (one Exchange)."""
 
 import hashlib
+import re
 
 import numpy as np
 import pytest
@@ -51,20 +58,29 @@ def sorted_rows(df):
 
 
 def assert_same_index(documents, with_embedding=True):
-    got = build_chunks(documents, with_embedding=with_embedding)
-    want = layered_build(documents, with_embedding=with_embedding)
-    assert got.schema == want.schema
-    rows = sorted_rows(got)
-    assert rows == sorted_rows(want)
-    return rows
+    """Both sides of the spread choice equal the layered build; returns
+    the rows."""
+    sides = []
+    for docs, exchanges in ((documents, 0), (documents.coalesce(1), 1)):
+        got = build_chunks(docs, with_embedding=with_embedding)
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\bExchange ", plan)) == exchanges
+        assert "Window" not in plan
+        want = layered_build(docs, with_embedding=with_embedding)
+        assert got.schema == want.schema
+        rows = sorted_rows(got)
+        assert rows == sorted_rows(want)
+        sides.append(rows)
+    return sides[0]
 
 
-def corpus(spark, id_type="long"):
+def corpus(spark, id_type="long", extra=()):
     rows = [
         (1, f"ANNUAL REPORT\n\n{_BODY}\n\nshort tail\n\nRISK NOTES\n\n{_BODY}"),
         (2, "\n\n".join(f"paragraph {i}. " + _BODY[: 90 * i] for i in range(1, 7))),
         (3, "no title at all, one paragraph"),
         (4, f"GENERAL\n\n{_BODY}{_BODY}"),
+        *extra,
     ]
     return spark.createDataFrame(rows, f"doc_id {id_type}, text string")
 
@@ -86,15 +102,25 @@ def test_fused_build_int_doc_ids_keep_int_chunk_ids(spark):
 
 def test_fused_build_docs_straddle_arrow_batches(spark):
     """Two rows per Arrow batch: every multi-paragraph doc crosses a batch
-    boundary, so its chunk numbering must carry over batches."""
+    boundary, so its chunk numbering and its section must carry over
+    batches. Doc 5's titles sit at paragraphs 0 and 3, one even and one
+    odd, so wherever the doc starts in its partition one of them ends a
+    batch and its body opens the next."""
+    straddle = (5, "FIRST TITLE\n\nbody a\n\nmore a\n\nSECOND TITLE\n\nbody b")
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     spark.conf.set(key, "2")
     try:
-        rows = assert_same_index(corpus(spark))
+        rows = assert_same_index(corpus(spark, extra=[straddle]))
     finally:
         spark.conf.unset(key)
     doc2 = sorted(r[0] for r in rows if r[1] == 2)
     assert doc2 == list(range(2_000_001, 2_000_001 + len(doc2)))
+    doc5 = sorted((r[0], r[2], r[5]) for r in rows if r[1] == 5)
+    assert doc5 == [
+        (5_000_001, "FIRST TITLE", "body a"),
+        (5_000_002, "FIRST TITLE", "more a"),
+        (5_000_003, "SECOND TITLE", "body b"),
+    ]
 
 
 @pytest.mark.parametrize("text", ["TITLE ONLY DOC", "", None])

@@ -123,10 +123,11 @@ def test_map_only_entries_have_no_exchange(spark, sf_dir, name):
 
 
 def test_build_chunks_one_exchange_one_python_pass(spark, sf_dir):
-    """The index build spreads the documents on doc_id once: the section
-    window reuses that partitioning, and chunking, chunk numbering and
-    embedding run as ONE Arrow-batched map pass. A second Exchange or a
-    per-column ArrowEvalPython here means a layer boundary came back."""
+    """A one-split parquet input is narrower than the cluster, so the
+    index build spreads the documents on doc_id once; the section
+    forward-fill, chunking, chunk numbering and embedding then run as ONE
+    Arrow-batched map pass. A second Exchange or a per-column
+    ArrowEvalPython here means a layer boundary came back."""
     from ade_agente_documental_empresarial___miner_a_spark.plans.catalog import table
     from ade_agente_documental_empresarial___miner_a_spark.plans.pipeline import (
         build_chunks,
@@ -142,6 +143,53 @@ def test_build_chunks_one_exchange_one_python_pass(spark, sf_dir):
     )
     assert python == ["MapInArrow"]
     assert "Exchange hashpartitioning(doc_id" in plan
+
+
+@pytest.mark.parametrize(
+    "side, exchanges",
+    [("wide", 0), ("one_partition", 1), ("adaptive", 1)],
+)
+def test_build_chunks_spreads_only_narrow_input(spark, sf_dir, side, exchanges):
+    """Both sides of the index build's spread choice, and its fallback.
+    An input at least ``defaultParallelism`` partitions wide (the
+    documents rows as a local frame, one slice per core) is chunked in
+    its own partitions: one stage, no Exchange. A one-partition input is
+    spread on doc_id first. An input whose count is known only at run
+    time (an adaptive plan: here a repartition) is spread too; Catalyst
+    folds the two repartitions into the spread's one. No side has a
+    Window, and each runs exactly one Python pass."""
+    from ade_agente_documental_empresarial___miner_a_spark.plans.catalog import table
+    from ade_agente_documental_empresarial___miner_a_spark.plans.pipeline import (
+        build_chunks,
+    )
+    from ade_agente_documental_empresarial___miner_a_spark.planstats import (
+        num_partitions,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = {
+        "wide": lambda: spark.createDataFrame(docs.collect(), docs.schema),
+        "one_partition": lambda: docs.coalesce(1),
+        "adaptive": lambda: docs.repartition(2 * cores),
+    }[side]()
+    parts = num_partitions(docs)
+    if side == "wide":
+        assert parts >= cores
+    elif side == "one_partition":
+        assert parts == 1
+    else:
+        assert parts is None
+    plan = build_chunks(docs)._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange ", plan)) == exchanges
+    assert ("Exchange hashpartitioning(doc_id" in plan) == (exchanges > 0)
+    assert "Window" not in plan
+    python = re.findall(
+        r"\b(MapInArrow|MapInPandas|ArrowEvalPython|BatchEvalPython"
+        r"|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas)\b",
+        plan,
+    )
+    assert python == ["MapInArrow"]
 
 
 def test_lsh_verified_small_input_shingles_once(spark, monkeypatch, tmp_path):

@@ -1,9 +1,15 @@
 """Ingestion source tests (S1-S6) on in-repo literal fixtures."""
 
+import contextlib
 import os
 
 from pyspark.sql import functions as F
 
+from ade_agente_documental_empresarial___miner_a_spark.planstats import (
+    num_partitions,
+    plan_size_bytes,
+)
+from ade_agente_documental_empresarial___miner_a_spark.sources import extract
 from ade_agente_documental_empresarial___miner_a_spark.sources.extract import (
     binary_scan,
     csv_scan,
@@ -63,6 +69,103 @@ def test_extract_text_pdf_degrades_to_error(spark, tmp_path):
     r = out.collect()[0]
     assert r.text is None
     assert r.error is not None  # NotImplementedError captured, job survives
+
+
+MAX_BYTES = "spark.sql.files.maxPartitionBytes"
+OPEN_COST = "spark.sql.files.openCostInBytes"
+
+
+@contextlib.contextmanager
+def sql_conf(spark, **settings):
+    """Set session confs for the block, then restore the values before."""
+    before = {k: spark.conf.get(k) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
+def small_files(d, n, ext="txt"):
+    d.mkdir(exist_ok=True)
+    for i in range(n):
+        (d / f"f{i:03d}.{ext}").write_bytes(f"small file {i} ".encode() * 8)
+    return str(d)
+
+
+def raw_partitions(spark, path, glob=None):
+    reader = spark.read.format("binaryFile")
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    return num_partitions(reader.load(path))
+
+
+def test_binary_scan_sizes_small_files_by_content(spark, tmp_path):
+    """Many small files, each its own split (an open cost as large as a
+    split, as when thousands of files fill every split), narrow to
+    max(cores, ceil(bytes / maxPartitionBytes)) partitions."""
+    cores = spark.sparkContext.defaultParallelism
+    d = small_files(tmp_path / "many", 2 * cores + 1)
+    with sql_conf(spark, **{OPEN_COST: "128m", MAX_BYTES: "128m"}):
+        assert raw_partitions(spark, d) == 2 * cores + 1
+        scan = binary_scan(spark, d)
+        size = plan_size_bytes(spark.read.format("binaryFile").load(d))
+        assert size == sum(f.stat().st_size for f in (tmp_path / "many").iterdir())
+        want = max(cores, -(-size // (128 << 20)))
+        assert want == cores
+        assert num_partitions(scan) == want
+        assert scan.count() == 2 * cores + 1
+
+
+def test_binary_scan_never_widens_the_file_splits(spark, tmp_path):
+    """With maxPartitionBytes far below the content bytes the rule asks
+    for more partitions than the file source made; the source's split
+    count is kept."""
+    cores = spark.sparkContext.defaultParallelism
+    d = small_files(tmp_path / "wide", 2 * cores + 1)
+    with sql_conf(spark, **{MAX_BYTES: "16"}):
+        raw = raw_partitions(spark, d)
+        assert raw == 2 * cores + 1  # one split per file
+        assert num_partitions(binary_scan(spark, d)) == raw
+
+
+def test_binary_scan_sizing_keeps_extracted_rows(spark, tmp_path, monkeypatch):
+    """extract_text over the sized scan gives the rows it gives over the
+    file source's own splits."""
+    cores = spark.sparkContext.defaultParallelism
+    d = make_files(tmp_path)
+    small_files(tmp_path / "uploads", 2 * cores + 1)
+    with sql_conf(spark, **{MAX_BYTES: "64k"}):
+        sized = binary_scan(spark, d)
+        monkeypatch.setattr(extract, "_content_sized", lambda df: df)
+        unsized = binary_scan(spark, d)
+        assert num_partitions(sized) == cores < num_partitions(unsized)
+        got = sorted(extract_text(sized).collect())
+        want = sorted(extract_text(unsized).collect())
+    assert got == want and len(got) == 2 * cores + 6
+
+
+def test_binary_scan_glob_sizes_by_matching_files(spark, tmp_path):
+    """A glob scan counts only the files it keeps: a large non-matching
+    file would ask for more partitions than there are matching files."""
+    cores = spark.sparkContext.defaultParallelism
+    n = 2 * cores + 1
+    d = small_files(tmp_path / "mixed", n)
+    (tmp_path / "mixed" / "big.bin").write_bytes(b"x" * ((n + 2) << 16))
+    with sql_conf(spark, **{MAX_BYTES: "64k"}):
+        assert raw_partitions(spark, d, glob="*.txt") == n
+        matching = sum(
+            f.stat().st_size for f in (tmp_path / "mixed").glob("*.txt")
+        )
+        loaded = spark.read.format("binaryFile").option("pathGlobFilter", "*.txt")
+        assert plan_size_bytes(loaded.load(d)) == matching
+        scan = binary_scan(spark, d, glob="*.txt")
+        assert num_partitions(scan) == cores
+        assert scan.count() == n
+        # the whole tree, big file included, asks for more than its splits
+        assert num_partitions(binary_scan(spark, d)) == raw_partitions(spark, d)
 
 
 def test_csv_scan_relational_and_serialized(spark, tmp_path):

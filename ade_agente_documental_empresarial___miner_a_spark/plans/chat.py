@@ -14,19 +14,11 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.embedding import embed_one
 from ..operators.serving import RamServingIndex
 from ..operators.similarity import topk_similar
-from ..sources.sinks import (
-    _FOOTER_MISS,
-    _footer_user_tail,
-    _is_local_store,
-    append_chat_history,
-    chat_store_exists,
-    read_chat_history,
-)
+from ..sources.sinks import append_chat_history, replay_tail
 
 SYSTEM_PROMPT = (
     "Eres InfoBot, asistente documental de la empresa. Responde usando "
@@ -82,157 +74,46 @@ def answer_question(
     llm: Callable[[list[dict]], str] = extractive_stub_llm,
     last_n_turns: int | None = DEFAULT_LAST_N_TURNS,
 ) -> ChatTurn:
-    """One full E2 turn against a built chunks index.
+    """One full E2 turn against a built chunks index: the stateless
+    tier, a one-turn ``ChatSession``. It rebuilds the prompt from the
+    store every turn (the replay tail read before the turn, the
+    ``turn_id`` counter at append time), which a multi-process
+    deployment needs.
 
     ``last_n_turns`` defaults to ``DEFAULT_LAST_N_TURNS`` (50): only the
-    n most recent turns are replayed, and the cap is applied BEFORE
-    collect (orderBy desc + limit → per-partition top-n heaps), so the
-    driver-side materialization is O(n) no matter how long the stored
-    history gets. ``last_n_turns=None`` is the explicit PARITY mode: it
-    replays the ENTIRE per-user history each turn — the reference's
-    ConversationBufferMemory behavior (app.py:228-242) — and grows
-    without bound, so it is opt-in rather than the default.
+    n most recent turns are replayed, capped before collect
+    (``sinks.replay_tail``), so the driver holds O(n) rows no matter how
+    long the stored history gets. ``last_n_turns=None`` is the explicit
+    PARITY mode: it replays the ENTIRE per-user history each turn — the
+    reference's ConversationBufferMemory behavior (app.py:228-242) — and
+    grows without bound, so it is opt-in rather than the default.
     """
-    past = (
-        _load_past(spark, history_path, user, last_n_turns)
-        if history_path
-        else []
-    )
-    return _run_turn(
-        spark, chunks, user, question, past, history_path, k, dim, llm
-    )
-
-
-def _load_past(
-    spark: SparkSession,
-    history_path: str,
-    user: str,
-    last_n_turns: int | None,
-) -> list[tuple[str, str]]:
-    """Replay tail from the store as (message, response) pairs in turn
-    order (T7 history replay, app.py:228-242)."""
-    # only the first-turn missing-history path may be empty; a transient
-    # read failure must surface (same contract as sinks._next_turn_id,
-    # and same silent fs.exists probe — see chat_store_exists).
-    if not chat_store_exists(spark, history_path):
-        return []
-    if last_n_turns is not None and _is_local_store(spark, history_path):
-        # r11: driver-local stores serve the bounded tail from footer-
-        # pruned pyarrow reads (newest files until the user's top-n rows
-        # by (ts, turn_id) are provably covered) — zero Spark jobs, work
-        # O(covering files) not O(history); anything unprovable (nested
-        # layout, NULL keys, foreign schema) falls back to the exact
-        # Spark read below. Equivalence pinned by
-        # tests/test_chat_session.py::test_footer_user_tail_matches_spark.
-        tail_rows = _footer_user_tail(history_path, user, last_n_turns)
-        if tail_rows is not _FOOTER_MISS:
-            return tail_rows
-    hist = read_chat_history(spark, history_path).where(
-        F.col("user") == user
-    )
-    if last_n_turns is not None:
-        # turn_id breaks same-timestamp ties deterministically
-        # (matching the stable full-replay order below)
-        tail = hist.orderBy(
-            F.desc("ts"), F.desc_nulls_last("turn_id")
-        ).limit(last_n_turns)
-        past = sorted(
-            tail.collect(),
-            key=lambda r: (r.ts, r.turn_id if r.turn_id is not None else -1),
-        )
-    else:
-        past = hist.orderBy(
-            "ts", F.asc_nulls_first("turn_id")
-        ).collect()
-    return [(t.message, t.response) for t in past]
-
-
-def _run_turn(
-    spark: SparkSession,
-    chunks: DataFrame | RamServingIndex,
-    user: str,
-    question: str,
-    past: list[tuple[str, str]],
-    history_path: str | None,
-    k: int,
-    dim: int,
-    llm: Callable[[list[dict]], str],
-    base_turn_id: int | None = None,
-) -> ChatTurn:
-    """The turn core shared by the stateless path and ``ChatSession``:
-    retrieve (K1) → context fold (T6) → prompt assembly over ``past``
-    (T7) → LLM → persist (S6). ``past`` is the replay buffer however it
-    was sourced — from the store (``answer_question``) or from RAM
-    (``ChatSession``) — so the two modes assemble byte-identical
-    prompts for the same history."""
-    qvec = embed_one(question, dim=dim)
-    # K1 retrieval, two physical tiers with bit-identical results
-    # (operators/serving.py, pinned by tests/test_serving_ram.py):
-    # a DataFrame index runs the distributed TakeOrderedAndProject
-    # plan; a RamServingIndex answers driver-side with zero Spark
-    # jobs — the reference's client-side Chroma query (app.py:223).
-    if isinstance(chunks, RamServingIndex):
-        hits = chunks.topk(qvec, k=k)
-    else:
-        hits = topk_similar(chunks, qvec, k=k).collect()
-    context = "\n".join(r.text for r in hits)  # T6 app.py:224
-
-    messages = [{"role": "system", "content": SYSTEM_PROMPT}]
-    for msg, resp in past:
-        messages.append({"role": "user", "content": msg})
-        messages.append({"role": "assistant", "content": resp})
-    messages.append({"role": "user", "content": question})
-    if context:
-        messages.append({"role": "system", "content": context})
-
-    answer = llm(messages)
-
-    # token accounting: whitespace-token estimate (tiktoken stand-in)
-    prompt_tokens = sum(len(m["content"].split()) for m in messages)
-    completion_tokens = len(answer.split())
-    cost = (
-        prompt_tokens * PROMPT_TOKEN_USD
-        + completion_tokens * COMPLETION_TOKEN_USD
-    )
-
-    if history_path:  # S6 persist (app.py:258)
-        append_chat_history(
-            spark,
-            [(user, question, answer, None, prompt_tokens, completion_tokens)],
-            history_path,
-            base_turn_id=base_turn_id,
-        )
-    return ChatTurn(
-        answer=answer,
-        context=context,
-        messages=messages,
-        prompt_tokens=prompt_tokens,
-        completion_tokens=completion_tokens,
-        cost_usd=cost,
-    )
+    return ChatSession(
+        spark, chunks, user, history_path, k, dim, llm, last_n_turns
+    ).ask(question)
 
 
 class ChatSession:
-    """Stateful serving session — the reference's actual runtime shape.
+    """Stateful serving session — the reference's actual runtime shape,
+    and the one implementation of a chat turn (``answer_question`` is a
+    one-turn session).
 
     In the reference the conversation memory is RAM-resident
     (``st.session_state.memory``, a ConversationBufferMemory,
     app.py:43-44 / 228-242) and Mongo is WRITE-only per turn
     (``guardar_chat_en_mongo``, app.py:258): the store is an audit log,
-    not the serving path. ``answer_question`` models the stateless tier
-    — reconstruct the prompt from the store every turn — which a
-    multi-process deployment needs, but it pays two extra Spark jobs
-    per turn (history-tail read + turn-counter read-before-write). A
-    live session holds both in RAM: the replay buffer is appended
-    in-process and the persisted ``turn_id`` counter is read once at
-    construction and advanced locally (single-writer append, the same
-    assumption ``sinks.append_chat_history`` documents). A turn then
-    costs exactly ONE Spark job — the retrieval collect; the append is
-    a driver-side Arrow write (``sinks._arrow_append``, the engine
-    analogue of the reference's client-side insert_one) — and yields
-    byte-identical prompts, answers, and persisted rows to the
-    stateless loop (pinned by tests/test_chat_session.py and the
-    sink equivalence battery).
+    not the serving path. A session reads the store twice, in the
+    stateless tier's order: the replay tail at construction
+    (``sinks.replay_tail``) and the persisted ``turn_id`` counter at its
+    first append (``append_chat_history`` derives it and returns the
+    next one). From then on both live in RAM: the replay buffer is
+    appended in-process and the counter advanced locally (single-writer
+    append, the same assumption ``append_chat_history`` documents). A
+    later turn costs exactly ONE Spark job — the retrieval collect; the
+    append is a driver-side Arrow write, the engine analogue of the
+    reference's client-side insert_one — and yields byte-identical
+    prompts, answers, and persisted rows to the stateless loop (pinned
+    by tests/test_chat_session.py and the sink equivalence battery).
 
     Passing a ``RamServingIndex`` as ``chunks`` drops the remaining
     job: retrieval answers driver-side from the bounded RAM index
@@ -253,8 +134,6 @@ class ChatSession:
         llm: Callable[[list[dict]], str] = extractive_stub_llm,
         last_n_turns: int | None = DEFAULT_LAST_N_TURNS,
     ) -> None:
-        from ..sources.sinks import _next_turn_id
-
         self._spark = spark
         self._chunks = chunks
         self._user = user
@@ -263,36 +142,67 @@ class ChatSession:
         self._dim = dim
         self._llm = llm
         self._last_n_turns = last_n_turns
-        # one store read each at construction (zero when no store):
-        # resume the replay buffer and the persisted turn counter from
-        # whatever a previous session left behind
+        # resume the replay buffer from whatever a previous session or
+        # the stateless tier left behind
         self._buffer: list[tuple[str, str]] = (
-            _load_past(spark, history_path, user, last_n_turns)
+            replay_tail(spark, history_path, user, last_n_turns)
             if history_path
             else []
         )
-        self._next_id = (
-            _next_turn_id(spark, history_path) if history_path else 0
-        )
+        self._next_id: int | None = None  # first append reads the store
 
     def ask(self, question: str) -> ChatTurn:
-        turn = _run_turn(
-            self._spark,
-            self._chunks,
-            self._user,
-            question,
-            self._buffer,
-            self._history_path,
-            self._k,
-            self._dim,
-            self._llm,
-            base_turn_id=self._next_id,
+        """retrieve (K1) → context fold (T6) → prompt assembly over the
+        replay buffer (T7) → LLM → persist (S6)."""
+        qvec = embed_one(question, dim=self._dim)
+        # K1 retrieval, two physical tiers with bit-identical results
+        # (operators/serving.py, pinned by tests/test_serving_ram.py):
+        # a DataFrame index runs the distributed TakeOrderedAndProject
+        # plan; a RamServingIndex answers driver-side with zero Spark
+        # jobs — the reference's client-side Chroma query (app.py:223).
+        if isinstance(self._chunks, RamServingIndex):
+            hits = self._chunks.topk(qvec, k=self._k)
+        else:
+            hits = topk_similar(self._chunks, qvec, k=self._k).collect()
+        context = "\n".join(r.text for r in hits)  # T6 app.py:224
+
+        messages = [{"role": "system", "content": SYSTEM_PROMPT}]
+        for msg, resp in self._buffer:
+            messages.append({"role": "user", "content": msg})
+            messages.append({"role": "assistant", "content": resp})
+        messages.append({"role": "user", "content": question})
+        if context:
+            messages.append({"role": "system", "content": context})
+
+        answer = self._llm(messages)
+
+        # token accounting: whitespace-token estimate (tiktoken stand-in)
+        prompt_tokens = sum(len(m["content"].split()) for m in messages)
+        completion_tokens = len(answer.split())
+        cost = (
+            prompt_tokens * PROMPT_TOKEN_USD
+            + completion_tokens * COMPLETION_TOKEN_USD
         )
-        self._next_id += 1
-        self._buffer.append((question, turn.answer))
+
+        if self._history_path:  # S6 persist (app.py:258)
+            self._next_id = append_chat_history(
+                self._spark,
+                [(self._user, question, answer, None, prompt_tokens,
+                  completion_tokens)],
+                self._history_path,
+                base_turn_id=self._next_id,
+            )
+        self._buffer.append((question, answer))
         if self._last_n_turns is not None:
             # keep the RAM buffer at the same bounded window the
             # stateless tier replays, so a turn sees identical history
             # whichever mode served the preceding turns
             self._buffer = self._buffer[-self._last_n_turns :]
-        return turn
+        return ChatTurn(
+            answer=answer,
+            context=context,
+            messages=messages,
+            prompt_tokens=prompt_tokens,
+            completion_tokens=completion_tokens,
+            cost_usd=cost,
+        )

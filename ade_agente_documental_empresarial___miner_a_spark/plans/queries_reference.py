@@ -35,7 +35,7 @@ from ..operators.sectioning import (
     extract_titles,
     split_paragraphs,
 )
-from .catalog import events_table, register, table
+from .catalog import DUCK_EVENTS, events_table, register, table
 
 
 # ---------------------------------------------------------------------------
@@ -873,12 +873,9 @@ def s6_transcript_reconstruct(spark: SparkSession, sf: str) -> DataFrame:
 # composing the sessionization window with the cost projections at the
 # EVENT level — one user-partitioned window + one groupBy, no
 # session⋈event range join. DECIMAL cost sums stay order-insensitive.
-def _register_chat_session_costs():
-    from .catalog import DUCK_EVENTS
-
-    @register(
-        "chat_session_costs",
-        f"""WITH {DUCK_EVENTS},
+@register(
+    "chat_session_costs",
+    f"""WITH {DUCK_EVENTS},
 t AS (
   SELECT user_id, event_id, ts,
          CAST(value AS DECIMAL(18,2)) AS ptok,
@@ -903,40 +900,36 @@ SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
        CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS DOUBLE) / 1000000.0
          AS duration_s
 FROM s GROUP BY user_id, session_id""",
+)
+def chat_session_costs(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.sessions import with_session_ids
+
+    ev = events_table(spark, sf).select(
+        "user_id",
+        "event_id",
+        "ts",
+        F.col("value").cast("decimal(18,2)").alias("ptok"),
+        F.regexp_extract("props", r"([0-9]+)", 1)
+        .cast("bigint")
+        .cast("decimal(18,2)")
+        .alias("ctok"),
     )
-    def chat_session_costs(spark: SparkSession, sf: str) -> DataFrame:
-        from decimal import Decimal
-
-        from ..operators.sessions import with_session_ids
-
-        ev = events_table(spark, sf).select(
-            "user_id",
-            "event_id",
-            "ts",
-            F.col("value").cast("decimal(18,2)").alias("ptok"),
-            F.regexp_extract("props", r"([0-9]+)", 1)
-            .cast("bigint")
-            .cast("decimal(18,2)")
-            .alias("ctok"),
+    s = with_session_ids(ev, gap_minutes=720)
+    return s.groupBy("user_id", "session_id").agg(
+        F.count(F.lit(1)).alias("n_turns"),
+        F.sum("ptok").cast("double").alias("prompt_tokens"),
+        F.sum("ctok").cast("double").alias("completion_tokens"),
+        F.sum(
+            F.col("ptok") * F.lit(Decimal("0.00001"))
+            + F.col("ctok") * F.lit(Decimal("0.00003"))
         )
-        s = with_session_ids(ev, gap_minutes=720)
-        return s.groupBy("user_id", "session_id").agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum("ptok").cast("double").alias("prompt_tokens"),
-            F.sum("ctok").cast("double").alias("completion_tokens"),
-            F.sum(
-                F.col("ptok") * F.lit(Decimal("0.00001"))
-                + F.col("ctok") * F.lit(Decimal("0.00003"))
-            )
-            .cast("double")
-            .alias("cost_usd"),
+        .cast("double")
+        .alias("cost_usd"),
+        (
             (
-                (
-                    F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))
-                ).cast("double")
-                / 1_000_000.0
-            ).alias("duration_s"),
-        )
+                F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))
+            ).cast("double")
+            / 1_000_000.0
+        ).alias("duration_s"),
+    )
 
-
-_register_chat_session_costs()

@@ -21,18 +21,22 @@ from ..functions.exactmath import (
 from ..functions.vector import (
     abs_max,
     cosine_staged,
+    cosine_to_literal,
     duck_abs_max,
     duck_cosine,
     duck_dot,
     duck_int_dot,
+    duck_l2_sq,
     duck_quantize_i8,
     int_dot,
     l2_norm,
     quantize_i8,
 )
 from ..operators import ann
+from ..operators.ann import PQ_KSUB, PQ_M, PQ_SUBDIM
+from ..operators.embedding import embed_one
 from ..operators.similarity import knn_join
-from .catalog import _ORACLES, _source_tag, register, table
+from .catalog import _source_tag, register, table
 from .queries_dedup import (
     _DUCK_IVF_CODEBOOK,
     _IVF_K,
@@ -41,7 +45,7 @@ from .queries_dedup import (
     _IVF_QID,
     _PLANES,
 )
-from .queries_text import _BM25_TERMS, text_bm25_topk
+from .queries_text import _BM25_TERMS, _DUCK_BM25_TOPK, text_bm25_topk
 
 
 # ---------------------------------------------------------------------------
@@ -186,9 +190,7 @@ def sim_quantized_topk_q(spark: SparkSession, sf: str) -> DataFrame:
 # compressed-SCAN baseline; this is the pruned path. Shares the Lloyd-
 # refined codebook CTE with sim_ivf_topk, so the oracle replays codebook →
 # assign → quantize → probe → integer-dot rank end-to-end.
-@register(
-    "sim_ivf_quantized",
-    f"""WITH {_DUCK_IVF_CODEBOOK},
+_DUCK_IVF_QUANTIZED = f"""WITH {_DUCK_IVF_CODEBOOK},
 assign AS (
   SELECT e.vec_id, e.embedding, c.cid,
          row_number() OVER (PARTITION BY e.vec_id
@@ -222,8 +224,10 @@ ranked AS (
                             ORDER BY approx_dot DESC, vec_id) AS rnk
   FROM sc)
 SELECT query_id, vec_id, CAST(rnk AS BIGINT) AS rnk, approx_dot
-FROM ranked WHERE rnk <= 5""",
-)
+FROM ranked WHERE rnk <= 5"""
+
+
+@register("sim_ivf_quantized", _DUCK_IVF_QUANTIZED)
 def sim_ivf_quantized(spark: SparkSession, sf: str) -> DataFrame:
     return ann.ivf_quantized_topk(
         table(spark, sf, "embeddings"),
@@ -244,23 +248,19 @@ def sim_ivf_quantized(spark: SparkSession, sf: str) -> DataFrame:
 # The oracle is sim_ivf_quantized's full replay SQL: the persisted path
 # must be bit-identical to recomputing the index from scratch, which is
 # exactly the invariant a saved index has to honor.
-def _register_sim_ivf_persisted():
-    @register("sim_ivf_persisted", _ORACLES["sim_ivf_quantized"])
-    def sim_ivf_persisted(spark: SparkSession, sf: str) -> DataFrame:
-        emb = table(spark, sf, "embeddings")
-        path = f"/tmp/ade_ivf_i8_{_source_tag(sf, 'embeddings')}"
-        if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-            ann.save_ivf_i8_index(
-                emb, path, n_centroids=_IVF_N, refine_iters=1
-            )
-        codes, cents = ann.load_ivf_i8_index(spark, path)
-        queries = emb.where(F.col("vec_id") < 10)
-        return ann.ivf_i8_search(
-            codes, cents, queries, k=5, nprobe=_IVF_NPROBE
+@register("sim_ivf_persisted", _DUCK_IVF_QUANTIZED)
+def sim_ivf_persisted(spark: SparkSession, sf: str) -> DataFrame:
+    emb = table(spark, sf, "embeddings")
+    path = f"/tmp/ade_ivf_i8_{_source_tag(sf, 'embeddings')}"
+    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
+        ann.save_ivf_i8_index(
+            emb, path, n_centroids=_IVF_N, refine_iters=1
         )
-
-
-_register_sim_ivf_persisted()
+    codes, cents = ann.load_ivf_i8_index(spark, path)
+    queries = emb.where(F.col("vec_id") < 10)
+    return ann.ivf_i8_search(
+        codes, cents, queries, k=5, nprobe=_IVF_NPROBE
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -473,11 +473,7 @@ def emb_centroid_classify(spark: SparkSession, sf: str) -> DataFrame:
 # are approximated by their centroids; per-subspace terms summed in
 # subspace order) all replay in the oracle from the same parquet. See
 # operators/ann.py:pq_* for the 100 TB shape discussion.
-def _register_sim_pq():
-    from ..functions.vector import duck_l2_sq
-    from ..operators.ann import PQ_KSUB, PQ_M, PQ_SUBDIM
-
-    oracle = f"""WITH subs AS (
+_DUCK_PQ_ADC = f"""WITH subs AS (
   SELECT unnest(generate_series(0, {PQ_M - 1})) AS sub),
 seeds AS (SELECT vec_id AS cid, embedding FROM embeddings
           WHERE vec_id < {PQ_KSUB}),
@@ -539,16 +535,12 @@ ranked AS (
 SELECT query_id, vec_id, CAST(rnk AS BIGINT) AS rnk, approx_l2
 FROM ranked WHERE rnk <= 5"""
 
-    @register("sim_pq_adc_topk", oracle)
-    def sim_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
-        from ..operators import ann
 
-        return ann.pq_adc_topk(
-            table(spark, sf, "embeddings"), query_max_id=10, k=5
-        )
-
-
-_register_sim_pq()
+@register("sim_pq_adc_topk", _DUCK_PQ_ADC)
+def sim_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
+    return ann.pq_adc_topk(
+        table(spark, sf, "embeddings"), query_max_id=10, k=5
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -565,23 +557,20 @@ _register_sim_pq()
 # fusion join is 10×10. Float parity: 1/(60+rank) is one correctly-
 # rounded division, the fusion sum is one addition with fixed operand
 # order (lex + dense) — no fold, no quantization needed.
-def _register_rrf():
-    from ..functions.vector import cosine_similarity, duck_cosine
-    from ..operators.embedding import embed_one
-    from .catalog import _ORACLES
+_RRF_QVEC = embed_one(" ".join(_BM25_TERMS))
+_RRF_QLIT = "[" + ", ".join(repr(float(x)) for x in _RRF_QVEC) + "]"
 
-    qtext = " ".join(_BM25_TERMS)
-    qvec = embed_one(qtext)
-    qlit_sql = "[" + ", ".join(repr(float(x)) for x in qvec) + "]"
 
-    oracle = f"""WITH lex0 AS ({_ORACLES["text_bm25_topk"]}),
+@register(
+    "sim_rrf_fusion",
+    f"""WITH lex0 AS ({_DUCK_BM25_TOPK}),
 lex AS (
   SELECT doc_id,
          row_number() OVER (ORDER BY score DESC, doc_id) AS lex_rnk
   FROM lex0),
 dense0 AS (
   SELECT vec_id AS doc_id,
-         {duck_cosine("embedding", qlit_sql)} AS dscore
+         {duck_cosine("embedding", _RRF_QLIT)} AS dscore
   FROM embeddings
   ORDER BY dscore DESC, doc_id LIMIT 10),
 dense AS (
@@ -591,46 +580,40 @@ dense AS (
 SELECT COALESCE(l.doc_id, d.doc_id) AS doc_id, l.lex_rnk, d.vec_rnk,
        COALESCE(1.0 / (60 + l.lex_rnk), 0.0)
        + COALESCE(1.0 / (60 + d.vec_rnk), 0.0) AS rrf_score
-FROM lex l FULL OUTER JOIN dense d ON l.doc_id = d.doc_id"""
+FROM lex l FULL OUTER JOIN dense d ON l.doc_id = d.doc_id""",
+)
+def sim_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
+    lex0 = text_bm25_topk(spark, sf)  # already TakeOrdered k=10
+    wl = Window.orderBy(F.desc("score"), "doc_id")
+    lex = lex0.withColumn(
+        "lex_rnk", F.row_number().over(wl).cast("long")
+    ).select("doc_id", "lex_rnk")
 
-    @register("sim_rrf_fusion", oracle)
-    def sim_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
-        lex0 = text_bm25_topk(spark, sf)  # already TakeOrdered k=10
-        wl = Window.orderBy(F.desc("score"), "doc_id")
-        lex = lex0.withColumn(
-            "lex_rnk", F.row_number().over(wl).cast("long")
-        ).select("doc_id", "lex_rnk")
-
-        from ..functions.vector import cosine_to_literal
-
-        emb = table(spark, sf, "embeddings")
-        dense0 = (
-            emb.select(
-                F.col("vec_id").alias("doc_id"),
-                # literal query: |q| folds to a driver constant
-                # (bit-exact re-grouping — cosine_to_literal)
-                cosine_to_literal(F.col("embedding"), qvec).alias("dscore"),
-            )
-            .orderBy(F.desc("dscore"), "doc_id")
-            .limit(10)
+    emb = table(spark, sf, "embeddings")
+    dense0 = (
+        emb.select(
+            F.col("vec_id").alias("doc_id"),
+            # literal query: |q| folds to a driver constant
+            # (bit-exact re-grouping — cosine_to_literal)
+            cosine_to_literal(F.col("embedding"), _RRF_QVEC).alias("dscore"),
         )
-        wd = Window.orderBy(F.desc("dscore"), "doc_id")
-        dense = dense0.withColumn(
-            "vec_rnk", F.row_number().over(wd).cast("long")
-        ).select("doc_id", "vec_rnk")
+        .orderBy(F.desc("dscore"), "doc_id")
+        .limit(10)
+    )
+    wd = Window.orderBy(F.desc("dscore"), "doc_id")
+    dense = dense0.withColumn(
+        "vec_rnk", F.row_number().over(wd).cast("long")
+    ).select("doc_id", "vec_rnk")
 
-        fused = lex.join(dense, ["doc_id"], "full_outer")
-        rrf = F.coalesce(
-            F.lit(1.0) / (F.lit(60) + F.col("lex_rnk")), F.lit(0.0)
-        ) + F.coalesce(
-            F.lit(1.0) / (F.lit(60) + F.col("vec_rnk")), F.lit(0.0)
-        )
-        return fused.select(
-            "doc_id", "lex_rnk", "vec_rnk", rrf.alias("rrf_score")
-        )
-
-
-_register_rrf()
+    fused = lex.join(dense, ["doc_id"], "full_outer")
+    rrf = F.coalesce(
+        F.lit(1.0) / (F.lit(60) + F.col("lex_rnk")), F.lit(0.0)
+    ) + F.coalesce(
+        F.lit(1.0) / (F.lit(60) + F.col("vec_rnk")), F.lit(0.0)
+    )
+    return fused.select(
+        "doc_id", "lex_rnk", "vec_rnk", rrf.alias("rrf_score")
+    )
 
 
 # ---------------------------------------------------------------------------

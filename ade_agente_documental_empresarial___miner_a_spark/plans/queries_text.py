@@ -203,9 +203,7 @@ _BM25_K1 = 1.2
 _BM25_B = 0.75
 
 
-@register(
-    "text_bm25_topk",
-    f"""WITH tokens AS (
+_DUCK_BM25_TOPK = f"""WITH tokens AS (
   SELECT doc_id, term FROM (
     SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
     FROM documents)
@@ -238,8 +236,10 @@ docs AS (
          CAST(count(*) AS BIGINT) AS n_matched
   FROM scored GROUP BY doc_id)
 SELECT doc_id, score, n_matched FROM docs
-ORDER BY score DESC, doc_id LIMIT 10""",
-)
+ORDER BY score DESC, doc_id LIMIT 10"""
+
+
+@register("text_bm25_topk", _DUCK_BM25_TOPK)
 def text_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     tokens = (
         table(spark, sf, "documents")

@@ -150,16 +150,3 @@ def get_spark(
     ensure_package_shipped(spark)
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load every fixture table in ``sf_dir`` as a dict of DataFrames."""
-    names = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    out = {}
-    for n in names:
-        path = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(path):
-            out[n] = spark.read.parquet(path)
-    return out

@@ -240,31 +240,6 @@ def csv_scan(
     return df.select(F.concat_ws(" ", *cols).alias("line"))
 
 
-def xlsx_scan(spark: SparkSession, path: str) -> DataFrame:
-    """S5 — the branch the reference declared but never implemented
-    (xlsx accepted by the uploader, silently dropped; app.py:17,191).
-    Single-small-file convenience path: openpyxl (via pd.read_excel) on
-    the driver when importable, else the vendored stdlib reader
-    (sources/xlsx_lite.py) with read_excel's first-row-is-header
-    convention → createDataFrame. For multi-file trees use
-    ``xlsx_scan_distributed`` — this driver path materializes the sheet
-    locally and must not be pointed at a 100 TB tree."""
-    try:
-        import openpyxl  # noqa: F401
-
-        pdf = pd.read_excel(path)
-    except ImportError:
-        from . import xlsx_lite
-
-        with open(path, "rb") as fh:
-            _, rows = xlsx_lite.read_workbook(fh.read())[0]
-        if not rows:
-            raise NotImplementedError("empty workbook")
-        header, body = rows[0], rows[1:]
-        pdf = pd.DataFrame(body, columns=[str(h) for h in header])
-    return spark.createDataFrame(pdf)
-
-
 XLSX_ROWS_SCHEMA = StructType(
     [
         StructField("path", StringType()),

@@ -9,12 +9,18 @@ Engine-native sink: append-mode Parquet table with the D4 schema
 them. The Mongo connector path is config-gated (``spark.ade.mongo.uri``):
 with the mongo-spark connector on the classpath the same DataFrame writes
 via ``format("mongodb")``; without it we stay Parquet-native.
+
+The store's reads live here too (``replay_tail`` and the ``turn_id``
+counter behind ``append_chat_history``), so the choice between a footer
+fast path and the exact Spark read is made in this one module.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import CONF_DEFAULTS
 
 _CHAT_ROW_SCHEMA = (
     "user string, message string, response string, ts timestamp, "
@@ -55,7 +61,37 @@ def _is_local_store(spark: SparkSession, path: str) -> bool:
     ) and default_fs.startswith("file:")
 
 
-_FOOTER_MISS = object()  # sentinel: statistics could not prove the max
+_FOOTER_MISS = object()  # sentinel: statistics could not prove the answer
+
+
+def _footers(path: str, columns: list[str]):
+    """``(file, footer metadata, {column: leaf index})`` for every
+    visible file of a flat local store, or ``_FOOTER_MISS`` when the
+    layout is not one the footer fast paths can reason about. Visible
+    means what Spark's file index lists: dot- and underscore-prefixed
+    names (a crashed ``.part-*.tmp``, ``_SUCCESS``, checksum files) are
+    skipped. A visible SUBDIRECTORY (a partitioned or nested layout,
+    whose files could hold higher keys) or a file lacking one of
+    ``columns`` is a miss. An unreadable footer (a truncated file)
+    raises, and the callers turn that into a miss: a file is never
+    silently skipped."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for name in os.listdir(path):
+        if name.startswith((".", "_")):
+            continue
+        full = os.path.join(path, name)
+        if not os.path.isfile(full):
+            return _FOOTER_MISS
+        md = pq.ParquetFile(full).metadata
+        names = md.schema.names
+        if not all(c in names for c in columns):
+            return _FOOTER_MISS
+        out.append((full, md, {c: names.index(c) for c in columns}))
+    return out
 
 
 def _footer_max_turn_id(path: str):
@@ -65,35 +101,15 @@ def _footer_max_turn_id(path: str):
     turn just for this one long). Returns the max (or None for an empty/
     all-NULL store) only when every visible file's row groups carry
     provably-exact int64 min/max stats; any doubt → ``_FOOTER_MISS`` and
-    the caller falls back to the Spark aggregation. Readers skip dot/
-    underscore-prefixed names exactly as Spark's file index does, so a
-    crashed ``.part-*.tmp`` never contributes."""
-    import os
-
-    import pyarrow.parquet as pq
-
+    the caller falls back to the Spark aggregation."""
     try:
-        names = []
-        for n in os.listdir(path):
-            if n.startswith((".", "_")):
-                continue
-            if not os.path.isfile(os.path.join(path, n)):
-                # a visible SUBDIRECTORY means a layout this flat-store
-                # reader does not understand (partitioned/nested) — its
-                # files could carry higher turn_ids, so the "max" below
-                # would under-count and re-issue ids. Route to the exact
-                # Spark read instead of guessing.
-                return _FOOTER_MISS
-            names.append(n)
+        footers = _footers(path, ["turn_id"])
+        if footers is _FOOTER_MISS:
+            return _FOOTER_MISS
         best = None
-        for n in names:
-            md = pq.ParquetFile(os.path.join(path, n)).metadata
-            try:
-                ci = md.schema.names.index("turn_id")
-            except ValueError:
-                return _FOOTER_MISS
+        for _, md, idx in footers:
             for rg in range(md.num_row_groups):
-                col = md.row_group(rg).column(ci)
+                col = md.row_group(rg).column(idx["turn_id"])
                 st = col.statistics
                 if st is None:
                     return _FOOTER_MISS
@@ -120,22 +136,21 @@ def _footer_user_tail(path: str, user: str, n: int):
     can be skipped only when its footer upper bound is strictly below
     the n-th best key already in hand. Returns the tail as
     [(message, response)] in ascending (ts, turn_id) order — exactly
-    what the Spark expression (filter user → orderBy ts desc, turn_id
-    desc_nulls_last → limit n → re-sort ascending) produces — or
-    ``_FOOTER_MISS`` when anything is unprovable: a visible
-    subdirectory, missing/unexpected columns, absent or non-int64/
-    non-timestamp statistics, or any NULL ts/turn_id (the Spark path's
-    nulls-last ordering is then authoritative). Work is O(covering
-    files), independent of stored history depth. ``n == 0`` returns
-    ``[]`` without reading a file; ``n < 0`` returns ``_FOOTER_MISS`` so
-    the Spark path raises its own limit error.
+    what ``replay_tail``'s Spark read produces — or ``_FOOTER_MISS``
+    when anything is unprovable: a visible subdirectory, missing/
+    unexpected columns, absent or non-int64/non-timestamp statistics,
+    or any NULL ts/turn_id (the Spark path's nulls-last ordering is
+    then authoritative). Work is O(covering files), independent of
+    stored history depth. ``n == 0`` returns ``[]`` without reading a
+    file; ``n < 0`` returns ``_FOOTER_MISS`` so the Spark path raises
+    its own limit error.
     """
     if n == 0:
         return []
     if n < 0:
         return _FOOTER_MISS
 
-    import os
+    import json
 
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -143,24 +158,13 @@ def _footer_user_tail(path: str, user: str, n: int):
 
     need = ["user", "message", "response", "ts", "turn_id"]
     try:
+        footers = _footers(path, need)
+        if footers is _FOOTER_MISS:
+            return _FOOTER_MISS
         files = []
-        for name in os.listdir(path):
-            if name.startswith((".", "_")):
-                continue
-            full = os.path.join(path, name)
-            if not os.path.isfile(full):
-                return _FOOTER_MISS  # nested layout — Spark path decides
-            md = pq.ParquetFile(full).metadata
-            idx = {}
-            for c in need:
-                try:
-                    idx[c] = md.schema.names.index(c)
-                except ValueError:
-                    return _FOOTER_MISS
+        for full, md, idx in footers:
             # prove the physical layout BEFORE trusting any bound: ts
             # must be micros-unit UTC-adjusted, turn_id a plain INT64
-            import json
-
             ts_sch = md.schema.column(idx["ts"])
             id_sch = md.schema.column(idx["turn_id"])
             ts_lt = json.loads(ts_sch.logical_type.to_json())
@@ -263,17 +267,52 @@ def _next_turn_id(spark: SparkSession, path: str) -> int:
     # ONLY the missing-history case may restart numbering at 0. A
     # transient read failure must propagate — swallowing it would
     # assign duplicate turn_ids and corrupt the same-timestamp
-    # tiebreaker chat.py's bounded replay depends on. With the explicit
-    # existence probe there is no except-clause left to mis-swallow it.
+    # tiebreaker replay_tail depends on. With the explicit existence
+    # probe there is no except-clause left to mis-swallow it.
     if not chat_store_exists(spark, path):
         return 0
     if _is_local_store(spark, path):
         m = _footer_max_turn_id(path)
         if m is not _FOOTER_MISS:
             return (m if m is not None else -1) + 1
-    prev = spark.read.schema(CHAT_SCHEMA).parquet(path)
+    prev = read_chat_history(spark, path)
     row = prev.agg(F.max("turn_id").alias("m")).collect()[0]
     return (row.m if row.m is not None else -1) + 1
+
+
+def replay_tail(
+    spark: SparkSession, path: str, user: str, n: int | None
+) -> list[tuple[str, str]]:
+    """``user``'s replay buffer from the store (T7 history replay,
+    app.py:228-242): ``[(message, response)]`` in turn order — by ts,
+    then turn_id — holding the newest ``n`` turns, or every turn when
+    ``n`` is None.
+
+    The read path is chosen here. A missing store is a first turn and
+    gives ``[]``; any other read failure surfaces (the same contract as
+    ``_next_turn_id``). A bounded tail of a driver-local store is served
+    from footer-pruned pyarrow reads (``_footer_user_tail``: zero Spark
+    jobs, work O(covering files) not O(history)). Every other store,
+    full replay, and every ``_FOOTER_MISS`` (nested layout, NULL keys,
+    foreign schema, unreadable file) take the exact Spark read, whose
+    cap is applied BEFORE collect (orderBy desc + limit → per-partition
+    top-n heaps), so the driver holds O(n) rows however deep the
+    history."""
+    if not chat_store_exists(spark, path):
+        return []
+    if n is not None and _is_local_store(spark, path):
+        tail = _footer_user_tail(path, user, n)
+        if tail is not _FOOTER_MISS:
+            return tail
+    hist = read_chat_history(spark, path).where(F.col("user") == user)
+    if n is None:
+        rows = hist.orderBy("ts", F.asc_nulls_first("turn_id")).collect()
+    else:
+        # turn_id breaks same-timestamp ties deterministically; the
+        # newest-first rows are reversed into the full replay's order
+        newest = hist.orderBy(F.desc("ts"), F.desc_nulls_last("turn_id"))
+        rows = newest.limit(n).collect()[::-1]
+    return [(r.message, r.response) for r in rows]
 
 
 def _arrow_append(rows: list[tuple], path: str) -> None:
@@ -326,7 +365,7 @@ def append_chat_history(
     rows: list[tuple],
     path: str,
     base_turn_id: int | None = None,
-) -> None:
+) -> int:
     """Append chat turns (S6). ``rows`` are (user, message, response,
     ts, prompt_tokens, completion_tokens) tuples; ts=None → now()
     (one shared batch timestamp, matching current_timestamp()'s
@@ -343,7 +382,10 @@ def append_chat_history(
     (single-writer append, as in the reference's chat loop).
     ``base_turn_id`` lets a caller that already knows the counter (a
     live ChatSession holding it in RAM) skip the read-before-write;
-    when omitted the stored max is re-derived."""
+    when omitted the stored max is re-derived. Returns the next
+    ``turn_id``, the counter a single writer passes to its next append.
+    The connector branch writes to the database and collection named
+    by ``spark.ade.mongo.db`` / ``spark.ade.mongo.collection``."""
     from datetime import datetime, timezone
 
     try:
@@ -385,16 +427,19 @@ def append_chat_history(
 
     mongo_uri = spark.conf.get("spark.ade.mongo.uri", None)
     if mongo_uri:
+        db, coll = (
+            spark.conf.get(k, CONF_DEFAULTS[k])
+            for k in ("spark.ade.mongo.db", "spark.ade.mongo.collection")
+        )
         (
             _spark_df().write.format("mongodb")
             .mode("append")
             .option("connection.uri", mongo_uri)
-            .option("database", "db-historial-chats")
-            .option("collection", "coleccion-histochats")
+            .option("database", db)
+            .option("collection", coll)
             .save()
         )
-        return
-    if not _is_local_store(spark, path):
+    elif not _is_local_store(spark, path):
         # explicit URI scheme (hdfs://, s3a://, even file:) OR a bare
         # path under a non-local fs.defaultFS: the driver-side write
         # below is local-FS only, and Spark readers resolve bare paths
@@ -402,8 +447,9 @@ def append_chat_history(
         # store across filesystems. Keep the Spark writer, which speaks
         # every Hadoop filesystem.
         _spark_df().write.mode("append").parquet(path)
-        return
-    _arrow_append(full, path)
+    else:
+        _arrow_append(full, path)
+    return base + len(rows)
 
 
 def read_chat_history(spark: SparkSession, path: str) -> DataFrame:

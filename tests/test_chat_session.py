@@ -10,7 +10,11 @@ counter/buffer resume across sessions.
 """
 
 import datetime as dt
+import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from ade_agente_documental_empresarial___miner_a_spark.plans.chat import (
@@ -20,9 +24,11 @@ from ade_agente_documental_empresarial___miner_a_spark.plans.chat import (
 from ade_agente_documental_empresarial___miner_a_spark.plans.pipeline import (
     build_chunks,
 )
+from ade_agente_documental_empresarial___miner_a_spark.sources import sinks
 from ade_agente_documental_empresarial___miner_a_spark.sources.sinks import (
     append_chat_history,
     read_chat_history,
+    replay_tail,
 )
 
 
@@ -76,8 +82,8 @@ def test_session_matches_stateless_loop(spark, tmp_path):
 
 def test_session_resumes_counter_and_buffer(spark, tmp_path):
     """Constructed over an existing store, the session replays the tail
-    and continues the persisted turn_id counter (single store read at
-    construction, not per turn)."""
+    and continues the persisted turn_id counter (the tail is read at
+    construction and the counter at the first append, not per turn)."""
     chunks = make_index(spark)
     path = str(tmp_path / "chat")
     base = dt.datetime(2026, 1, 1, 12, 0, 0)
@@ -122,10 +128,10 @@ def test_session_without_store(spark):
 
 
 def test_session_job_budget(spark, tmp_path):
-    """The serving contract: after construction, a turn launches
-    exactly ONE Spark job — the retrieval collect; the history append
-    is a driver-side Arrow write since round 6 (the stateless loop
-    additionally pays a history-read job every turn)."""
+    """The serving contract: after its first turn, a session's turn
+    launches exactly ONE Spark job — the retrieval collect; the history
+    append is a driver-side Arrow write since round 6, and the counter
+    lives in RAM."""
     chunks = make_index(spark)
     # materialize the index first so retrieval doesn't re-run the
     # chunk build lineage inside the counted window
@@ -324,3 +330,178 @@ def test_footer_user_tail_matches_spark(spark, tmp_path):
     assert _footer_user_tail(path, "ana", 2) is not _FOOTER_MISS
     os.makedirs(str(tmp_path / "hist" / "extra_dir"))
     assert _footer_user_tail(path, "ana", 2) is _FOOTER_MISS
+
+
+# ---------------------------------------------------------------------------
+# Fault injection: each footer fast path either answers exactly as the
+# Spark read would or misses; it never skips a file it cannot read. The
+# same store addressed by a ``file://`` URI is not a driver-local store,
+# so it always takes the exact Spark read and serves as the reference.
+
+T0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+
+
+def _arrow_file(path, name, ts, turn_ids, ts_type=pa.timestamp("us", "UTC"),
+                id_type=pa.int64()):
+    """One foreign parquet file of ana's turns, schema types overridden."""
+    n = len(turn_ids)
+    pq.write_table(
+        pa.table({
+            "user": ["ana"] * n,
+            "message": [f"fm{i}" for i in turn_ids],
+            "response": [f"fr{i}" for i in turn_ids],
+            "ts": pa.array(ts, ts_type),
+            "prompt_tokens": pa.array([1] * n, pa.int64()),
+            "completion_tokens": pa.array([1] * n, pa.int64()),
+            "turn_id": pa.array(turn_ids, id_type),
+        }),
+        os.path.join(path, name),
+    )
+
+
+def _truncated(spark, path):
+    good = sorted(f for f in os.listdir(path) if f.startswith("part-"))[0]
+    with open(os.path.join(path, good), "rb") as fh:
+        data = fh.read()
+    with open(os.path.join(path, "part-truncated.parquet"), "wb") as fh:
+        fh.write(data[: len(data) // 2])
+
+
+def _garbage_tmp(spark, path):
+    with open(os.path.join(path, ".part-crashed.parquet.tmp"), "wb") as fh:
+        fh.write(b"PAR1 half-written")
+
+
+def _int32_turn_id(spark, path):
+    _arrow_file(path, "part-int32.parquet",
+                ts=[T0 + dt.timedelta(days=9)], turn_ids=[9],
+                id_type=pa.int32())
+
+
+def _string_ts(spark, path):
+    _arrow_file(path, "part-strts.parquet", ts=["2024-02-01 00:00:00"],
+                turn_ids=[9], ts_type=pa.string())
+
+
+def _null_ts(spark, path):
+    _arrow_file(path, "part-nullts.parquet", ts=[None], turn_ids=[9])
+
+
+def _null_user(spark, path):
+    append_chat_history(
+        spark, [(None, "nobody's", "turn", T0 + dt.timedelta(days=2), 1, 1)],
+        path,
+    )
+
+
+def _spark_written(spark, path):
+    # the Spark writer (explicit URI scheme) under get_spark's conf, into
+    # the same directory: the store now mixes both writers' files
+    append_chat_history(
+        spark, [("ana", "sm", "sr", T0 + dt.timedelta(days=3), 1, 1)],
+        f"file://{path}",
+    )
+
+
+# case -> (fault, counter fast path hits, replay fast path hits)
+FAULTS = {
+    "truncated": (_truncated, False, False),
+    "garbage_tmp": (_garbage_tmp, True, True),
+    "int32_turn_id": (_int32_turn_id, True, False),
+    "string_ts": (_string_ts, True, False),
+    "null_ts": (_null_ts, True, False),
+    "null_user": (_null_user, True, True),
+    "spark_and_arrow": (_spark_written, True, True),
+}
+
+
+def _outcome(fn):
+    """The value, or ``RuntimeError`` for any raise: a fault may fail a
+    read, but then both paths must fail."""
+    try:
+        return fn()
+    except Exception:  # noqa: BLE001
+        return RuntimeError
+
+
+@pytest.mark.parametrize("case", sorted(FAULTS))
+def test_chat_store_fault_paths_agree(spark, tmp_path, case):
+    """ROADMAP item 5: for each injected fault, ``replay_tail`` and
+    ``append_chat_history``'s counter give the same answer on the local
+    store (footer fast paths) as on the exact Spark read, or both raise;
+    each fast path hits exactly on the stores it hit on before."""
+    fault, max_hits, tail_hits = FAULTS[case]
+    path = str(tmp_path / "hist")
+    append_chat_history(
+        spark,
+        [("ana", f"m{i}", f"r{i}", T0 + dt.timedelta(hours=i), 1, 1)
+         for i in range(3)] + [("bob", "bm", "br", T0, 1, 1)],
+        path,
+    )
+    append_chat_history(
+        spark, [("ana", "m3", "r3", T0 + dt.timedelta(hours=1), 1, 1)], path
+    )
+    fault(spark, path)
+
+    miss = sinks._FOOTER_MISS
+    assert (sinks._footer_max_turn_id(path) is not miss) == max_hits
+    assert (sinks._footer_user_tail(path, "ana", 2) is not miss) == tail_hits
+
+    exact = f"file://{path}"
+    for user, n in [("ana", 2), ("ana", 50), ("ana", None), ("bob", 2)]:
+        fast = _outcome(lambda: replay_tail(spark, path, user, n))
+        assert fast == _outcome(lambda: replay_tail(spark, exact, user, n)), (
+            user, n,
+        )
+        # a file the footer scan cannot read is never skipped: the exact
+        # read decides, and it fails on a truncated file
+        assert fast is not RuntimeError or case in ("truncated", "string_ts")
+        assert fast is RuntimeError or case != "truncated"
+
+    copy = str(tmp_path / "copy")
+    shutil.copytree(path, copy)
+    row = [("ana", "q", "a", None, 1, 1)]
+    fast = _outcome(lambda: append_chat_history(spark, row, path))
+    assert fast == _outcome(
+        lambda: append_chat_history(spark, row, f"file://{copy}")
+    )
+    assert (fast is RuntimeError) == (case == "truncated")
+
+
+def test_only_sinks_imports_its_private_names():
+    """The chat store's read-path choice (footer fast path or exact Spark
+    read) lives in ``sources/sinks.py``: no other module imports one of
+    its underscore names or reads one off the module. Tests are exempt."""
+    import ast
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    leaks = []
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith(".") and d != "tests"]
+        for f in files:
+            full = os.path.join(dirpath, f)
+            if not f.endswith(".py") or full.endswith(
+                os.path.join("sources", "sinks.py")
+            ):
+                continue
+            with open(full) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.ImportFrom) and (
+                    node.module or ""
+                ).split(".")[-1] == "sinks":
+                    names = [a.name for a in node.names]
+                elif (
+                    isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "sinks"
+                ):
+                    names = [node.attr]
+                else:
+                    continue
+                leaks += [
+                    f"{os.path.relpath(full, root)}:{node.lineno} {n}"
+                    for n in names
+                    if n.startswith("_")
+                ]
+    assert leaks == []

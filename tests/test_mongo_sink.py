@@ -167,3 +167,27 @@ def test_unset_uri_falls_back_to_parquet(spark, tmp_path):
         pq_path,
     )
     assert os.path.exists(pq_path)
+
+
+def test_database_and_collection_settings_reach_the_connector(
+    spark, mongo_uri, tmp_path
+):
+    """``spark.ade.mongo.db`` / ``spark.ade.mongo.collection`` (reported by
+    ``session.config_source``) name the connector's target; unset, the
+    reference's names apply (the test above)."""
+    import datetime as dt
+
+    spark.conf.set("spark.ade.mongo.db", "audit-db")
+    spark.conf.set("spark.ade.mongo.collection", "turns")
+    try:
+        append_chat_history(
+            spark,
+            [("ana", "hola", "re", dt.datetime(2026, 1, 1, 12), 1, 1)],
+            str(tmp_path / "chatpq"),
+        )
+    finally:
+        spark.conf.unset("spark.ade.mongo.db")
+        spark.conf.unset("spark.ade.mongo.collection")
+    docs = _read_docs(os.path.join(mongo_uri, "audit-db", "turns"))
+    assert [d["message"] for d in docs] == ["hola"]
+    assert not os.path.exists(os.path.join(mongo_uri, "db-historial-chats"))

@@ -39,7 +39,7 @@ occurs ONLY in never-checked entries is an open risk and the entry should
 be reshaped before its window slot comes up.
 
 Usage:  python tools/gate_mimic.py [name ...]     (default: all oracle-paired)
-        SF_DIR=... OUT=docs/gate_mimic_r5.json python tools/gate_mimic.py
+        SF_DIR=... OUT=gate_mimic.json python tools/gate_mimic.py
 """
 
 from __future__ import annotations

@@ -43,7 +43,7 @@ Usage:
     python tools/parity_fuzz.py                      # all profiles, seed 0
     python tools/parity_fuzz.py --profiles edge,tiny --seeds 0,1,2
     python tools/parity_fuzz.py --only text_bm25_topk dedup_exact
-    PARITY_FUZZ_JSON=docs/parity_fuzz_r8.json python tools/parity_fuzz.py
+    PARITY_FUZZ_JSON=parity_fuzz.json python tools/parity_fuzz.py
 """
 
 from __future__ import annotations

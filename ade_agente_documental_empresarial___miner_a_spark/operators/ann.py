@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import (
     const_l2_norm,
-    cosine_similarity,
     l2_norm,
     lit_double_matrix,
     lit_doubles,
@@ -228,7 +227,6 @@ def lloyd_refine_codebook(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     iters: int = 1,
-    impl: str = "arrow",
 ) -> list[tuple[int, list[float]]]:
     """Seeded Lloyd's refinement of the coarse codebook, engine-portable.
 
@@ -243,13 +241,16 @@ def lloyd_refine_codebook(
 
     One groupBy per iteration over (cell, dim) keys — at 100 TB this is a
     single well-partitioned agg per pass; the collect is n_centroids × dim
-    doubles (bounded). Empty cells drop out deterministically.
+    doubles (bounded). Empty cells drop out deterministically, and an
+    empty codebook (no seed id below n_centroids) is returned unchanged.
     """
     from ..functions.vector import abs_max, quantize_i8
 
     cents = _centroid_rows(emb, n_centroids, vec_col, id_col)
     for _ in range(iters):
-        if impl == "arrow" and _cents_dense(cents):
+        if not cents:
+            break  # no cell to update
+        if _cents_dense(cents):
             # fused Arrow kernel: assignment + map-side integer partial
             # aggregation in one pass over only the vector column — the
             # exploded (n_rows x dim)-row generate/agg below was the
@@ -266,17 +267,10 @@ def lloyd_refine_codebook(
                 ).alias("c")
             )
         else:
-            # impl="hof": the bit-exact all-Spark opt-out lane — assignment
-            # via the Catalyst HOF fold, update via posexplode + agg. A
-            # non-dense codebook (ragged/None centroids) also lands here
-            # with the HOF assigner: the numpy kernels need a rectangular
-            # matrix (the pre-r10 arrow lane raised on such codebooks;
-            # the HOF fold pads and is the lane's exactness contract).
-            up_impl = "hof" if impl == "arrow" else impl
-            assigned = _assigner(up_impl)(
-                emb, n_centroids, vec_col, id_col, cents=cents
-            )
-            codes = assigned.select(
+            # a ragged or None-bearing codebook: the numpy kernels need a
+            # rectangular matrix, so assignment takes the HOF fold (which
+            # pads) and the update posexplodes + aggregates in Spark
+            codes = _ivf_assign_hof(emb, cents, vec_col).select(
                 "cell",
                 F.posexplode(
                     quantize_i8(F.col(vec_col), abs_max(F.col(vec_col)))
@@ -297,15 +291,13 @@ def lloyd_refine_codebook(
     return cents
 
 
-_const_l2_norm = const_l2_norm  # |c| with l2_norm's exact fold (vector.py)
-
-
 def _cents_dense(cents: list[tuple[int, list[float]]]) -> bool:
-    """True when the codebook is a dense rectangular float matrix — the
-    precondition for the numpy kernels. Adversarial refinements (ragged
-    seed vectors, all-NULL-element cells) can yield ragged or
-    None-bearing centroids, which the HOF fold pads/propagates; those
-    iterations fall back to the all-Spark update path."""
+    """True when the codebook is a non-empty dense rectangular float
+    matrix — the precondition for the numpy kernels, and so the rule that
+    picks every IVF assignment lane. Adversarial refinements (ragged seed
+    vectors, all-NULL-element cells) can yield ragged or None-bearing
+    centroids, which the HOF fold pads/propagates; such codebooks, and
+    the empty one, take the all-Spark path."""
     if not cents:
         return False
     d = len(cents[0][1])
@@ -318,7 +310,7 @@ def _cents_dense(cents: list[tuple[int, list[float]]]) -> bool:
 def _codebook_np(cents: list[tuple[int, list[float]]]):
     """(C, cids, cnorms, dim) in the cid-DESCENDING layout the Arrow
     assignment kernel scans (argmax-first-max then matches the HOF
-    struct-max tie rule — see ivf_assign_arrow)."""
+    struct-max tie rule — see _ivf_assign_arrow)."""
     import numpy as np
 
     by_cid_desc = sorted(cents, key=lambda t: -t[0])
@@ -333,7 +325,7 @@ def _codebook_np(cents: list[tuple[int, list[float]]]):
 def _assign_cells_matmul(v, C, cids, cnorms):
     """HOF-exact argmax-cosine cells for a dense (n, dim) float64 matrix.
 
-    The shared batch core of ``ivf_assign_arrow`` AND
+    The shared batch core of ``_ivf_assign_arrow`` AND
     ``_lloyd_partials_arrow`` — the single home of the last-ulp-sensitive
     HOF-equivalence rules, handled in order:
 
@@ -418,7 +410,7 @@ def _lloyd_partials_arrow(
     to sum them into n_cells x dim groups — at 100k x 64 that is a 6.4M-
     row generate + hash-agg whose cost dominates the whole IVF build
     (guide §2.3 "aggregate before you shuffle", §4.2). This kernel fuses
-    assignment (the same matmul core as ivf_assign_arrow) and the
+    assignment (the same matmul core as _ivf_assign_arrow) and the
     integer partial aggregation into the map side: each Arrow batch
     emits at most n_cells x dim tiny partial rows (cell, i, psum, pcnt).
     Integer sums are order-independent, so the final per-(cell, i)
@@ -557,7 +549,7 @@ def _cell_scores(
     constant — a bit-exact re-grouping of cosine_similarity() (same
     IEEE fold orders), so oracle parity is unaffected. |v| is the one
     per-row subexpression shared across all n_centroids scores; pass
-    ``vnorm`` (see ivf_assign) to materialize it once per row instead
+    ``vnorm`` (see _ivf_assign_hof) to materialize it once per row instead
     of n_centroids times.
 
     The codebook is packed into THREE array literals (vectors, cids,
@@ -573,7 +565,7 @@ def _cell_scores(
         vnorm = l2_norm(vec_col)
     cb = lit_double_matrix([[float(x) for x in cvec] for _, cvec in cents])
     cids = lit_longs([int(cid) for cid, _ in cents])
-    cnorms = lit_doubles([_const_l2_norm(cvec) for _, cvec in cents])
+    cnorms = lit_doubles([const_l2_norm(cvec) for _, cvec in cents])
 
     def _score(cv, i):
         prods = F.zip_with(vec_col, cv, lambda x, y: x.cast("double") * y)
@@ -591,6 +583,106 @@ def _cell_scores(
     return F.transform(cb, _score)
 
 
+def probe_cells(
+    vec: Column, cents: list[tuple[int, list[float]]], nprobe: int
+) -> Column:
+    """``array<long>`` of the nprobe cells whose centroids score highest
+    against ``vec`` (cosine DESC, ties → larger cid) — the query side of
+    every IVF search. The codebook is a literal, so probing is a pure
+    projection on the bit-exact HOF fold."""
+    top = F.slice(F.sort_array(_cell_scores(vec, cents), asc=False), 1, nprobe)
+    return F.transform(top, lambda s: s["cid"].cast("long"))
+
+
+def _ivf_assign_hof(
+    emb: DataFrame,
+    cents: list[tuple[int, list[float]]],
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Assignment as a Catalyst HOF fold: the struct-max of
+    ``_cell_scores``. It pads ragged rows and codebooks with NULLs, so it
+    is the lane for any codebook the numpy kernel cannot take, and the
+    reference the kernel is pinned against. |v| is staged as its own
+    projection so the n_centroids scores share one norm per row
+    (CollapseProject keeps a multiply-referenced alias staged rather than
+    inlining it n_centroids times)."""
+    staged = emb.withColumn("_vnorm", l2_norm(F.col(vec_col)))
+    best = F.array_max(
+        _cell_scores(F.col(vec_col), cents, vnorm=F.col("_vnorm"))
+    )
+    return staged.withColumn("cell", best["cid"].cast("long")).drop("_vnorm")
+
+
+def _ivf_assign_arrow(
+    emb: DataFrame,
+    cents: list[tuple[int, list[float]]],
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Assignment as an Arrow-vectorized numpy kernel, for a dense
+    codebook.
+
+    Catalyst higher-order functions evaluate their lambdas per element
+    (they sit outside whole-stage codegen), so the HOF lane pays an
+    interpreted inner loop over n_rows × n_centroids × dim multiply-adds.
+    This kernel moves each Arrow batch's vector column to numpy once and
+    scores the whole batch with ONE matmul (``V @ C.T``) — the same
+    O(n·m·d) work at SIMD/BLAS throughput, ~10× less CPU on the bulk
+    build scan. Same plan shape: map-only, zero shuffle, the codebook a
+    task-local constant.
+
+    Semantics vs the HOF lane: per-row |v| scales all of that row's
+    scores identically, so it cannot affect the argmax and is shared;
+    per-centroid |c| uses ``const_l2_norm`` — the exact fold the HOF lane
+    uses. The ONLY divergence is the matmul's blocked summation order vs
+    the HOF's sequential fold (last-ulp on the dot). An argmax flip
+    therefore needs two centroid scores within ~1 ulp of each other —
+    tests/test_ann_arrow.py pins exact agreement with ``_ivf_assign_hof``
+    (0 assignment flips at 100k vectors, bit-identical refined
+    codebook). Ties and degenerate norms follow the HOF rules via
+    ``_assign_cells_matmul``.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    C, cids, cnorms, dim = _codebook_np(cents)
+    # fresh StructType — StructType.add mutates in place, and df.schema
+    # is cached on the DataFrame, so extending it directly would corrupt
+    # the input's column list
+    out_schema = StructType(
+        list(emb.schema.fields) + [StructField("cell", LongType())]
+    )
+
+    def assign_batches(batches):
+        for rb in batches:
+            arr = rb.column(vec_col)
+            # NULL or length-mismatched embeddings: the HOF lane's
+            # zip_with pads with nulls, every product is NULL, every
+            # score is NULL, and the all-NULL struct-max falls through
+            # to the LARGEST cid. Pre-assign that outcome and score
+            # only the well-formed rows. A NULL element reaches numpy as
+            # NaN and takes the same cid through the NaN branch.
+            lengths = pc.fill_null(pc.list_value_length(arr), 0).to_numpy(
+                zero_copy_only=False
+            )
+            ok = pc.is_valid(arr).to_numpy(zero_copy_only=False) & (
+                lengths == dim
+            )
+            cells = np.full(rb.num_rows, cids[0], dtype=np.int64)
+            if ok.any():
+                # flatten() skips NULL rows, whose lengths are 0 above
+                vals = arr.flatten().to_numpy(zero_copy_only=False)
+                starts = np.cumsum(lengths) - lengths
+                v = vals[starts[ok, None] + np.arange(dim)].astype(np.float64)
+                cells[ok] = _assign_cells_matmul(v, C, cids, cnorms)
+            # the input columns pass through as Arrow data: a pandas
+            # round trip would turn a NULL element into NaN
+            yield rb.append_column("cell", pa.array(cells, pa.int64()))
+
+    return emb.mapInArrow(assign_batches, schema=out_schema)
+
+
 def ivf_assign(
     emb: DataFrame,
     n_centroids: int = 16,
@@ -599,117 +691,36 @@ def ivf_assign(
     cents: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """IVF coarse quantization: each vector gets the cell of its nearest
-    centroid (max cosine; ties → larger cid, the struct-max order).
-    Map-only — at 100 TB this is a scan-wide projection with zero
-    shuffle, the property that makes IVF the scale path. |v| is staged
-    as its own projection so the n_centroids scores share one norm per
-    row (CollapseProject keeps a multiply-referenced alias staged
-    rather than inlining it n_centroids times)."""
-    cents = cents or _centroid_rows(emb, n_centroids, vec_col, id_col)
-    staged = emb.withColumn("_vnorm", l2_norm(F.col(vec_col)))
-    best = F.array_max(
-        _cell_scores(F.col(vec_col), cents, vnorm=F.col("_vnorm"))
-    )
-    return staged.withColumn("cell", best["cid"].cast("long")).drop("_vnorm")
+    centroid (max cosine; ties → larger cid, the struct-max order), in a
+    new ``cell`` column. Map-only — at 100 TB this is a scan-wide
+    projection with zero shuffle, the property that makes IVF the scale
+    path. ``cents`` defaults to the raw smallest-id seeds.
+
+    The codebook picks the kernel, by the rule the Lloyd update applies
+    to each iteration: a dense one (``_cents_dense``) runs the numpy
+    matmul kernel, any other (ragged, None-bearing or empty) the HOF
+    fold. Both return the same cells."""
+    if cents is None:
+        cents = _centroid_rows(emb, n_centroids, vec_col, id_col)
+    if _cents_dense(cents):
+        return _ivf_assign_arrow(emb, cents, vec_col)
+    return _ivf_assign_hof(emb, cents, vec_col)
 
 
-def ivf_assign_arrow(
+def ivf_cells(
     emb: DataFrame,
     n_centroids: int = 16,
+    refine_iters: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    cents: list[tuple[int, list[float]]] | None = None,
-) -> DataFrame:
-    """Arrow-vectorized twin of ``ivf_assign`` — the production-scale
-    assignment kernel.
-
-    Catalyst higher-order functions evaluate their lambdas per element
-    (they sit outside whole-stage codegen), so the HOF path pays an
-    interpreted inner loop over n_rows × n_centroids × dim multiply-adds.
-    This kernel moves each Arrow batch to numpy once and scores the whole
-    batch with ONE matmul (``V @ C.T``) — the same O(n·m·d) work at
-    SIMD/BLAS throughput. Same plan shape: map-only, zero shuffle, the
-    codebook a task-local constant.
-
-    Semantics vs the HOF path: per-row |v| scales all of that row's
-    scores identically, so it cannot affect the argmax and is shared;
-    per-centroid |c| uses ``const_l2_norm`` — the exact fold the HOF path
-    uses. The ONLY divergence is the matmul's blocked summation order vs
-    the HOF's sequential fold (last-ulp on the dot). An argmax flip
-    therefore needs two centroid scores within ~1 ulp of each other —
-    tests pin exact agreement with ``ivf_assign`` on the fixtures. Ties
-    resolve to the larger cid (centroids scanned cid-descending +
-    argmax-first-max), matching the HOF struct-max order; degenerate
-    norms reproduce the HOF try_divide-NULL behavior via the -inf mask
-    below. Since round 8 this kernel is the DEFAULT bulk-build
-    assignment (at 100 TB the assignment scan is the dominant S8 cost
-    and this is ~10× less CPU; VERDICT r7 task 2) — the oracle-paired
-    entries ride it for the build while the query-side probe and exact
-    rerank stay on the HOF fold; ``impl="hof"`` remains the bit-exact
-    opt-out and the agreement is pinned at 100k vectors
-    (tests/test_ann_arrow.py: 0 assignment flips, bit-identical
-    refined codebook).
-    """
-    import numpy as np
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    cents = cents or _centroid_rows(emb, n_centroids, vec_col, id_col)
-    by_cid_desc = sorted(cents, key=lambda t: -t[0])
-    C = np.asarray([cvec for _, cvec in by_cid_desc], dtype=np.float64)
-    cids = np.asarray([cid for cid, _ in by_cid_desc], dtype=np.int64)
-    cnorms = np.asarray(
-        [const_l2_norm(cvec) for _, cvec in by_cid_desc], dtype=np.float64
+) -> tuple[list[tuple[int, list[float]]], DataFrame]:
+    """The IVF build: ``(codebook, emb with its cell column)``. The
+    codebook is the smallest-id seeds after ``refine_iters`` Lloyd's
+    passes (0 keeps the raw seeds)."""
+    cents = lloyd_refine_codebook(
+        emb, n_centroids, vec_col, id_col, iters=refine_iters
     )
-    # fresh StructType — StructType.add mutates in place, and df.schema
-    # is cached on the DataFrame, so extending it directly would corrupt
-    # the input's column list
-    out_schema = StructType(
-        list(emb.schema.fields) + [StructField("cell", LongType())]
-    )
-    cols = [f.name for f in out_schema.fields]
-
-    dim = C.shape[1]
-
-    def assign_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf = pdf.assign(cell=np.empty(0, dtype=np.int64))
-                yield pdf[cols]
-                continue
-            raw = pdf[vec_col].to_numpy()
-            # NULL or length-mismatched embeddings: the HOF path's
-            # zip_with pads with nulls, every product is NULL, every
-            # score is NULL, and the all-NULL struct-max falls through
-            # to the LARGEST cid. Pre-assign that outcome and score
-            # only the well-formed rows (a naive np.stack would raise
-            # on None/ragged input and kill the job the HOF path
-            # tolerates).
-            ok = np.fromiter(
-                (a is not None and len(a) == dim for a in raw),
-                dtype=bool,
-                count=len(raw),
-            )
-            cells = np.full(len(raw), cids[0], dtype=np.int64)
-            if ok.any():
-                v = np.stack(raw[ok]).astype(np.float64)
-                # the last-ulp-sensitive HOF-equivalence rules (denom-
-                # zero → -inf mask, NaN-above-Infinity argmax, largest-
-                # cid ties) live in ONE place: _assign_cells_matmul —
-                # the same core _lloyd_partials_arrow batches through.
-                # Pinned vs ivf_assign in tests/test_ann_arrow.py.
-                cells[ok] = _assign_cells_matmul(v, C, cids, cnorms)
-            pdf = pdf.assign(cell=cells)
-            yield pdf[cols]
-
-    return emb.mapInPandas(assign_batches, schema=out_schema)
-
-
-def _assigner(impl: str):
-    if impl == "arrow":
-        return ivf_assign_arrow
-    if impl == "hof":
-        return ivf_assign
-    raise ValueError(f"unknown IVF assignment impl: {impl!r}")
+    return cents, ivf_assign(emb, n_centroids, vec_col, id_col, cents=cents)
 
 
 def ivf_topk(
@@ -721,7 +732,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     refine_iters: int = 1,
-    impl: str = "arrow",
 ) -> DataFrame:
     """IVF-flat ANN search: probe the nprobe nearest cells, exact cosine
     rerank inside them, global top-k via orderBy().limit(k)
@@ -729,37 +739,16 @@ def ivf_topk(
     Returns (vec_id, label, score, rnk). Recall is nprobe/n_centroids-
     tunable; nprobe = n_centroids degenerates to exact search.
     ``refine_iters`` Lloyd's passes sharpen the seed codebook (default 1);
-    0 reproduces the raw smallest-id seeds. The bulk assignment scans
-    ride the Arrow-vectorized kernel by default (``ivf_assign_arrow``;
-    ``impl="hof"`` opts out); the query-side probe and the exact rerank
-    stay on the bit-exact HOF fold either way."""
+    0 reproduces the raw smallest-id seeds."""
     from pyspark.sql import Window
 
-    cents = (
-        lloyd_refine_codebook(
-            emb, n_centroids, vec_col, id_col, iters=refine_iters, impl=impl
-        )
-        if refine_iters > 0
-        else _centroid_rows(emb, n_centroids, vec_col, id_col)
-    )
-    assigned = _assigner(impl)(emb, n_centroids, vec_col, id_col, cents=cents)
-
-    probed = F.slice(
-        F.sort_array(_cell_scores(F.col("_qvec"), cents), asc=False),
-        1,
-        nprobe,
-    )
     from ..functions.vector import cosine_staged
 
-    q = (
-        emb.where(F.col(id_col) == query_id)
-        .select(
-            F.col(vec_col).alias("_qvec"),
-            l2_norm(F.col(vec_col)).alias("_qn"),
-        )
-        .withColumn(
-            "_cells", F.transform(probed, lambda s: s["cid"].cast("long"))
-        )
+    cents, assigned = ivf_cells(emb, n_centroids, refine_iters, vec_col, id_col)
+    q = emb.where(F.col(id_col) == query_id).select(
+        F.col(vec_col).alias("_qvec"),
+        l2_norm(F.col(vec_col)).alias("_qn"),
+        probe_cells(F.col(vec_col), cents, nprobe).alias("_cells"),
     )
     # |v| staged once per candidate row, |q| once on the 1-row broadcast
     # side (bit-exact re-grouping — cosine_staged): the exact rerank was
@@ -782,6 +771,17 @@ def ivf_topk(
     return top.withColumn("rnk", F.row_number().over(w).cast("long"))
 
 
+def _i8_codes(assigned: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """The int8 codes table of an assigned frame: (id, cell, m, q), m the
+    row's |v|∞ scale and q its int8 codes — no float vector."""
+    from ..functions.vector import abs_max, quantize_i8
+
+    m = abs_max(F.col(vec_col))
+    return assigned.select(
+        id_col, "cell", m.alias("m"), quantize_i8(F.col(vec_col), m).alias("q")
+    )
+
+
 def ivf_quantized_topk(
     emb: DataFrame,
     query_max_id: int = 10,
@@ -791,7 +791,6 @@ def ivf_quantized_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     refine_iters: int = 1,
-    impl: str = "arrow",
 ) -> DataFrame:
     """IVF-pruned int8 retrieval — how a billion-vector index actually
     combines the two: the coarse codebook prunes the scan to nprobe cells,
@@ -801,58 +800,22 @@ def ivf_quantized_topk(
     floats. Returns (query_id, vec_id, rnk, approx_dot) for every query
     vector with id < query_max_id.
 
-    Scale shape: codebook refine is one agg; assignment + quantization are
-    map-only scan projections; the per-query candidate set is
-    output-sensitive (nprobe/n_centroids of the data); the final rank is
-    WindowGroupLimit per query. Partition the index by cell at rest and
-    the probe becomes partition pruning.
+    This is ``ivf_i8_search`` over the codes table built in memory (the
+    one ``save_ivf_i8_index`` writes), so a saved index answers exactly
+    what a from-scratch build does. Scale shape: codebook refine is one
+    agg; assignment + quantization are map-only scan projections; the
+    per-query candidate set is output-sensitive (nprobe/n_centroids of
+    the data); the final rank is WindowGroupLimit per query.
     """
-    from pyspark.sql import Window
-
-    from ..functions.vector import abs_max, int_dot, quantize_i8
-
-    cents = (
-        lloyd_refine_codebook(
-            emb, n_centroids, vec_col, id_col, iters=refine_iters, impl=impl
-        )
-        if refine_iters > 0
-        else _centroid_rows(emb, n_centroids, vec_col, id_col)
-    )
-    assigned = _assigner(impl)(emb, n_centroids, vec_col, id_col, cents=cents)
-    e8 = assigned.select(
+    cents, assigned = ivf_cells(emb, n_centroids, refine_iters, vec_col, id_col)
+    return ivf_i8_search(
+        _i8_codes(assigned, vec_col, id_col),
+        cents,
+        emb.where(F.col(id_col) < query_max_id),
+        k,
+        nprobe,
+        vec_col,
         id_col,
-        "cell",
-        F.col(vec_col).alias("_vec"),
-        abs_max(F.col(vec_col)).alias("m"),
-        quantize_i8(F.col(vec_col), abs_max(F.col(vec_col))).alias("q"),
-    )
-    probed = F.slice(
-        F.sort_array(_cell_scores(F.col("_vec"), cents), asc=False), 1, nprobe
-    )
-    qs = (
-        e8.where(F.col(id_col) < query_max_id)
-        .withColumn("_cells", F.transform(probed, lambda s: s["cid"].cast("long")))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col("m").alias("qm"),
-            F.col("q").alias("qq"),
-            "_cells",
-        )
-    )
-    cand = e8.join(
-        F.broadcast(qs), F.array_contains(F.col("_cells"), F.col("cell"))
-    ).where(F.col(id_col) != F.col("query_id"))
-    scored = cand.withColumn(
-        "approx_dot",
-        int_dot(F.col("q"), F.col("qq")).cast("double")
-        * (F.col("m") / 127.0)
-        * (F.col("qm") / 127.0),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_dot"), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .where(F.col("rnk") <= k)
-        .select("query_id", id_col, "rnk", "approx_dot")
     )
 
 
@@ -871,7 +834,6 @@ def save_ivf_i8_index(
     refine_iters: int = 1,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    impl: str = "arrow",
     shuffle_to_cells: bool = False,
 ) -> str:
     """Build + persist the IVF/int8 index: ``<path>/codebook`` (n_centroids
@@ -881,22 +843,8 @@ def save_ivf_i8_index(
     cell partitions (the equi-join on ``cell`` below is dynamic-
     partition-pruning eligible). Build cost: one Lloyd agg + one map-only
     assignment/quantization scan — the once-per-ingest S8 job."""
-    from ..functions.vector import abs_max, quantize_i8
-
-    cents = (
-        lloyd_refine_codebook(
-            emb, n_centroids, vec_col, id_col, iters=refine_iters, impl=impl
-        )
-        if refine_iters > 0
-        else _centroid_rows(emb, n_centroids, vec_col, id_col)
-    )
-    assigned = _assigner(impl)(emb, n_centroids, vec_col, id_col, cents=cents)
-    codes = assigned.select(
-        id_col,
-        "cell",
-        abs_max(F.col(vec_col)).alias("m"),
-        quantize_i8(F.col(vec_col), abs_max(F.col(vec_col))).alias("q"),
-    )
+    cents, assigned = ivf_cells(emb, n_centroids, refine_iters, vec_col, id_col)
+    codes = _i8_codes(assigned, vec_col, id_col)
     if shuffle_to_cells:
         # at-rest layout control: without this, every input task writes
         # a sliver into every cell directory (tasks × cells small files);
@@ -934,26 +882,23 @@ def ivf_i8_search(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Serve top-k from a LOADED index: quantize the incoming float query
+    """Serve top-k from an IVF/int8 codes table (loaded, or built in
+    memory by ``ivf_quantized_topk``): quantize the incoming float query
     vectors (same deterministic expression as the build), score the
     literal codebook to pick nprobe cells (map-only), then equi-join the
     exploded probe list against the cell-partitioned codes — a broadcast
     hash join whose ``cell`` key prunes index partitions — and rank the
-    integer dots per query (WindowGroupLimit). Bit-identical to
-    ``ivf_quantized_topk`` run from scratch, minus every build job."""
+    integer dots per query (WindowGroupLimit)."""
     from pyspark.sql import Window
 
     from ..functions.vector import abs_max, int_dot, quantize_i8
 
-    probed = F.slice(
-        F.sort_array(_cell_scores(F.col(vec_col), cents), asc=False), 1, nprobe
-    )
     qs = (
         queries.select(
             F.col(id_col).alias("query_id"),
             abs_max(F.col(vec_col)).alias("qm"),
             quantize_i8(F.col(vec_col), abs_max(F.col(vec_col))).alias("qq"),
-            F.transform(probed, lambda s: s["cid"].cast("long")).alias("_cells"),
+            probe_cells(F.col(vec_col), cents, nprobe).alias("_cells"),
         )
         # one row per (query, probed cell): the join below becomes a pure
         # equi join on the partition column instead of array_contains

@@ -131,10 +131,11 @@ class RamServingIndex:
         cell or hash range) and loads one shard per replica — the guard
         is the per-replica budget, not an engine limit.
 
-        The transfer rides ``toArrow`` when available (Spark 4):
-        columnar batches land as numpy views instead of a million
-        pickled Row objects — ~30× faster at the 1M-vector decade —
-        with the row-collect path kept as the fallback."""
+        The transfer rides ``toArrow`` (Spark 4, which the package
+        needs anyway): columnar batches land as numpy views instead of a
+        million pickled Row objects — ~30× faster at the 1M-vector
+        decade — and a NULL vector, NULL element or ragged length raises
+        ``ValueError`` rather than loading as NaN."""
         sel = [id_col, text_col, vec_col] + (
             [label_col] if label_col else []
         )
@@ -158,17 +159,7 @@ class RamServingIndex:
     @staticmethod
     def _materialize(capped: DataFrame):
         has_labels = len(capped.columns) > 3
-        try:
-            tbl = capped.toArrow()
-        except Exception:
-            rows = capped.collect()
-            if not rows:
-                return None, None, None, None, 0
-            ids = np.array([r[0] for r in rows], dtype=np.int64)
-            texts = [r[1] for r in rows]
-            vectors = np.array([r[2] for r in rows], dtype=np.float64)
-            labels = [r[3] for r in rows] if has_labels else None
-            return ids, texts, vectors, labels, len(rows)
+        tbl = capped.toArrow()
         n = tbl.num_rows
         if n == 0:
             return None, None, None, None, 0

@@ -516,13 +516,8 @@ FROM cells c LEFT JOIN dups d ON c.vec_id = d.vec_id"""
 @register("dedup_semantic", _semdedup_sql())
 def dedup_semantic(spark: SparkSession, sf: str) -> DataFrame:
     from ..functions.vector import cosine_staged, l2_norm
-    from ..operators.ann import ivf_assign_arrow, lloyd_refine_codebook
-
-    emb = table(spark, sf, "embeddings")
-    cents = lloyd_refine_codebook(emb, _SEM_CELLS, iters=1)
-    cells = ivf_assign_arrow(emb, _SEM_CELLS, cents=cents).select(
-        "vec_id", "embedding", "cell"
-    )
+    _, assigned = ann.ivf_cells(table(spark, sf, "embeddings"), _SEM_CELLS)
+    cells = assigned.select("vec_id", "embedding", "cell")
     a = cells.select(
         F.col("cell"),
         F.col("vec_id").alias("a_id"),

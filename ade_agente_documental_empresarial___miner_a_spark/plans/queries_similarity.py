@@ -902,32 +902,16 @@ def sim_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from ..functions.vector import cosine_staged, l2_norm
-    from ..operators.ann import (
-        _cell_scores,
-        ivf_assign_arrow,
-        lloyd_refine_codebook,
-    )
 
     emb = table(spark, sf, "embeddings")
-    cents = lloyd_refine_codebook(emb, 16, iters=1)
-    assigned = ivf_assign_arrow(emb, 16, cents=cents)
-    probed = F.slice(
-        F.sort_array(_cell_scores(F.col("qvec"), cents), asc=False),
-        1,
-        _EVAL_NPROBE,
-    )
-    queries = (
-        emb.where(F.col("vec_id") % 64 == 3)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qvec"),
-            # norms staged once per side below the joins (bit-exact
-            # re-grouping — functions/vector.cosine_staged)
-            l2_norm(F.col("embedding")).alias("_qn"),
-        )
-        .withColumn(
-            "_cells", F.transform(probed, lambda s: s["cid"].cast("long"))
-        )
+    cents, assigned = ann.ivf_cells(emb, 16)
+    queries = emb.where(F.col("vec_id") % 64 == 3).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qvec"),
+        # norms staged once per side below the joins (bit-exact
+        # re-grouping — functions/vector.cosine_staged)
+        l2_norm(F.col("embedding")).alias("_qn"),
+        ann.probe_cells(F.col("embedding"), cents, _EVAL_NPROBE).alias("_cells"),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), "vec_id")
     ivf5 = (
@@ -1118,33 +1102,16 @@ def sim_ivf_filtered(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..functions.vector import cosine_staged, l2_norm
-    from ..operators.ann import (
-        _cell_scores,
-        ivf_assign_arrow,
-        lloyd_refine_codebook,
-    )
 
     qid, nprobe, k, target, n_cent = 7, 6, 5, 3, 16
     emb = table(spark, sf, "embeddings")
-    cents = lloyd_refine_codebook(emb, n_cent, iters=1)
-    assigned = ivf_assign_arrow(emb, n_cent, cents=cents)
-    probed = F.slice(
-        F.sort_array(_cell_scores(F.col("_qvec"), cents), asc=False),
-        1,
-        nprobe,
-    )
-    q = (
-        emb.where(F.col("vec_id") == qid)
-        .select(
-            F.col("embedding").alias("_qvec"),
-            # norms staged once per side below the join (bit-exact
-            # re-grouping — functions/vector.cosine_staged)
-            l2_norm(F.col("embedding")).alias("_qn"),
-        )
-        .withColumn(
-            "_cells",
-            F.transform(probed, lambda s: s["cid"].cast("long")),
-        )
+    cents, assigned = ann.ivf_cells(emb, n_cent)
+    q = emb.where(F.col("vec_id") == qid).select(
+        F.col("embedding").alias("_qvec"),
+        # norms staged once per side below the join (bit-exact
+        # re-grouping — functions/vector.cosine_staged)
+        l2_norm(F.col("embedding")).alias("_qn"),
+        ann.probe_cells(F.col("embedding"), cents, nprobe).alias("_cells"),
     )
     cand = (
         assigned.withColumn("_vn", l2_norm(F.col("embedding")))
@@ -1565,32 +1532,16 @@ def sim_ivf_ndcg(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from ..functions.vector import cosine_staged, l2_norm
-    from ..operators.ann import (
-        _cell_scores,
-        ivf_assign_arrow,
-        lloyd_refine_codebook,
-    )
 
     emb = table(spark, sf, "embeddings")
-    cents = lloyd_refine_codebook(emb, 16, iters=1)
-    assigned = ivf_assign_arrow(emb, 16, cents=cents)
-    probed = F.slice(
-        F.sort_array(_cell_scores(F.col("qvec"), cents), asc=False),
-        1,
-        _EVAL_NPROBE,
-    )
-    queries = (
-        emb.where(F.col("vec_id") % 64 == 3)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qvec"),
-            # norms staged once per side below the joins (bit-exact
-            # re-grouping — functions/vector.cosine_staged)
-            l2_norm(F.col("embedding")).alias("_qn"),
-        )
-        .withColumn(
-            "_cells", F.transform(probed, lambda s: s["cid"].cast("long"))
-        )
+    cents, assigned = ann.ivf_cells(emb, 16)
+    queries = emb.where(F.col("vec_id") % 64 == 3).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qvec"),
+        # norms staged once per side below the joins (bit-exact
+        # re-grouping — functions/vector.cosine_staged)
+        l2_norm(F.col("embedding")).alias("_qn"),
+        ann.probe_cells(F.col("embedding"), cents, _EVAL_NPROBE).alias("_cells"),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), "vec_id")
     ivf5 = (

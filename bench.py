@@ -203,9 +203,6 @@ def ensure_scale_corpus(spark, sf_dir: str) -> str:
         os.path.join(out, "ivf_i8_index"),
         n_centroids=64,
         refine_iters=1,
-        # arrow kernel: ~5x faster build, index bit-identical to the
-        # HOF path (agreement pinned in tests/test_ann_arrow.py)
-        impl="arrow",
     )
     return out
 
@@ -317,11 +314,8 @@ def scale10x_queries(qs):
         # nprobe=8 probe, exact cosine rerank inside the probed cells,
         # TakeOrderedAndProject top-k. The codebook build dominates
         # (the once-per-ingest S8 job); sim_ivf_persisted is the
-        # serving-only variant. Since round 8 the DEFAULT build rides
-        # the Arrow-matmul assignment kernel (~4x less build CPU,
-        # results pinned identical to the HOF fold —
-        # tests/test_ann_arrow.py), so this leg times the production
-        # default; sim_ivf_100k_hof keeps the old lane measured.
+        # serving-only variant. The dense codebook sends the bulk
+        # assignment scans through the Arrow-matmul kernel.
         from ade_agente_documental_empresarial___miner_a_spark.operators.ann import (
             ivf_topk,
         )
@@ -330,23 +324,6 @@ def scale10x_queries(qs):
             os.path.join(sf_dir, "embeddings.parquet")
         )
         return ivf_topk(emb, query_id=7, k=10, nprobe=8, n_centroids=64)
-
-    def ivf_100k_hof(spark, sf_dir):
-        # the same full IVF build on the Catalyst-HOF assignment fold
-        # (the bit-exact opt-out lane): HOF lambdas evaluate
-        # per-element outside codegen, so the bulk assignment scans —
-        # the dominant S8 build cost — pay an interpreted inner loop.
-        # Kept measured as the arrow lane's comparison baseline.
-        from ade_agente_documental_empresarial___miner_a_spark.operators.ann import (
-            ivf_topk,
-        )
-
-        emb = spark.read.parquet(
-            os.path.join(sf_dir, "embeddings.parquet")
-        )
-        return ivf_topk(
-            emb, query_id=7, k=10, nprobe=8, n_centroids=64, impl="hof"
-        )
 
     return {
         "t2_section_assign": qs["t2_section_assign"],
@@ -359,7 +336,6 @@ def scale10x_queries(qs):
         "rel_range_frame": qs["rel_range_frame"],
         "graph_pagerank_1m": pagerank_1m,
         "sim_ivf_100k": ivf_100k,
-        "sim_ivf_100k_hof": ivf_100k_hof,
         "sim_ivf_100k_serving": ivf_100k_serving,
         "sim_ivf_100k_serving_b32": ivf_100k_serving_b32,
     }

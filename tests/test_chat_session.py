@@ -472,36 +472,6 @@ def test_only_sinks_imports_its_private_names():
     """The chat store's read-path choice (footer fast path or exact Spark
     read) lives in ``sources/sinks.py``: no other module imports one of
     its underscore names or reads one off the module. Tests are exempt."""
-    import ast
+    from tests.conftest import private_name_leaks
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    leaks = []
-    for dirpath, dirs, files in os.walk(root):
-        dirs[:] = [d for d in dirs if not d.startswith(".") and d != "tests"]
-        for f in files:
-            full = os.path.join(dirpath, f)
-            if not f.endswith(".py") or full.endswith(
-                os.path.join("sources", "sinks.py")
-            ):
-                continue
-            with open(full) as fh:
-                tree = ast.parse(fh.read())
-            for node in ast.walk(tree):
-                if isinstance(node, ast.ImportFrom) and (
-                    node.module or ""
-                ).split(".")[-1] == "sinks":
-                    names = [a.name for a in node.names]
-                elif (
-                    isinstance(node, ast.Attribute)
-                    and isinstance(node.value, ast.Name)
-                    and node.value.id == "sinks"
-                ):
-                    names = [node.attr]
-                else:
-                    continue
-                leaks += [
-                    f"{os.path.relpath(full, root)}:{node.lineno} {n}"
-                    for n in names
-                    if n.startswith("_")
-                ]
-    assert leaks == []
+    assert private_name_leaks("sources.sinks") == []

@@ -161,9 +161,15 @@ def test_ivf_i8_persisted_serves_without_rebuild(spark, sf_dir, tmp_path, monkey
     def _boom(*a, **k):
         raise AssertionError("index build stage ran at query time")
 
-    monkeypatch.setattr(ann, "lloyd_refine_codebook", _boom)
-    monkeypatch.setattr(ann, "_centroid_rows", _boom)
-    monkeypatch.setattr(ann, "ivf_assign", _boom)
+    for stage in (
+        "lloyd_refine_codebook",
+        "_centroid_rows",
+        "ivf_cells",
+        "ivf_assign",
+        "_ivf_assign_arrow",
+        "_ivf_assign_hof",
+    ):
+        monkeypatch.setattr(ann, stage, _boom)
 
     codes, cents = ann.load_ivf_i8_index(spark, path)
     assert len(cents) == 16 and codes.columns == ["vec_id", "m", "q", "cell"]

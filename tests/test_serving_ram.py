@@ -204,6 +204,14 @@ def test_ragged_and_null_embeddings_rejected(spark):
     )
     with pytest.raises(ValueError, match="null"):
         RamServingIndex.from_frame(withnull)
+    # a NULL element, not only a NULL vector: a row-wise float64 copy
+    # would load it as NaN without an error
+    nullelem = spark.createDataFrame(
+        [(1, "a", [1.0, 0.0]), (2, "b", [1.0, None])],
+        "chunk_id long, text string, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="null"):
+        RamServingIndex.from_frame(nullelem)
 
 
 def test_chat_session_ram_tier_byte_identical(spark, sf_dir, tmp_path):

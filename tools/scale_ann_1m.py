@@ -93,7 +93,6 @@ def main() -> None:
         idx,
         n_centroids=N_CENTROIDS,
         refine_iters=1,
-        impl="arrow",
         shuffle_to_cells=True,
     )
     build_s = round(time.time() - t0, 1)

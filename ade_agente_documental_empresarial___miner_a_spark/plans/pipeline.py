@@ -146,14 +146,21 @@ def build_chunks(
 
 def save_index(chunks: DataFrame, path: str, buckets: int = 0) -> str:
     """S8 — persist the chunks table; Parquet IS the vector index
-    (SURVEY §1.3). With ``buckets`` > 0, bucket by section so
-    section-filtered retrieval (F2/J2/K3) prunes files and co-locates
-    section joins WITHOUT a shuffle (test_bucketing pins the
-    Exchange-free plan). Returns the reference to pass to
-    ``load_index``: the table name when bucketed (bucket metadata lives
-    in the catalog — reading the files as bare parquet would silently
-    drop it), else the path. The ANN serving index has its own pair,
-    ``operators/ann.save_ivf_i8_index`` / ``load_ivf_i8_index``."""
+    (SURVEY §1.3). By default each write task writes ONE file with its
+    rows sorted by section (no Exchange, no extra job), so a
+    ``section = x`` filter is a pushed Parquet filter that skips row
+    groups by their min/max statistics. A free-text heading is no
+    hive-partition key (``sources/layout.py``): a directory per section
+    would write tasks × sections small files, and read ``""`` back as
+    NULL and ``"2024"`` as an int. With
+    ``buckets`` > 0, bucket by section so section-filtered retrieval
+    (F2/J2/K3) prunes files and co-locates section joins WITHOUT a
+    shuffle (test_bucketing pins the Exchange-free plan). Returns the
+    reference to pass to ``load_index``: the table name when bucketed
+    (bucket metadata lives in the catalog — reading the files as bare
+    parquet would silently drop it), else the path. The ANN serving
+    index has its own pair, ``operators/ann.save_ivf_i8_index`` /
+    ``load_ivf_i8_index``."""
     if buckets:
         # deterministic table name (NOT Python hash(): PYTHONHASHSEED
         # varies across processes and sessions)
@@ -169,13 +176,14 @@ def save_index(chunks: DataFrame, path: str, buckets: int = 0) -> str:
             .saveAsTable(name)
         )
         return name
-    chunks.write.mode("overwrite").partitionBy("section").parquet(path)
+    chunks.sortWithinPartitions("section").write.mode("overwrite").parquet(path)
     return path
 
 
 def load_index(spark, ref: str) -> DataFrame:
     """Load a saved index: catalog table name (bucketed path) or a
-    filesystem path (partitioned path). Catalog membership decides —
+    filesystem path (the clustered files, or the per-section directories
+    an older ``save_index`` wrote). Catalog membership decides —
     a path-shaped heuristic would misread a relative single-segment
     parquet path (e.g. ``'idx'``) as a table name."""
     # tableExists() itself throws on slash-containing refs, so only probe

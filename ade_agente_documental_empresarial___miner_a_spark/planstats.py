@@ -13,9 +13,10 @@ def plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's estimated size of the plan's output in bytes — read from
     the optimized logical plan's statistics, no job is run. For a file
     scan this is the listed files' total size (only the files a
-    ``pathGlobFilter`` keeps). An RDD-backed frame, such as
-    ``spark.createDataFrame(rows)`` or a ``localCheckpoint`` result, has
-    no estimate and reads Long.MaxValue, so a size gate takes such a
+    ``pathGlobFilter`` keeps). A ``localCheckpoint`` keeps the estimate
+    of the plan it checkpoints. Only a frame built from a Python RDD,
+    such as ``spark.createDataFrame(rows)``, has no estimate and reads
+    Long.MaxValue, checkpointed or not, so a size gate takes such a
     frame as large whatever its rows."""
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 

@@ -94,7 +94,12 @@ def binary_scan(spark: SparkSession, path: str, glob: str | None = None) -> Data
     work, and on pyspark 4.1.2 each Python task pays a fixed ≈200 ms
     before its function is entered: a no-op ``mapInArrow`` over 1/2/7/14
     partitions took 283/323/809/1468 ms against ≈50 ms for a plain noop
-    write (4 vCPUs). The file source charges every file a 4 MB open
+    write (4 vCPUs). Most of it is the worker's ``setup_spark_files``
+    (100-125 ms a task, reused workers too): its
+    ``importlib.invalidate_caches()`` makes every cached zipimporter on
+    Python 3.11 re-read its archive's directory, a dozen over
+    ``pyspark.zip`` (1,328 entries) and two over the spark-core jar
+    (5,359). The file source charges every file a 4 MB open
     cost, so 204 files (0.88 MB) made 7 splits on ``local[2]``; sized by
     content they make 2. The rule only narrows: once files are large,
     the file source's own split count is kept."""

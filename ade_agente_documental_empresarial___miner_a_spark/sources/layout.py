@@ -15,6 +15,10 @@ directories before any I/O. Two rules this module encodes:
   decision.** Daily partitions at 100 TB ≈ hundreds of GB each; readers
   get parallelism from row-group splits within a partition, writers
   from ``maxRecordsPerFile`` rolling.
+
+``plans/pipeline.save_index`` is the clustered case (``write_clustered``
+without the range shuffle): a section is a free-text key, so each write
+task sorts its rows by section and writes one file.
 """
 
 from __future__ import annotations

@@ -225,3 +225,44 @@ def test_lsh_verified_small_input_shingles_once(spark, monkeypatch, tmp_path):
     plans.append(out._jdf.queryExecution().executedPlan().toString())
     assert len(plans) == 2  # the small-input path took the checkpoint
     assert sum(p.count("array_distinct(") for p in plans) == 1
+
+
+def test_save_index_one_file_per_write_task(spark, tmp_path):
+    """The index write is one Parquet file per write task, clustered by
+    section: its plan sorts each task's rows and holds no Exchange, so
+    the write runs in the build's own tasks. Every task holds rows of
+    three sections, which a per-section directory layout would write as
+    three files per task. The input is as wide as the cluster (2
+    partitions on ``local[2]``), because ``build_chunks`` spreads a
+    narrower input first (pinned above)."""
+    import glob
+
+    from ade_agente_documental_empresarial___miner_a_spark.plans.pipeline import (
+        build_chunks,
+        save_index,
+    )
+
+    parts = spark.sparkContext.defaultParallelism
+    docs = spark.createDataFrame(
+        [
+            (i, f"FIRST PART\n\nbody {i}\n\nSECOND PART\n\nmore {i}"
+                f"\n\nTHIRD PART\n\nend {i}")
+            for i in range(4 * parts)
+        ],
+        "doc_id long, text string",
+    )
+    assert docs.rdd.getNumPartitions() == parts
+    path = str(tmp_path / "index")
+    save_index(build_chunks(docs), path)
+    files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    assert 1 <= len(files) <= parts
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    plans = []
+    while it.hasNext():
+        plan = it.next().physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in plan and path in plan:
+            plans.append(plan)
+    assert len(plans) == 1
+    assert "Exchange" not in plans[0]
+    # the per-task sort (global = false) that clusters each file
+    assert re.search(r"Arguments: \[section#\d+ ASC NULLS FIRST\], false", plans[0])

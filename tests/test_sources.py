@@ -320,3 +320,21 @@ def test_visible_text_parser_semantics():
         b"<div>tail</div></body></html>"
     )
     assert _strip_markup(html) == "A & B 5 < 7, ok 'q' tail"
+
+
+def test_plan_size_bytes_checkpoint_keeps_origin_estimate(spark, tmp_path):
+    """A ``localCheckpoint`` keeps the estimate of the plan it
+    checkpoints: a parquet read keeps its files' bytes, and
+    ``spark.range(1000)`` keeps 8 bytes a row. Only a frame built from
+    a Python RDD (``createDataFrame``) has no estimate and reads
+    Long.MaxValue, checkpointed or not."""
+    path = tmp_path / "rows"
+    spark.range(100).selectExpr("id", "cast(id as string) s").write.parquet(str(path))
+    read = spark.read.parquet(str(path))
+    files = sum(f.stat().st_size for f in path.glob("*.parquet"))
+    assert plan_size_bytes(read) == files
+    assert plan_size_bytes(read.localCheckpoint()) == files
+    assert plan_size_bytes(spark.range(1000).localCheckpoint()) == 8000
+    local = spark.createDataFrame([(1, "a")], "id long, s string")
+    assert plan_size_bytes(local) == 2**63 - 1
+    assert plan_size_bytes(local.localCheckpoint()) == 2**63 - 1
